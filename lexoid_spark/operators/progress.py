@@ -1,11 +1,12 @@
 """Checkpointed progress table + resume anti-join (north_rule D3/J5).
 
 The unit of resumability is a *bucket*: ``pmod(xxhash64(url), n_buckets)``.
-A run processes pending buckets in groups, appends output + a progress
-row per completed bucket; on restart, ``pending = all buckets ∖
-completed`` via left anti-join, so a killed job resumes at partition
-granularity with no duplicates (idempotent bucket keys — re-running a
-bucket overwrites its own output directory).
+A run processes pending buckets in groups and, once a group's output is
+written, appends one progress row per bucket of the group in a single
+write; on restart, ``pending = all buckets ∖ completed`` via left
+anti-join, so a killed job resumes at partition granularity with no
+duplicates (idempotent bucket keys — re-running a bucket overwrites its
+own output directory).
 
 This replaces the reference's benchmark result-cache skip-on-hit
 (``tests/benchmark.py:150-181``) with an exactly-once batch pattern.
@@ -65,8 +66,11 @@ def pending_buckets(spark: SparkSession, n_buckets: int,
 
 
 def mark_done(spark: SparkSession, progress_dir: str, run_id: str,
-              bucket: int, n_docs: int) -> None:
-    row = [(run_id, bucket, "done", n_docs)]
-    spark.createDataFrame(row, PROGRESS_SCHEMA).coalesce(1).write.mode(
+              counts: dict[int, int]) -> None:
+    """Append one progress row per bucket of a finished group
+    ``{bucket: n_docs}`` in ONE write: the group's buckets become done
+    together or, if the write dies, not at all."""
+    rows = [(run_id, b, "done", n) for b, n in sorted(counts.items())]
+    spark.createDataFrame(rows, PROGRESS_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(progress_dir)

@@ -64,9 +64,10 @@ def extract(pages: DataFrame, run_id: str = "run0",
     """Build the extraction plan. Returns {"extracted", "errors"}.
 
     ``return_docs=True`` adds the pre-split ``docs`` frame to the dict:
-    callers that sink BOTH branches can persist it so the kernels run
-    once per document, not once per branch (Spark's cache manager
-    matches the shared analyzed plan).
+    callers that sink BOTH branches — the resumable job
+    (``plans/job.py``, once per bucket group) and the streaming sink —
+    persist it so the kernels run once per document, not once per
+    branch (Spark's cache manager matches the shared analyzed plan).
 
     ``pdf_framework``: "pdfplumber" (full layout reconstruction,
     default) or "pdfminer" (cheap text-only arm) — the reference's

@@ -6,12 +6,19 @@ Reference analogue: the benchmark harness's result-cache skip-on-hit
 exactly-once batch pattern:
 
   * the corpus is bucketed by ``pmod(xxhash64(url), n_buckets)``;
-  * buckets are processed in groups; each completed bucket appends one
-    progress row and its output lands under ``extracted/bucket=<b>/``
-    (idempotent: re-running a bucket overwrites only its own directory);
+  * buckets are processed in groups; a group's output lands under
+    ``extracted/bucket=<b>/`` and ``errors/bucket=<b>/`` (idempotent:
+    re-running a bucket overwrites only its own directory);
+  * each group runs the dispatch kernel ONCE per doc: the pre-split
+    ``docs`` frame is persisted and both ``extracted`` and ``errors``
+    are written from it, so the two tables partition the group's input;
+  * per-bucket doc counts come from an ``Observation`` on the
+    ``extracted`` write, not from a separate count job;
+  * each group then replaces its buckets' per-physical-partition
+    lineage rows and, last, appends ONE progress write with a row per
+    bucket of the group — a kill before it replays the whole group;
   * on restart, ``pending = all buckets ∖ done`` (left anti-join), so a
-    killed job resumes with no duplicates and no lost work;
-  * each group also appends per-physical-partition lineage rows.
+    killed job resumes with no duplicates and no lost work.
 
 At 10^12 rows the bucket count scales (e.g. 4096) and the group size
 matches cluster width; here the defaults are sandbox-sized. Run via::
@@ -25,7 +32,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from lexoid_spark.operators.lineage import lineage_rows
@@ -107,49 +114,59 @@ def run_extract_job(
     if codec:
         dyn["compression"] = codec
 
-    for i in range(0, len(todo), group_size):
-        group = todo[i : i + group_size]
-        subset = pages.filter(F.col("bucket").isin(group)).drop("bucket")
-        out = extract(subset, run_id=run_id, repartition=repartition,
-                      pdf_framework=pdf_framework,
-                      html_main_content=html_main_content)
-        ext = with_bucket(out["extracted"], n_buckets).persist()
-        err = with_bucket(out["errors"], n_buckets)
+    try:
+        for i in range(0, len(todo), group_size):
+            group = todo[i : i + group_size]
+            subset = pages.filter(F.col("bucket").isin(group)).drop("bucket")
+            out = extract(subset, run_id=run_id, repartition=repartition,
+                          pdf_framework=pdf_framework,
+                          html_main_content=html_main_content,
+                          return_docs=True)
+            # both branches below read this cache: the kernel runs once
+            # per doc, so extracted/ and errors/ partition the group
+            docs = out["docs"].persist()
+            try:
+                ext = with_bucket(out["extracted"], n_buckets)
+                err = with_bucket(out["errors"], n_buckets)
+                if warc_bad is not None:
+                    err = err.unionByName(
+                        warc_bad.filter(F.col("bucket").isin(group))
+                        .select(
+                            "url", F.lit("warc_ingest").alias("stage"),
+                            "error", F.lit(run_id).alias("run_id"),
+                            "bucket",
+                        )
+                    )
+                # per-bucket doc counts ride the extracted write as
+                # observed metrics instead of a separate count job
+                obs = Observation()
+                ext.observe(obs, *[
+                    F.count_if(F.col("bucket") == b).alias(str(b))
+                    for b in group
+                ]).write.mode("overwrite").options(**dyn).partitionBy(
+                    "bucket"
+                ).parquet(os.path.join(output_dir, "extracted"))
+                counts = {b: obs.get[str(b)] for b in group}
+                err.write.mode("overwrite").options(**dyn).partitionBy(
+                    "bucket"
+                ).parquet(os.path.join(output_dir, "errors"))
+                # lineage after the data writes, partitioned by bucket
+                # with the same dynamic overwrite: a killed-and-resumed
+                # bucket REPLACES its lineage rows (append-only lineage
+                # double-counts replays)
+                lineage_rows(ext, run_id, group_col="bucket").write.mode(
+                    "overwrite"
+                ).options(**dyn).partitionBy("bucket").parquet(lineage_dir)
+                # last: a kill before this line replays the whole group
+                mark_done(spark, progress_dir, run_id, counts)
+            finally:
+                docs.unpersist()
+            done.extend(group)
+            total_docs += sum(counts.values())
+    finally:
         if warc_bad is not None:
-            err = err.unionByName(
-                warc_bad.filter(F.col("bucket").isin(group))
-                .select(
-                    "url", F.lit("warc_ingest").alias("stage"),
-                    "error", F.lit(run_id).alias("run_id"), "bucket",
-                )
-            )
-
-        counts = {
-            r["bucket"]: r["n"]
-            for r in ext.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
-        ext.write.mode("overwrite").options(**dyn).partitionBy(
-            "bucket"
-        ).parquet(os.path.join(output_dir, "extracted"))
-        err.write.mode("overwrite").options(**dyn).partitionBy(
-            "bucket"
-        ).parquet(os.path.join(output_dir, "errors"))
-        # lineage after the data writes, partitioned by bucket with the
-        # same dynamic overwrite: a killed-and-resumed bucket REPLACES
-        # its lineage rows (append-only lineage double-counts replays)
-        lineage_rows(ext, run_id, group_col="bucket").write.mode(
-            "overwrite"
-        ).options(**dyn).partitionBy("bucket").parquet(lineage_dir)
-
-        for b in group:
-            mark_done(spark, progress_dir, run_id, b, counts.get(b, 0))
-            done.append(b)
-            total_docs += counts.get(b, 0)
-        ext.unpersist()
-
-    if warc_bad is not None:
-        pages.unpersist()
-        warc_bad.unpersist()
+            pages.unpersist()
+            warc_bad.unpersist()
     return JobResult(buckets_done=done, buckets_skipped=skipped,
                      n_docs=total_docs)
 
