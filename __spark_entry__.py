@@ -16,7 +16,6 @@ otherwise widens to HUGEINT).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 import pandas as pd
@@ -68,62 +67,58 @@ def _materialize(df: DataFrame) -> DataFrame:
     return df.persist()
 
 
-def _ck(df: DataFrame) -> DataFrame:
-    """Pin a COMPUTED result frame before the trailing global sort.
+def _srt(*cols):
+    """Trailing total sort of a query's final (small) result frame:
+    ``repartition(1)`` (round-robin — NO sampling job) then
+    ``sortWithinPartitions``.
 
-    ``orderBy`` compiles to a range-partitioned exchange whose
-    boundaries come from a SAMPLING job over the child plan — so an
-    un-pinned child is executed TWICE per action (guide §2.4: check
-    the plan for exchanges you did not expect; §1.1: find where the
-    time actually goes). For the codec/crypt/extract queries the
-    child is the expensive part — a pure-Python kernel pass over
-    every fixture — and the sampling pass doubled it (measured:
-    flac_meta 2.99 s as-is vs 1.20 s without the sort vs 1.71 s
-    pinned; the sort itself orders ≤ a few thousand tiny rows).
-
-    ``persist()`` pins the result so the sampler's first
-    materialization is served back to the real shuffle from the
-    MEMORY_AND_DISK cache — one kernel execution, identical rows,
-    identical final order. Measured against the alternatives on the
-    codec/crypt family (min-of-3, fresh plans per invocation):
-    persist < localCheckpoint(eager=True) < localCheckpoint(lazy) <
-    nothing (e.g. pdf_aes256 1.43 / 1.62 / 1.82 / 2.31 s) — the lazy
-    checkpoint pays an extra post-action ``doCheckpoint`` sweep that
-    re-executes partitions the sampler's mapped RDD did not leave in
-    the block store. Entries are freed by ``clearCache()`` between
-    bench passes (and matched by analyzed plan, so one invocation
-    never leaks work to the next — results are recomputed from the
-    parquet inputs on every invocation)."""
-    return df.persist()
-
-
-def _srt(*cols, pin: bool = True):
-    """Trailing total sort of a query's final (small) result frame.
-
-    Two plan shapes produce the identical sorted rows:
-
-    * ``rr1`` (default): ``repartition(1)`` (round-robin — NO sampling
-      job) then ``sortWithinPartitions``. The child runs exactly once,
-      in the parallel shuffle-map stage; the single reducer totally
-      sorts the small result rows. One job, no pin.
-    * ``range``: the pre-refinement shape — ``orderBy`` (range
-      exchange whose boundary sampler executes the child a second
-      time), preceded by a ``persist()`` pin when ``pin=True`` (the
-      shape the Python-kernel tails shipped with; relational tails
-      used a plain un-pinned ``orderBy``, ``pin=False``). Kept
-      selectable via ``LEXOID_TAIL_SORT=range`` for A/B measurement.
-
-    Keys sort the same ASC/DESC direction in both shapes (plain
-    ascending columns or explicit F.desc/F.asc Columns), so both
-    yield the same total order as ``orderBy(*cols)``.
+    A plain ``orderBy`` compiles to a range-partitioned exchange whose
+    boundaries come from a SAMPLING job over the child plan, so the
+    child (for the codec/crypt/extract queries, a pure-Python kernel
+    pass over every fixture) would execute twice per action. Here the
+    child runs exactly once, in the parallel shuffle-map stage, and the
+    single reducer totally sorts the small result rows. Keys keep their
+    ASC/DESC direction (plain ascending columns or explicit
+    F.desc/F.asc Columns), so the total order is ``orderBy(*cols)``'s.
     """
 
     def apply(df: DataFrame) -> DataFrame:
-        if os.environ.get("LEXOID_TAIL_SORT", "rr1") == "range":
-            return (_ck(df) if pin else df).orderBy(*cols)
         return df.repartition(1).sortWithinPartitions(*cols)
 
     return apply
+
+
+def _fixture_extract(spark, sf, host: str,
+                     make_doc: Callable[[int], bytes], run_id: str,
+                     where=None, **extract_kw) -> dict:
+    """Generated-fixture documents through the FULL extract() plan.
+
+    ``make_doc(doc_id) -> bytes`` builds one document; it runs inside a
+    binary pandas UDF named after it (so plans show the generator)
+    over the fanned-out ``documents`` ids, optionally filtered by
+    ``where``. Each page gets url ``http://<host>/<doc_id>``, a null
+    ``warc_ts``, empty text and lang 'en'; the pages frame is pinned by
+    ``_materialize`` and extracted in place (``repartition=False``).
+    Returns extract()'s dict of frames."""
+    from lexoid_spark.plans.extract import extract
+
+    def gen(doc_ids: pd.Series) -> pd.Series:
+        return pd.Series([make_doc(int(d)) for d in doc_ids])
+
+    gen.__name__ = gen.__qualname__ = make_doc.__name__
+    docs = _tp(spark, sf, "documents")
+    if where is not None:
+        docs = docs.filter(where)
+    pages = docs.select(
+        F.concat(F.lit(f"http://{host}/"),
+                 F.col("doc_id").cast("string")).alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.pandas_udf(gen, "binary")("doc_id").alias("html"),
+        F.lit("").alias("text"),
+        F.lit("en").alias("lang"),
+    )
+    return extract(_materialize(pages), run_id=run_id, repartition=False,
+                   **extract_kw)
 
 
 # ---------------------------------------------------------------------------
@@ -173,7 +168,7 @@ def _q1(spark, sf):
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.count("*").alias("count_order"),
         )
-        .transform(_srt("l_returnflag", "l_linestatus", pin=False))
+        .transform(_srt("l_returnflag", "l_linestatus"))
     )
 
 
@@ -255,7 +250,7 @@ def _q5(spark, sf):
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
-        .transform(_srt(F.desc("revenue"), F.asc("n_name"), pin=False))
+        .transform(_srt(F.desc("revenue"), F.asc("n_name")))
     )
 
 
@@ -293,7 +288,7 @@ def _q4(spark, sf):
         )
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
-        .transform(_srt("o_orderpriority", pin=False))
+        .transform(_srt("o_orderpriority"))
     )
 
 
@@ -393,7 +388,7 @@ def _q12(spark, sf):
             F.sum(hi.cast("long")).alias("high_line_count"),
             F.sum((~hi).cast("long")).alias("low_line_count"),
         )
-        .transform(_srt("l_returnflag", pin=False))
+        .transform(_srt("l_returnflag"))
     )
 
 
@@ -543,7 +538,7 @@ def _q7_volume_shipping(spark, sf):
         .agg(F.round(F.sum(
             F.col("l_extendedprice") * (1 - F.col("l_discount"))
         ), 2).alias("revenue"))
-        .transform(_srt("supp_nation", "cust_nation", "l_year", pin=False))
+        .transform(_srt("supp_nation", "cust_nation", "l_year"))
     )
 
 
@@ -596,7 +591,7 @@ def _q8_market_share(spark, sf):
             F.sum(F.when(F.col("s_nationkey") < 5, vol).otherwise(0.0))
             / F.sum(vol), 6,
         ).alias("mkt_share"))
-        .transform(_srt("o_year", pin=False))
+        .transform(_srt("o_year"))
     )
 
 
@@ -633,7 +628,7 @@ def _q16_supplier_cnt(spark, sf):
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .transform(_srt(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size", pin=False))
+        .transform(_srt(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size"))
     )
 
 
@@ -663,7 +658,7 @@ def _q20_small_part_suppliers(spark, sf):
     return (
         supp.join(heavy, supp.s_suppkey == heavy.l_suppkey, "left_semi")
         .select("s_name", "s_acctbal")
-        .transform(_srt("s_name", pin=False))
+        .transform(_srt("s_name"))
     )
 
 
@@ -695,7 +690,7 @@ def _q13_customer_distribution(spark, sf):
     return (
         per_cust.groupBy("c_count")
         .agg(F.count("*").alias("custdist"))
-        .transform(_srt(F.desc("custdist"), F.desc("c_count"), pin=False))
+        .transform(_srt(F.desc("custdist"), F.desc("c_count")))
     )
 
 
@@ -818,7 +813,7 @@ def _q22_global_sales_opportunity(spark, sf):
         .groupBy(F.col("c_nationkey").alias("cntrycode"))
         .agg(F.count("*").alias("numcust"),
              F.round(F.sum("c_acctbal"), 2).alias("totacctbal"))
-        .transform(_srt("cntrycode", pin=False))
+        .transform(_srt("cntrycode"))
     )
 
 
@@ -875,7 +870,7 @@ def _supplier_rank(spark, sf):
         .join(F.broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
         .select("n_name", "s_suppkey", "s_name",
                 F.round("s_acctbal", 2).alias("acctbal"), "rnk")
-        .transform(_srt("n_name", "rnk", pin=False))
+        .transform(_srt("n_name", "rnk"))
     )
 
 
@@ -902,7 +897,7 @@ def _events_daily(spark, sf):
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
-        .transform(_srt("day", "event_type", pin=False))
+        .transform(_srt("day", "event_type"))
     )
 
 
@@ -925,7 +920,7 @@ def _events_sessions(spark, sf):
             (F.sum("new_sess") + 1).alias("n_sessions"),
             F.count("*").alias("n_events"),
         )
-        .transform(_srt("user_id", pin=False))
+        .transform(_srt("user_id"))
     )
 
 
@@ -953,7 +948,7 @@ def _events_json(spark, sf):
             F.round(F.avg("k"), 4).alias("avg_k"),
             F.sum("k").alias("sum_k"),
         )
-        .transform(_srt("event_type", pin=False))
+        .transform(_srt("event_type"))
     )
 
 
@@ -981,7 +976,7 @@ def _sessions_closed(spark, sf):
     ev = _t(spark, sf, "events")
     return sessionize_batch(ev, gap_sec=1800).transform(_srt(
         "user_id", "start_sec"
-    , pin=False))
+    ))
 
 
 _SESSIONS_CLOSED_SQL = """
@@ -1019,7 +1014,7 @@ def _docs_by_lang(spark, sf):
             F.round(F.avg("n_chars"), 4).alias("avg_chars"),
             F.sum("n_chars").alias("sum_chars"),
         )
-        .transform(_srt("lang", pin=False))
+        .transform(_srt("lang"))
     )
 
 
@@ -1042,7 +1037,7 @@ def _doc_token_stats(spark, sf):
         n.alias("n_tokens"),
         F.when(n > 0, F.round(tok_chars / n, 4)).otherwise(0.0).alias("avg_token_len"),
         alnum_ratio(F.col("text")).alias("alnum_ratio"),
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _DOC_TOKEN_STATS_SQL = r"""
@@ -1064,7 +1059,7 @@ def _doc_bpe_tokens(spark, sf):
         "doc_id",
         token_count(F.col("text")).alias("ws_tokens"),
         bpe_token_count(F.col("text")).alias("bpe_tokens"),
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _DOC_BPE_SQL = r"""
@@ -1082,7 +1077,7 @@ def _doc_quality(spark, sf):
     docs = _tp(spark, sf, "documents")
     return docs.select(
         "doc_id", quality_score(F.col("text")).alias("quality")
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _STOP_SQL = "'the','a','of','and','to','in','is','it','for','on'"
@@ -1108,7 +1103,7 @@ def _doc_langid(spark, sf):
     return (
         langid_table(docs, "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -1141,7 +1136,7 @@ def _doc_fingerprint(spark, sf):
     docs = _t(spark, sf, "documents")
     return docs.select("doc_id", fingerprint(F.col("text")).alias("fp")).transform(_srt(
         "doc_id"
-    , pin=False))
+    ))
 
 
 _DOC_FINGERPRINT_SQL = r"""
@@ -1161,7 +1156,7 @@ def _exact_dedup_keepers(spark, sf):
     return (
         exact_dedup(docs, "doc_id", "text")
         .select("doc_id", "n_dups")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -1189,7 +1184,7 @@ def _events_windowed(spark, sf):
     from lexoid_spark.streaming.windowed import windowed_counts
 
     ev = _t(spark, sf, "events")
-    return windowed_counts(ev).transform(_srt("window_start", "event_type", pin=False))
+    return windowed_counts(ev).transform(_srt("window_start", "event_type"))
 
 
 _EVENTS_WINDOWED_SQL = """
@@ -1207,7 +1202,7 @@ def _exact_dup_groups(spark, sf):
         docs.groupBy("lang", "n_chars")
         .agg(F.count("*").alias("n_dups"), F.min("doc_id").alias("keeper"))
         .filter(F.col("n_dups") > 1)
-        .transform(_srt("lang", "n_chars", pin=False))
+        .transform(_srt("lang", "n_chars"))
     )
 
 
@@ -1245,7 +1240,7 @@ def _ngram_jaccard_adjacent(spark, sf):
             .otherwise(0.0)
             .alias("jaccard"),
         )
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -1267,7 +1262,7 @@ def _minhash_sample(spark, sf):
     return (
         minhash_signatures(docs, "doc_id", "text", num_hashes=4)
         .withColumnRenamed("id", "doc_id")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -1341,7 +1336,7 @@ def _quality_classifier(spark, sf):
 
     docs = _tp(spark, sf, "documents")
     return linear_quality_classifier(
-        docs, "doc_id", "text").transform(_srt("doc_id", pin=False))
+        docs, "doc_id", "text").transform(_srt("doc_id"))
 
 
 _QUALITY_CLASSIFIER_SQL = r"""
@@ -1385,7 +1380,7 @@ def _gopher_filters(spark, sf):
         f.getField("passes").alias("passes"),
         f.getField("stopword_ok").alias("stopword_ok"),
         f.getField("passes_strict").alias("passes_strict"),
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _GOPHER_SQL = r"""
@@ -1453,7 +1448,7 @@ def _doc_winnow(spark, sf):
     return (
         winnow_fingerprints(docs, "doc_id", "text", k=3, window=4)
         .withColumnRenamed("id", "doc_id")
-        .transform(_srt("doc_id", "fp", pin=False))
+        .transform(_srt("doc_id", "fp"))
     )
 
 
@@ -1497,7 +1492,7 @@ def _dup_clusters(spark, sf):
     pairs = lsh_candidate_pairs(
         docs, "doc_id", "text", num_hashes=8, bands=4, shingle_n=3
     )
-    return connected_components(pairs).transform(_srt("id", pin=False))
+    return connected_components(pairs).transform(_srt("id"))
 
 
 _DUP_CLUSTERS_SQL = f"""
@@ -1537,7 +1532,7 @@ def _dedup_keep_list(spark, sf):
         .filter(F.col("id") != F.col("cluster_id"))
         .select(F.col("id").alias("doc_id"))
     )
-    return exact_keep.join(dropped, "doc_id", "left_anti").transform(_srt("doc_id", pin=False))
+    return exact_keep.join(dropped, "doc_id", "left_anti").transform(_srt("doc_id"))
 
 
 _DEDUP_KEEP_SQL = f"""
@@ -1608,7 +1603,7 @@ def _ann_cosine_topk(spark, sf):
     emb = _tp(spark, sf, "embeddings")
     return cosine_topk(emb, query_ids=list(range(10)), k=5).transform(_srt(
         "qid", "rank"
-    , pin=False))
+    ))
 
 
 _ANN_COSINE_SQL = """
@@ -1639,7 +1634,7 @@ def _ann_sq8_topk(spark, sf):
     emb = _tp(spark, sf, "embeddings")
     return sq8_topk(
         emb, query_ids=list(range(10)), k=5, n_centroids=8, nprobe=2,
-    ).transform(_srt("qid", "rank", pin=False))
+    ).transform(_srt("qid", "rank"))
 
 
 _ANN_SQ8_SQL = """
@@ -1722,7 +1717,7 @@ def _ann_ivfpq_topk(spark, sf):
     return ivfpq_topk(
         emb, query_ids=list(range(10)), k=5, n_centroids=8, nprobe=2,
         m=8, k_pq=16,
-    ).transform(_srt("qid", "rank", pin=False))
+    ).transform(_srt("qid", "rank"))
 
 
 _ANN_IVFPQ_SQL = """
@@ -1812,7 +1807,7 @@ def _ann_ivf_topk(spark, sf):
     return ivf_topk(
         emb, query_ids=list(range(10)), k=5, n_centroids=8, nprobe=2,
         n_iter=1, train_modulus=4,
-    ).transform(_srt("qid", "rank", pin=False))
+    ).transform(_srt("qid", "rank"))
 
 
 # n_iter=1, train_modulus=4: one minibatch Lloyd refinement of the
@@ -1891,7 +1886,7 @@ def _emb_near_dup(spark, sf):
     emb = _t(spark, sf, "embeddings")
     return embedding_near_dup_pairs(emb, tau=0.35, n_centroids=8).transform(_srt(
         "id_a", "id_b"
-    , pin=False))
+    ))
 
 
 def _emb_near_dup_hof(spark, sf):
@@ -1903,7 +1898,7 @@ def _emb_near_dup_hof(spark, sf):
     emb = _tp(spark, sf, "embeddings")
     return embedding_near_dup_pairs(
         emb, tau=0.35, n_centroids=8, impl="hof"
-    ).transform(_srt("id_a", "id_b", pin=False))
+    ).transform(_srt("id_a", "id_b"))
 
 
 _EMB_NEAR_DUP_SQL = """
@@ -1950,7 +1945,7 @@ def _image_meta(spark, sf):
         image_meta(imgs, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "width", "height",
                 "channels", "error")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -1973,7 +1968,7 @@ def _image_resize(spark, sf):
                           bin_col="payload")
         .select(F.col("id").alias("doc_id"), "new_width", "new_height",
                 "resized")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -2067,7 +2062,7 @@ def _webp_meta(spark, sf):
         image_meta(imgs, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "width", "height",
                 "channels", "error")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -2100,7 +2095,7 @@ def _gif_meta(spark, sf):
         image_meta(gifs, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "width", "height",
                 "channels", "error")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -2135,7 +2130,7 @@ def _jpeg_meta(spark, sf):
         image_meta(jpgs, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "width", "height",
                 "channels", "error")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -2402,7 +2397,7 @@ def _audio_meta(spark, sf):
         audio_meta(auds, id_col="doc_id")
         .select(F.col("id").alias("doc_id"), "sample_rate", "n_samples",
                 "duration_sec")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -2449,7 +2444,7 @@ def _mp3_meta(spark, sf):
         audio_meta(auds, id_col="doc_id")
         .select(F.col("id").alias("doc_id"), "sample_rate", "n_samples",
                 "duration_sec")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -2483,7 +2478,7 @@ def _audio_chunks(spark, sf):
         audio_chunks(auds, chunk_sec=3.0, id_col="doc_id")
         .select(F.col("id").alias("doc_id"), "chunk_idx", "start_sample",
                 "n_samples")
-        .transform(_srt("doc_id", "chunk_idx", pin=False))
+        .transform(_srt("doc_id", "chunk_idx"))
     )
 
 
@@ -2766,7 +2761,7 @@ def _wav_meta(spark, sf):
         audio_meta(wavs, id_col="doc_id")
         .select(F.col("id").alias("doc_id"), "sample_rate", "n_samples",
                 "duration_sec")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -2799,7 +2794,7 @@ def _mp4_frames(spark, sf):
     return (
         frame_sample(vids, every_n=7, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "frame_idx", "width", "height")
-        .transform(_srt("doc_id", "frame_idx", pin=False))
+        .transform(_srt("doc_id", "frame_idx"))
     )
 
 
@@ -3016,7 +3011,7 @@ def _extract_segments_n(spark, sf):
     raw = html_to_md_udf(html).getField("raw")
     return docs.select(
         "doc_id", F.size(segment_md_udf(raw)).alias("n_segments")
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _EXTRACT_SEGMENTS_SQL = """
@@ -3035,7 +3030,7 @@ def _email_embed(spark, sf):
     )
     return docs.select(
         "doc_id", embed_email_links(raw).alias("wrapped")
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _EMAIL_EMBED_SQL = """
@@ -3057,7 +3052,7 @@ def _md_url_extract(spark, sf):
     )
     return (
         docs.select("doc_id", F.explode(extract_md_urls(md)).alias("url"))
-        .transform(_srt("doc_id", "url", pin=False))
+        .transform(_srt("doc_id", "url"))
     )
 
 
@@ -3079,7 +3074,7 @@ def _strip_md_roundtrip(spark, sf):
     )
     return docs.select(
         "doc_id", strip_markdown(md).alias("stripped")
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _STRIP_MD_SQL = """
@@ -3097,7 +3092,7 @@ def _clean_text_roundtrip(spark, sf):
     )
     return docs.select("doc_id", clean_text(raw).alias("cleaned")).transform(_srt(
         "doc_id"
-    , pin=False))
+    ))
 
 
 _CLEAN_TEXT_SQL = r"""
@@ -3124,7 +3119,7 @@ def _crawl_reachable(spark, sf):
     )
     return crawl_edges(pages, seed_urls=["http://c.test/0", "http://c.test/1"], depth=2).transform(_srt(
         "depth", "parent_url", "child_url"
-    , pin=False))
+    ))
 
 
 _CRAWL_SQL = """
@@ -3163,7 +3158,7 @@ def _parse_quality_metrics(spark, sf):
         F.round(m["precision"], 4).alias("precision"),
         F.round(m["recall"], 4).alias("recall"),
         F.round(m["f1"], 4).alias("f1"),
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _PARSE_QUALITY_SQL = r"""
@@ -3215,7 +3210,7 @@ def _low_yield_split(spark, sf):
     low = parts["needs_review"].select(
         "doc_id", F.lit("needs_review").alias("bucket")
     )
-    return kept.unionByName(low).transform(_srt("doc_id", pin=False))
+    return kept.unionByName(low).transform(_srt("doc_id"))
 
 
 # html kernel renders <p>x</p> as "\n\nx\n\n"; trim(raw) = the text
@@ -3245,7 +3240,7 @@ def _quality_by_lang(spark, sf):
             F.round(F.avg("recall"), 4).alias("avg_recall"),
             F.round(F.stddev("recall"), 4).alias("std_recall"),
         )
-        .transform(_srt("lang", pin=False))
+        .transform(_srt("lang"))
     )
 
 
@@ -3293,7 +3288,7 @@ def _bbox_range_join(spark, sf):
         joined.groupBy("rect_id")
         .agg(F.count("*").alias("n_words"),
              F.round(F.avg("x0"), 4).alias("avg_x0"))
-        .transform(_srt("rect_id", pin=False))
+        .transform(_srt("rect_id"))
     )
 
 
@@ -3356,7 +3351,7 @@ def _pdf_word_boxes(spark, sf):
             F.round("x1", 4).alias("x1"),
             F.round("bottom", 4).alias("bottom"),
         )
-        .transform(_srt("doc_id", "x0", pin=False))
+        .transform(_srt("doc_id", "x0"))
     )
 
 
@@ -3412,7 +3407,7 @@ def _pipeline_extract(spark, sf):
     return out.select(
         "url", "raw", "parser_used", "n_chars", "n_tokens",
         F.size("segments").alias("n_segments"),
-    ).transform(_srt("url", pin=False))
+    ).transform(_srt("url"))
 
 
 # n_tokens mirrors functions/textstats.py::token_count exactly:
@@ -3441,35 +3436,20 @@ def _pdf_flate_extract(spark, sf):
     content-stream interpreter, layout machine — so DuckDB predicts the
     final markdown string without touching a byte of PDF."""
     from lexoid_spark.corpus.pdf_gen import build_pdf
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def flate_pdf(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 4 + 2
-            # step 48 with 4-char words (width 24) → kern −2000 exactly
-            words = [
-                {"text": f"f{j}x{d % 7}", "x": 72.0 + 48.0 * j,
-                 "y": 700.0, "size": 12.0, "font": "F1"}
-                for j in range(k)
-            ]
-            out.append(build_pdf([{"words": words, "style": "compact"}],
-                                 compress=True))
-        return pd.Series(out)
+    def flate_pdf(d: int) -> bytes:
+        k = d % 4 + 2
+        # step 48 with 4-char words (width 24) → kern −2000 exactly
+        words = [
+            {"text": f"f{j}x{d % 7}", "x": 72.0 + 48.0 * j,
+             "y": 700.0, "size": 12.0, "font": "F1"}
+            for j in range(k)
+        ]
+        return build_pdf([{"words": words, "style": "compact"}],
+                         compress=True)
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://pdf.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        flate_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="flate_check",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "pdf.test", flate_pdf,
+                           "flate_check")["extracted"]
     return out.select("url", "raw", "n_chars").transform(_srt("url"))
 
 
@@ -3499,34 +3479,18 @@ def _pdf_rc4_extract(spark, sf):
     final markdown. Reference opens these via pdfplumber's standard
     handler; kernel scope in kernels/pdf_crypt.py."""
     from lexoid_spark.corpus.pdf_gen import build_pdf
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def rc4_pdf(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 3 + 2
-            words = [
-                {"text": f"e{j}y{d % 5}", "x": 72.0 + 48.0 * j,
-                 "y": 700.0, "size": 12.0, "font": "F1"}
-                for j in range(k)
-            ]
-            out.append(build_pdf([{"words": words}], compress=True,
-                                 encrypt=True))
-        return pd.Series(out)
+    def rc4_pdf(d: int) -> bytes:
+        k = d % 3 + 2
+        words = [
+            {"text": f"e{j}y{d % 5}", "x": 72.0 + 48.0 * j,
+             "y": 700.0, "size": 12.0, "font": "F1"}
+            for j in range(k)
+        ]
+        return build_pdf([{"words": words}], compress=True, encrypt=True)
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://rc4.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        rc4_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="rc4_check",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "rc4.test", rc4_pdf,
+                           "rc4_check")["extracted"]
     return out.select("url", "raw", "n_chars").transform(_srt("url"))
 
 
@@ -3558,34 +3522,18 @@ def _pdf_aes_extract(spark, sf):
     from-scratch FIPS-197 / ISO 32000-1 re-derivation in
     kernels/pdf_crypt.py."""
     from lexoid_spark.corpus.pdf_gen import build_pdf
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def aes_pdf(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 3 + 2
-            words = [
-                {"text": f"a{j}q{d % 6}", "x": 72.0 + 48.0 * j,
-                 "y": 700.0, "size": 12.0, "font": "F1"}
-                for j in range(k)
-            ]
-            out.append(build_pdf([{"words": words}], compress=True,
-                                 encrypt="aes"))
-        return pd.Series(out)
+    def aes_pdf(d: int) -> bytes:
+        k = d % 3 + 2
+        words = [
+            {"text": f"a{j}q{d % 6}", "x": 72.0 + 48.0 * j,
+             "y": 700.0, "size": 12.0, "font": "F1"}
+            for j in range(k)
+        ]
+        return build_pdf([{"words": words}], compress=True, encrypt="aes")
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://aes.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        aes_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="aes_check",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "aes.test", aes_pdf,
+                           "aes_check")["extracted"]
     return out.select("url", "raw", "n_chars").transform(_srt("url"))
 
 
@@ -3622,7 +3570,6 @@ def _pdf_aes256_extract(spark, sf):
         make_entries_v5,
         preseed_entries_v5,
     )
-    from lexoid_spark.plans.extract import extract
 
     # derive the shared /Encrypt entries ONCE on the driver (session
     # lru) and ship them in the closure: a grown worker pool keeps
@@ -3632,33 +3579,19 @@ def _pdf_aes256_extract(spark, sf):
     # engine path this query benchmarks.
     _v5 = make_entries_v5(-44, b"lexoid-v5-fixture")
 
-    @F.pandas_udf("binary")
-    def aes256_pdf(doc_ids: pd.Series) -> pd.Series:
+    def aes256_pdf(d: int) -> bytes:
         preseed_entries_v5(-44, b"lexoid-v5-fixture", _v5)
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 3 + 2
-            words = [
-                {"text": f"v{j}r{d % 6}", "x": 72.0 + 48.0 * j,
-                 "y": 700.0, "size": 12.0, "font": "F1"}
-                for j in range(k)
-            ]
-            out.append(build_pdf([{"words": words}], compress=True,
-                                 encrypt="aes256"))
-        return pd.Series(out)
+        k = d % 3 + 2
+        words = [
+            {"text": f"v{j}r{d % 6}", "x": 72.0 + 48.0 * j,
+             "y": 700.0, "size": 12.0, "font": "F1"}
+            for j in range(k)
+        ]
+        return build_pdf([{"words": words}], compress=True,
+                         encrypt="aes256")
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://aes256.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        aes256_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="aes256_check",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "aes256.test", aes256_pdf,
+                           "aes256_check")["extracted"]
     return out.select("url", "raw", "n_chars").transform(_srt("url"))
 
 
@@ -3708,7 +3641,7 @@ def _bmp_tiff_meta(spark, sf):
         image_meta(imgs, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "width", "height",
                 "channels", "error")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -3760,7 +3693,7 @@ def _canonical_urls(spark, sf):
         .groupBy("group_key")
         .agg(F.count("*").alias("n_pages"),
              F.min("url").alias("first_url"))
-        .transform(_srt("group_key", pin=False))
+        .transform(_srt("group_key"))
     )
 
 
@@ -3785,35 +3718,20 @@ def _pdf_filters_extract(spark, sf):
     doc_id%4, through the FULL extract plan. Oracle predicts the
     markdown closed-form; the filter choice must not change it."""
     from lexoid_spark.corpus.pdf_gen import build_pdf
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def filt_pdf(doc_ids: pd.Series) -> pd.Series:
-        kinds = ["lzw", "ahx", "rl", "a85flate"]
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 3 + 2
-            words = [
-                {"text": f"g{j}z{d % 6}", "x": 72.0 + 48.0 * j,
-                 "y": 700.0, "size": 12.0, "font": "F1"}
-                for j in range(k)
-            ]
-            out.append(build_pdf([{"words": words}],
-                                 stream_filter=kinds[d % 4]))
-        return pd.Series(out)
+    kinds = ["lzw", "ahx", "rl", "a85flate"]
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://filt.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        filt_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="filters_check",
-                  repartition=False)["extracted"]
+    def filt_pdf(d: int) -> bytes:
+        k = d % 3 + 2
+        words = [
+            {"text": f"g{j}z{d % 6}", "x": 72.0 + 48.0 * j,
+             "y": 700.0, "size": 12.0, "font": "F1"}
+            for j in range(k)
+        ]
+        return build_pdf([{"words": words}], stream_filter=kinds[d % 4])
+
+    out = _fixture_extract(spark, sf, "filt.test", filt_pdf,
+                           "filters_check")["extracted"]
     return out.select("url", "raw", "n_chars").transform(_srt("url"))
 
 
@@ -3845,42 +3763,27 @@ def _cid_shape_extract(spark, sf, host: str, marker: str,
     route the kernel must take (/ToUnicode CMap vs embedded FontFile2
     cmap vs a predefined UCS2 CMap)."""
     from lexoid_spark.corpus.pdf_gen import build_pdf
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def cid_pdf(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        A = _CID_ALPHABET
-        for d in doc_ids:
-            d = int(d)
-            k = d % 3 + 2
-            words = [
-                {"text": A[(d + 5 * j) % 18] + A[(d + 5 * j + 7) % 18],
-                 "x": 72.0 + 100.0 * j, "y": 700.0, "size": 12.0,
-                 "font": "C1"}
-                for j in range(k)
-            ]
-            words.append({"text": f"{marker}{d}", "x": 72.0, "y": 660.0,
-                          "size": 12.0, "font": "F1"})
-            words.append({"text": "doc", "x": 120.0, "y": 660.0,
-                          "size": 12.0, "font": "F1"})
-            out.append(build_pdf([{"words": words}], compress=True,
-                                 cid_tounicode=tounicode,
-                                 cid_fontfile=fontfile,
-                                 cid_encoding=encoding))
-        return pd.Series(out)
+    A = _CID_ALPHABET
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit(f"http://{host}.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        cid_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id=f"{host}_check",
-                  repartition=False)["extracted"]
+    def cid_pdf(d: int) -> bytes:
+        k = d % 3 + 2
+        words = [
+            {"text": A[(d + 5 * j) % 18] + A[(d + 5 * j + 7) % 18],
+             "x": 72.0 + 100.0 * j, "y": 700.0, "size": 12.0,
+             "font": "C1"}
+            for j in range(k)
+        ]
+        words.append({"text": f"{marker}{d}", "x": 72.0, "y": 660.0,
+                      "size": 12.0, "font": "F1"})
+        words.append({"text": "doc", "x": 120.0, "y": 660.0,
+                      "size": 12.0, "font": "F1"})
+        return build_pdf([{"words": words}], compress=True,
+                         cid_tounicode=tounicode, cid_fontfile=fontfile,
+                         cid_encoding=encoding)
+
+    out = _fixture_extract(spark, sf, f"{host}.test", cid_pdf,
+                           f"{host}_check")["extracted"]
     return out.select("url", "raw", "n_chars").transform(_srt("url"))
 
 
@@ -4013,27 +3916,12 @@ def _ocr_scanned(spark, sf):
     Reference shape: bbox_router (utils.py:591-612) +
     parse_with_paddleocr (static_parser.py:751-818)."""
     from lexoid_spark.functions.multimodal import encode_fake_image
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def fake_scan(doc_ids: pd.Series) -> pd.Series:
-        return pd.Series([
-            encode_fake_image(320 + int(d) % 16, 240 + int(d) % 8,
-                              int(d) % 3 + 1)
-            for d in doc_ids
-        ])
+    def fake_scan(d: int) -> bytes:
+        return encode_fake_image(320 + d % 16, 240 + d % 8, d % 3 + 1)
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://img.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        fake_scan("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="ocr_check",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "img.test", fake_scan,
+                           "ocr_check")["extracted"]
     return out.select("url", "raw", "parser_used").transform(_srt("url"))
 
 
@@ -4057,43 +3945,27 @@ def _ocr_glyph_scan(spark, sf):
     parse_with_paddleocr (static_parser.py:751-818)."""
     import numpy as np
 
-    from lexoid_spark.plans.extract import extract
-
-    @F.pandas_udf("binary")
-    def glyph_scan(doc_ids: pd.Series) -> pd.Series:
+    def glyph_scan(d: int) -> bytes:
         from lexoid_spark.kernels.gif_codec import gif_encode
         from lexoid_spark.kernels.jpeg_codec import jpeg_encode
         from lexoid_spark.kernels.ocr_glyph import render_text
         from lexoid_spark.kernels.png_codec import png_encode
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            v = d % 3
-            arr = render_text(f"DOC {d}\nLINE {d % 7}",
-                              scale=4 if v == 2 else 2)
-            if v == 0:
-                out.append(png_encode(arr[:, :, None]))
-            elif v == 1:
-                out.append(gif_encode(np.repeat(arr[:, :, None], 3, axis=2)))
-            else:
-                out.append(jpeg_encode(arr[:, :, None], quality=95))
-        return pd.Series(out)
+        v = d % 3
+        arr = render_text(f"DOC {d}\nLINE {d % 7}",
+                          scale=4 if v == 2 else 2)
+        if v == 0:
+            return png_encode(arr[:, :, None])
+        if v == 1:
+            return gif_encode(np.repeat(arr[:, :, None], 3, axis=2))
+        return jpeg_encode(arr[:, :, None], quality=95)
 
     # 1-in-5 deterministic subset: render→encode→decode→recognize is
     # ~20 ms/doc of honest pixel work; ocr_scanned keeps full-corpus
     # OCR-arm coverage, this query proves the REAL-pixel recognizer
-    docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 5 == 0)
-    pages = docs.select(
-        F.concat(F.lit("http://glyph.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        glyph_scan("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="ocr_glyph",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "glyph.test", glyph_scan,
+                           "ocr_glyph",
+                           where=F.col("doc_id") % 5 == 0)["extracted"]
     return out.select("url", "raw", "parser_used").transform(_srt("url"))
 
 
@@ -4115,38 +3987,23 @@ def _ocr_mixed_case(spark, sf):
     nearest-template-recognizes the exact string, so DuckDB predicts
     the page text closed-form. Reference: parse_with_paddleocr
     (static_parser.py:751-818)."""
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def mixed_scan(doc_ids: pd.Series) -> pd.Series:
+    def mixed_scan(d: int) -> bytes:
         from lexoid_spark.kernels.jpeg_codec import jpeg_encode
         from lexoid_spark.kernels.ocr_glyph import render_text
         from lexoid_spark.kernels.png_codec import png_encode
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            arr = render_text(
-                f"Doc {d} says 'Hello, world!'\npage {d % 9} of "
-                f"{d % 7 + 1} (ok).", scale=2)
-            if d % 2 == 0:
-                out.append(png_encode(arr[:, :, None]))
-            else:
-                out.append(jpeg_encode(arr[:, :, None], quality=95))
-        return pd.Series(out)
+        arr = render_text(
+            f"Doc {d} says 'Hello, world!'\npage {d % 9} of "
+            f"{d % 7 + 1} (ok).", scale=2)
+        if d % 2 == 0:
+            return png_encode(arr[:, :, None])
+        return jpeg_encode(arr[:, :, None], quality=95)
 
     # 1-in-5 deterministic subset, offset from ocr_glyph_scan's
-    docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 5 == 1)
-    pages = docs.select(
-        F.concat(F.lit("http://mixed.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        mixed_scan("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="ocr_mixed",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "mixed.test", mixed_scan,
+                           "ocr_mixed",
+                           where=F.col("doc_id") % 5 == 1)["extracted"]
     return out.select("url", "raw", "parser_used").transform(_srt("url"))
 
 
@@ -4170,35 +4027,20 @@ def _pdf_g3_scan(spark, sf):
     (static_parser.py:700-727); the codec itself has no reference
     code. Recognition is a pure function of doc_id, so DuckDB
     predicts the page text closed-form."""
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def g3_pdf(doc_ids: pd.Series) -> pd.Series:
+    def g3_pdf(d: int) -> bytes:
         from lexoid_spark.corpus.pdf_gen import build_pdf
         from lexoid_spark.kernels.ocr_glyph import render_text
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            arr = render_text(f"G3 FAX {d}\nrow {d % 6} ok", scale=2)
-            codec = "g3" if d % 2 == 0 else "g3-2d"
-            out.append(build_pdf(
-                [{"raster_images": [{"gray": arr, "codec": codec}]}]))
-        return pd.Series(out)
+        arr = render_text(f"G3 FAX {d}\nrow {d % 6} ok", scale=2)
+        codec = "g3" if d % 2 == 0 else "g3-2d"
+        return build_pdf(
+            [{"raster_images": [{"gray": arr, "codec": codec}]}])
 
     # 1-in-9 deterministic subset: build→scan→T.4-decode→recognize is
     # honest per-doc pixel work; pdf_ocr_extract keeps the G4 arm
-    docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 9 == 0)
-    pages = docs.select(
-        F.concat(F.lit("http://g3pdf.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        g3_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="g3_pdf",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "g3pdf.test", g3_pdf, "g3_pdf",
+                           where=F.col("doc_id") % 9 == 0)["extracted"]
     return out.select("url", "raw", "parser_used").transform(_srt("url"))
 
 
@@ -4224,36 +4066,20 @@ def _pdf_jbig2_scan(spark, sf):
     via pdfplumber/pypdfium (static_parser.py:700-727); the codec has
     no reference code. Recognition is a pure function of doc_id, so
     DuckDB predicts the page text closed-form."""
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def jbig2_pdf(doc_ids: pd.Series) -> pd.Series:
+    def jbig2_pdf(d: int) -> bytes:
         from lexoid_spark.corpus.pdf_gen import build_pdf
         from lexoid_spark.kernels.ocr_glyph import render_text
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            arr = render_text(f"JBIG2 SCAN {d}\nrow {d % 6} ok",
-                              scale=2)
-            codec = ("jbig2", "jbig2-arith", "jbig2-sym")[d % 3]
-            out.append(build_pdf(
-                [{"raster_images": [{"gray": arr, "codec": codec}]}]))
-        return pd.Series(out)
+        arr = render_text(f"JBIG2 SCAN {d}\nrow {d % 6} ok", scale=2)
+        codec = ("jbig2", "jbig2-arith", "jbig2-sym")[d % 3]
+        return build_pdf(
+            [{"raster_images": [{"gray": arr, "codec": codec}]}])
 
     # 1-in-17 deterministic subset: build→scan→segment-parse→MQ/MMR
     # decode→recognize is honest per-doc pixel work
-    docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 17 == 0)
-    pages = docs.select(
-        F.concat(F.lit("http://jbig2pdf.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        jbig2_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="jbig2_pdf",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "jbig2pdf.test", jbig2_pdf, "jbig2_pdf",
+                           where=F.col("doc_id") % 17 == 0)["extracted"]
     return out.select("url", "raw", "parser_used").transform(_srt("url"))
 
 
@@ -4276,36 +4102,20 @@ def _pdf_jpx_scan(spark, sf):
     (static_parser.py:700-727); the codec has no reference code.
     Recognition is a pure function of doc_id, so DuckDB predicts the
     page text closed-form."""
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def jpx_pdf(doc_ids: pd.Series) -> pd.Series:
+    def jpx_pdf(d: int) -> bytes:
         from lexoid_spark.corpus.pdf_gen import build_pdf
         from lexoid_spark.kernels.ocr_glyph import render_text
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            arr = render_text(f"JPX SCAN {d}\nrow {d % 6} ok",
-                              scale=2)
-            codec = "jpx" if d % 2 == 0 else "jpx-jp2"
-            out.append(build_pdf(
-                [{"raster_images": [{"gray": arr, "codec": codec}]}]))
-        return pd.Series(out)
+        arr = render_text(f"JPX SCAN {d}\nrow {d % 6} ok", scale=2)
+        codec = "jpx" if d % 2 == 0 else "jpx-jp2"
+        return build_pdf(
+            [{"raster_images": [{"gray": arr, "codec": codec}]}])
 
     # 1-in-19 deterministic subset: build→scan→DWT+EBCOT→recognize is
     # honest per-doc pixel work
-    docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 19 == 0)
-    pages = docs.select(
-        F.concat(F.lit("http://jpxpdf.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        jpx_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="jpx_pdf",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "jpxpdf.test", jpx_pdf, "jpx_pdf",
+                           where=F.col("doc_id") % 19 == 0)["extracted"]
     return out.select("url", "raw", "parser_used").transform(_srt("url"))
 
 
@@ -4329,44 +4139,26 @@ def _tiff_ocr_scan(spark, sf):
     TIFF layouts; the reference reads them via PIL inside PaddleOCR
     (static_parser.py:751-798). Recognition is a pure function of
     doc_id, so DuckDB predicts the page text closed-form."""
-    from lexoid_spark.plans.extract import extract
+    comps = ["none", "packbits", "lzw", "lzw-pred",
+             "mh", "g3", "g3-2d", "g4"]
 
-    @F.pandas_udf("binary")
-    def tiff_scan(doc_ids: pd.Series) -> pd.Series:
+    def tiff_scan(d: int) -> bytes:
         from lexoid_spark.kernels.ocr_glyph import render_text
         from lexoid_spark.kernels.tiff_codec import (
             bmp_encode_gray,
             tiff_encode_gray,
         )
 
-        comps = ["none", "packbits", "lzw", "lzw-pred",
-                 "mh", "g3", "g3-2d", "g4"]
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            arr = render_text(f"TIFF SCAN {d}\nrow {d % 6} ok",
-                              scale=2)
-            v = d % 9
-            if v == 8:
-                out.append(bmp_encode_gray(arr))
-            else:
-                out.append(tiff_encode_gray(
-                    arr, comps[v], rows_per_strip=32))
-        return pd.Series(out)
+        arr = render_text(f"TIFF SCAN {d}\nrow {d % 6} ok", scale=2)
+        v = d % 9
+        if v == 8:
+            return bmp_encode_gray(arr)
+        return tiff_encode_gray(arr, comps[v], rows_per_strip=32)
 
     # 1-in-7 deterministic subset: render→encode→decode→recognize is
     # honest per-doc pixel work across nine codec arms
-    docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 7 == 0)
-    pages = docs.select(
-        F.concat(F.lit("http://tiff.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        tiff_scan("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="tiff_ocr",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "tiff.test", tiff_scan, "tiff_ocr",
+                           where=F.col("doc_id") % 7 == 0)["extracted"]
     return out.select("url", "raw", "parser_used").transform(_srt("url"))
 
 
@@ -4391,45 +4183,31 @@ def _pdf_inline_image(spark, sf):
     a deliberate capability add over the reference. Recognition is a
     pure function of doc_id, so DuckDB predicts the page text
     closed-form."""
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def inline_pdf(doc_ids: pd.Series) -> pd.Series:
+    def inline_pdf(d: int) -> bytes:
         from lexoid_spark.corpus.pdf_gen import build_pdf
         from lexoid_spark.kernels.jpeg_codec import jpeg_encode
         from lexoid_spark.kernels.ocr_glyph import render_text
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            v = d % 5
-            arr = render_text(f"INLINE {d}\nline {d % 6} ok.", scale=2)
-            if v == 0:
-                raster = {"gray": arr}
-            elif v == 1:
-                raster = {"gray": arr, "predictor": 15}
-            elif v == 2:
-                raster = {"gray": arr, "codec": "g4"}
-            elif v == 3:
-                raster = {"gray": arr, "raw": True}
-            else:
-                raster = jpeg_encode(arr[:, :, None], quality=95)
-            out.append(build_pdf([{"inline_images": [raster]}]))
-        return pd.Series(out)
+        v = d % 5
+        arr = render_text(f"INLINE {d}\nline {d % 6} ok.", scale=2)
+        if v == 0:
+            raster = {"gray": arr}
+        elif v == 1:
+            raster = {"gray": arr, "predictor": 15}
+        elif v == 2:
+            raster = {"gray": arr, "codec": "g4"}
+        elif v == 3:
+            raster = {"gray": arr, "raw": True}
+        else:
+            raster = jpeg_encode(arr[:, :, None], quality=95)
+        return build_pdf([{"inline_images": [raster]}])
 
     # 1-in-13 deterministic subset: build→scan→decode→recognize is
     # honest per-doc pixel work; pdf_ocr_extract keeps the XObject arm
-    docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 13 == 0)
-    pages = docs.select(
-        F.concat(F.lit("http://inlinepdf.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        inline_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="inline_pdf",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "inlinepdf.test", inline_pdf,
+                           "inline_pdf",
+                           where=F.col("doc_id") % 13 == 0)["extracted"]
     return out.select("url", "raw", "parser_used").transform(_srt("url"))
 
 
@@ -4452,39 +4230,24 @@ def _pdf_type3_extract(spark, sf):
     /Widths are exact. Closed-form text from doc_id — DuckDB predicts
     the markdown without touching a byte of PDF. Reference reads
     Type3 fonts via pdfplumber (static_parser.py:700-727)."""
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def t3_pdf(doc_ids: pd.Series) -> pd.Series:
+    def t3_pdf(d: int) -> bytes:
         from lexoid_spark.corpus.pdf_gen import build_pdf
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 3 + 2
-            words = [
-                {"text": f"t3w{j}q{d % 5}", "x": 72.0 + 100.0 * j,
-                 "y": 700.0, "size": 12.0, "font": "T1"}
-                for j in range(k)
-            ]
-            words.append({"text": f"t3x{d}", "x": 72.0, "y": 660.0,
-                          "size": 12.0, "font": "F1"})
-            words.append({"text": "doc", "x": 120.0, "y": 660.0,
-                          "size": 12.0, "font": "F1"})
-            out.append(build_pdf([{"words": words}], compress=True))
-        return pd.Series(out)
+        k = d % 3 + 2
+        words = [
+            {"text": f"t3w{j}q{d % 5}", "x": 72.0 + 100.0 * j,
+             "y": 700.0, "size": 12.0, "font": "T1"}
+            for j in range(k)
+        ]
+        words.append({"text": f"t3x{d}", "x": 72.0, "y": 660.0,
+                      "size": 12.0, "font": "F1"})
+        words.append({"text": "doc", "x": 120.0, "y": 660.0,
+                      "size": 12.0, "font": "F1"})
+        return build_pdf([{"words": words}], compress=True)
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://type3.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        t3_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="type3_check",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "type3.test", t3_pdf,
+                           "type3_check")["extracted"]
     return out.select("url", "raw", "n_chars").transform(_srt("url"))
 
 
@@ -4519,44 +4282,28 @@ def _ocr_noise_quarantine(spark, sf):
     extract()'s quarantine split."""
     import numpy as np
 
-    from lexoid_spark.plans.extract import extract
-
-    @F.pandas_udf("binary")
-    def noisy_scan(doc_ids: pd.Series) -> pd.Series:
+    def noisy_scan(d: int) -> bytes:
         from lexoid_spark.kernels.ocr_glyph import render_text
         from lexoid_spark.kernels.png_codec import png_encode
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            arr = render_text(f"NOISE {d}", scale=2).copy()
-            if d % 3 == 0:
-                # margin=4px; flip 4 whole cells of the leading N
-                for r, c in [(1, 0), (1, 3), (3, 0), (5, 3)]:
-                    blk = arr[4 + r * 2:4 + (r + 1) * 2,
-                              4 + c * 2:4 + (c + 1) * 2]
-                    arr[4 + r * 2:4 + (r + 1) * 2,
-                        4 + c * 2:4 + (c + 1) * 2] = np.where(
-                            blk < 128, 255, 0)
-            out.append(png_encode(arr[:, :, None]))
-        return pd.Series(out)
+        arr = render_text(f"NOISE {d}", scale=2).copy()
+        if d % 3 == 0:
+            # margin=4px; flip 4 whole cells of the leading N
+            for r, c in [(1, 0), (1, 3), (3, 0), (5, 3)]:
+                blk = arr[4 + r * 2:4 + (r + 1) * 2,
+                          4 + c * 2:4 + (c + 1) * 2]
+                arr[4 + r * 2:4 + (r + 1) * 2,
+                    4 + c * 2:4 + (c + 1) * 2] = np.where(
+                        blk < 128, 255, 0)
+        return png_encode(arr[:, :, None])
 
-    docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 11 == 0)
-    pages = docs.select(
-        F.concat(F.lit("http://noise.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        noisy_scan("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="ocr_noise",
-                  repartition=False)
+    out = _fixture_extract(spark, sf, "noise.test", noisy_scan, "ocr_noise",
+                           where=F.col("doc_id") % 11 == 0)
     ok = out["extracted"].select(
         "url", F.lit("extracted").alias("status"))
     bad = out["errors"].select(
         "url", F.lit("quarantined").alias("status"))
-    return ok.unionByName(bad).transform(_srt("url", pin=False))
+    return ok.unionByName(bad).transform(_srt("url"))
 
 
 _OCR_NOISE_QUARANTINE_SQL = """
@@ -4579,43 +4326,28 @@ def _pdf_ocr_extract(spark, sf):
     (utils.py:591-612 bbox_router, static_parser.py:751-818).
     Recognition is a pure function of doc_id, so DuckDB predicts the
     page text closed-form."""
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def scan_pdf(doc_ids: pd.Series) -> pd.Series:
+    def scan_pdf(d: int) -> bytes:
         from lexoid_spark.corpus.pdf_gen import build_pdf
         from lexoid_spark.kernels.jpeg_codec import jpeg_encode
         from lexoid_spark.kernels.ocr_glyph import render_text
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            v = d % 4
-            arr = render_text(f"JPEG SCAN {d}\nBAND {d % 5} OK",
-                              scale=4 if v == 0 else 2)
-            if v == 0:
-                raster = jpeg_encode(arr[:, :, None], quality=95)
-            elif v == 3:
-                raster = {"gray": arr, "codec": "g4"}
-            else:
-                raster = {"gray": arr, "predictor": 15 if v == 2 else 1}
-            out.append(build_pdf([{"raster_images": [raster]}]))
-        return pd.Series(out)
+        v = d % 4
+        arr = render_text(f"JPEG SCAN {d}\nBAND {d % 5} OK",
+                          scale=4 if v == 0 else 2)
+        if v == 0:
+            raster = jpeg_encode(arr[:, :, None], quality=95)
+        elif v == 3:
+            raster = {"gray": arr, "codec": "g4"}
+        else:
+            raster = {"gray": arr, "predictor": 15 if v == 2 else 1}
+        return build_pdf([{"raster_images": [raster]}])
 
     # 1-in-7 deterministic subset: build→scan→entropy-decode→recognize
     # is honest per-doc pixel work; pdf_speed_arm / ocr_scanned keep
     # full-corpus coverage of the routing itself
-    docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 7 == 0)
-    pages = docs.select(
-        F.concat(F.lit("http://scanpdf.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        scan_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="pdf_ocr",
-                  repartition=False)["extracted"]
+    out = _fixture_extract(spark, sf, "scanpdf.test", scan_pdf, "pdf_ocr",
+                           where=F.col("doc_id") % 7 == 0)["extracted"]
     return out.select("url", "raw", "parser_used").transform(_srt("url"))
 
 
@@ -4635,37 +4367,21 @@ def _pdf_speed_arm(spark, sf):
     pdf_framework='pdfminer' — no markdown, words joined by spaces,
     lines by newlines."""
     from lexoid_spark.corpus.pdf_gen import build_pdf
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def speed_pdf(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 4 + 2
-            words = [
-                {"text": f"f{j}x{d % 7}", "x": 72.0 + 48.0 * j,
-                 "y": 700.0, "size": 12.0, "font": "F1"}
-                for j in range(k)
-            ]
-            words.append({"text": f"endx{d % 7}", "x": 72.0, "y": 680.0,
-                          "size": 12.0, "font": "F1"})
-            out.append(build_pdf([{"words": words, "style": "compact"}],
-                                 compress=True))
-        return pd.Series(out)
+    def speed_pdf(d: int) -> bytes:
+        k = d % 4 + 2
+        words = [
+            {"text": f"f{j}x{d % 7}", "x": 72.0 + 48.0 * j,
+             "y": 700.0, "size": 12.0, "font": "F1"}
+            for j in range(k)
+        ]
+        words.append({"text": f"endx{d % 7}", "x": 72.0, "y": 680.0,
+                      "size": 12.0, "font": "F1"})
+        return build_pdf([{"words": words, "style": "compact"}],
+                         compress=True)
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://spdf.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        speed_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="speed_check",
-                  repartition=False,
-                  pdf_framework="pdfminer")["extracted"]
+    out = _fixture_extract(spark, sf, "spdf.test", speed_pdf, "speed_check",
+                           pdf_framework="pdfminer")["extracted"]
     return out.select("url", "raw", "n_chars").transform(_srt("url"))
 
 
@@ -4720,7 +4436,7 @@ def _pii_redact_docs(spark, sf):
     )
     return blob.select(
         "doc_id", pii_redact("blob").alias("redacted")
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _PII_REDACT_SQL = r"""
@@ -4767,7 +4483,7 @@ def _para_dedup(spark, sf):
     out = paragraph_dedup(body, "doc_id", "body")
     return out.select(
         F.col("id").alias("doc_id"), "n_paras", "n_kept", "text_dedup"
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _PARA_DEDUP_SQL = r"""
@@ -4825,7 +4541,7 @@ def _doc_repetition(spark, sf):
     return (
         repetition_table(body, "doc_id", "body")
         .withColumnRenamed("id", "doc_id")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -4920,7 +4636,7 @@ def _url_normalize(spark, sf):
     )
     return u.select(
         "doc_id", "url", normalize_url("url").alias("url_norm")
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _URL_NORMALIZE_SQL = r"""
@@ -4968,7 +4684,7 @@ def _doc_sample_stratified(spark, sf):
     return (
         stratified_sample(docs, "doc_id", "lang", rates, default_rate=0.1)
         .select("doc_id", "lang")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -4996,7 +4712,7 @@ def _token_pack_bins(spark, sf):
         bins.groupBy("bin")
         .agg(F.count("*").alias("n_docs"),
              F.sum("n_tokens").alias("sum_tokens"))
-        .transform(_srt("bin", pin=False))
+        .transform(_srt("bin"))
     )
 
 
@@ -5048,7 +4764,7 @@ def _cms_token_freq(spark, sf):
         est.join(exact, "tok", "left")
         .select("tok", "est",
                 F.coalesce("exact_n", F.lit(0)).alias("exact_n"))
-        .transform(_srt("tok", pin=False))
+        .transform(_srt("tok"))
     )
 
 
@@ -5101,7 +4817,7 @@ def _customer_balance_deciles(spark, sf):
         .groupBy("c_mktsegment", "decile")
         .agg(F.count("*").alias("n"),
              F.round(F.avg("c_acctbal"), 2).alias("avg_bal"))
-        .transform(_srt("c_mktsegment", "decile", pin=False))
+        .transform(_srt("c_mktsegment", "decile"))
     )
 
 
@@ -5131,7 +4847,7 @@ def _customer_setops(spark, sf):
     low = cust.filter(F.col("c_acctbal") < 0).select("c_custkey")
     return (
         building.intersect(with_orders).exceptAll(low)
-        .transform(_srt("c_custkey", pin=False))
+        .transform(_srt("c_custkey"))
     )
 
 
@@ -5163,7 +4879,7 @@ def _price_quantity_corr(spark, sf):
              .alias("stddev_discount"),
             F.count("*").alias("n"),
         )
-        .transform(_srt("l_returnflag", pin=False))
+        .transform(_srt("l_returnflag"))
     )
 
 
@@ -5191,7 +4907,7 @@ def _z_order_layout(spark, sf):
     b = F.pmod(_md5_hash64(F.col("lang")), F.lit(65536))
     return docs.select(
         "doc_id", z_order_key(a, b).alias("zkey")
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 def _z_order_sql(bits: int = 16) -> str:
@@ -5219,7 +4935,7 @@ def _hll_doc_registers(spark, sf):
     from lexoid_spark.functions.textstats import hll_registers
 
     docs = _t(spark, sf, "documents")
-    return hll_registers(docs, "text", n_buckets=256).transform(_srt("bucket", pin=False))
+    return hll_registers(docs, "text", n_buckets=256).transform(_srt("bucket"))
 
 
 _HLL_REGISTERS_SQL = r"""
@@ -5256,7 +4972,7 @@ def _bloom_url_filter(spark, sf):
         res.join(seen.withColumn("_a", F.lit(True)), "u", "left")
         .select("u", "maybe_present",
                 F.coalesce("_a", F.lit(False)).alias("actually_present"))
-        .transform(_srt("u", pin=False))
+        .transform(_srt("u"))
     )
 
 
@@ -5313,7 +5029,7 @@ def _sales_rollup(spark, sf):
              F.count("*").alias("n_orders"),
              F.round(F.sum("o_totalprice"), 2).alias("total"))
         .select("n_name", "o_year", "gid", "n_orders", "total")
-        .transform(_srt("gid", "n_name", "o_year", pin=False))
+        .transform(_srt("gid", "n_name", "o_year"))
     )
 
 
@@ -5341,7 +5057,7 @@ def _orders_pivot(spark, sf):
         .pivot("o_orderpriority", pris)
         .count()
         .withColumnsRenamed({p: f"p{p[0]}" for p in pris})
-        .transform(_srt("o_year", pin=False))
+        .transform(_srt("o_year"))
     )
 
 
@@ -5386,7 +5102,7 @@ def _events_funnel(spark, sf):
                      - F.unix_timestamp("signup_ts")) / 86400.0, 4),
             ).alias("days_to_convert"),
         )
-        .transform(_srt("user_id", pin=False))
+        .transform(_srt("user_id"))
     )
 
 
@@ -5434,7 +5150,7 @@ def _events_rolling_7d(spark, sf):
             F.sum("n").over(w).alias("n_7d"),
             F.round(F.sum("v").over(w), 2).alias("v_7d"),
         )
-        .transform(_srt("event_type", "day", pin=False))
+        .transform(_srt("event_type", "day"))
     )
 
 
@@ -5476,7 +5192,7 @@ def _events_session_window(spark, sf):
             F.col("w.end").alias("session_end"),
             "n_events", "sum_value",
         )
-        .transform(_srt("user_id", "session_start", pin=False))
+        .transform(_srt("user_id", "session_start"))
     )
 
 
@@ -5518,7 +5234,7 @@ def _corpus_percentiles(spark, sf):
             F.percentile("n_chars", 0.99).alias("p99"),
             F.count("*").alias("n_docs"),
         )
-        .transform(_srt("lang", pin=False))
+        .transform(_srt("lang"))
     )
 
 
@@ -5552,7 +5268,7 @@ def _link_pagerank(spark, sf):
     return (
         pagerank(edges, iterations=4)
         .withColumnRenamed("id", "doc_id")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -5598,7 +5314,7 @@ def _chunk_windows(spark, sf):
     return (
         chunk_by_tokens(docs, "doc_id", "text", 64, overlap=16)
         .withColumnRenamed("id", "doc_id")
-        .transform(_srt("doc_id", "chunk_id", pin=False))
+        .transform(_srt("doc_id", "chunk_id"))
     )
 
 
@@ -5636,7 +5352,7 @@ def _mixture_rebalance(spark, sf):
     return (
         rebalance_mixture(docs, "doc_id", "source", "n_chars", targets)
         .select("doc_id", "source", "n_chars")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -5677,7 +5393,7 @@ def _decontaminate(spark, sf):
     return (
         decontaminate(docs, bench, "doc_id", "text", n=8)
         .withColumnRenamed("id", "doc_id")
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -5721,7 +5437,7 @@ def _charlm_familiarity(spark, sf):
 
     docs = _t(spark, sf, "documents")
     return charlm_familiarity(docs, "doc_id", "text", "lang",
-                              top_k=512).transform(_srt("doc_id", pin=False))
+                              top_k=512).transform(_srt("doc_id"))
 
 
 _CHARLM_SQL = """
@@ -5776,7 +5492,7 @@ def _curation_pipeline(spark, sf):
         "doc_id", "lang",
         token_count("text").alias("n_tokens"),
         pii_redact("text").alias("text_clean"),
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _CURATION_PIPELINE_SQL = rf"""
@@ -5830,35 +5546,19 @@ def _pdf_objstm_extract(spark, sf):
     layout is closed-form from doc_id so DuckDB predicts the final
     markdown without touching a byte of PDF."""
     from lexoid_spark.corpus.pdf_gen import build_pdf
-    from lexoid_spark.plans.extract import extract
 
-    @F.pandas_udf("binary")
-    def objstm_pdf(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 4 + 2
-            words = [
-                {"text": f"o{j}x{d % 7}", "x": 72.0 + 48.0 * j,
-                 "y": 700.0, "size": 12.0, "font": "F1"}
-                for j in range(k)
-            ]
-            out.append(build_pdf([{"words": words}], compress=True,
-                                 objstm=True))
-        return pd.Series(out)
+    def objstm_pdf(d: int) -> bytes:
+        k = d % 4 + 2
+        words = [
+            {"text": f"o{j}x{d % 7}", "x": 72.0 + 48.0 * j,
+             "y": 700.0, "size": 12.0, "font": "F1"}
+            for j in range(k)
+        ]
+        return build_pdf([{"words": words}], compress=True, objstm=True)
 
-    docs = _tp(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("http://opdf.test/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        objstm_pdf("doc_id").alias("html"),
-        F.lit("").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = extract(_materialize(pages), run_id="objstm_check",
-                  repartition=False)["extracted"]
-    return out.select("url", "raw", "n_chars").transform(_srt("url", pin=False))
+    out = _fixture_extract(spark, sf, "opdf.test", objstm_pdf,
+                           "objstm_check")["extracted"]
+    return out.select("url", "raw", "n_chars").transform(_srt("url"))
 
 
 _PDF_OBJSTM_SQL = """
@@ -5921,7 +5621,7 @@ def _stream_dedup(spark, sf):
     return (
         read_deduped(spark, out_dir)
         .select("url", "text", "lang")
-        .transform(_srt("url", pin=False))
+        .transform(_srt("url"))
     )
 
 
@@ -6002,7 +5702,7 @@ def _c4_filter(spark, sf):
     out = c4_line_filter(pages, "doc_id", "page")
     return out.select(
         F.col("id").alias("doc_id"), "n_lines", "n_kept", "text_clean"
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _C4_FILTER_SQL = r"""
@@ -6054,7 +5754,7 @@ def _dsir_importance(spark, sf):
     docs = _tp(spark, sf, "documents")
     return dsir_weights(
         docs, "doc_id", "text", F.col("lang") == "en", n_buckets=1024
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _DSIR_SQL = r"""
@@ -6128,7 +5828,7 @@ def _unimax_alloc(spark, sf):
 
     docs = _t(spark, sf, "documents")
     return unimax_allocation(docs, "doc_id", "lang",
-                             budget_pct=80).transform(_srt("stratum", pin=False))
+                             budget_pct=80).transform(_srt("stratum"))
 
 
 _UNIMAX_ALLOC_SQL = (
@@ -6146,7 +5846,7 @@ def _unimax_sample(spark, sf):
 
     docs = _t(spark, sf, "documents")
     return unimax_sample(docs, "doc_id", "lang",
-                         budget_pct=80).transform(_srt("doc_id", pin=False))
+                         budget_pct=80).transform(_srt("doc_id"))
 
 
 _UNIMAX_SAMPLE_SQL = (
@@ -6179,7 +5879,7 @@ def _semdedup_keep(spark, sf):
     from lexoid_spark.functions.similarity import semdedup_keepers
 
     emb = _t(spark, sf, "embeddings")
-    return semdedup_keepers(emb, tau=0.35, n_centroids=8).transform(_srt("vec_id", pin=False))
+    return semdedup_keepers(emb, tau=0.35, n_centroids=8).transform(_srt("vec_id"))
 
 
 _SEMDEDUP_SQL = """
@@ -6219,7 +5919,7 @@ def _semdedup_greedy(spark, sf):
 
     emb = _t(spark, sf, "embeddings")
     return semdedup_keepers_greedy(
-        emb, tau=0.35, n_centroids=8).transform(_srt("vec_id", pin=False))
+        emb, tau=0.35, n_centroids=8).transform(_srt("vec_id"))
 
 
 _SEMDEDUP_GREEDY_SQL = """
@@ -6504,7 +6204,7 @@ def _tfidf_topk(spark, sf):
     docs = _t(spark, sf, "documents")
     return tfidf_topk(docs, "doc_id", "text", k=5).transform(_srt(
         "doc_id", "rank"
-    , pin=False))
+    ))
 
 
 _TFIDF_SQL = r"""
@@ -6536,7 +6236,7 @@ def _inverted_postings(spark, sf):
 
     docs = _t(spark, sf, "documents")
     return inverted_postings(docs, "doc_id", "text",
-                             max_postings=20).transform(_srt("term", pin=False))
+                             max_postings=20).transform(_srt("term"))
 
 
 _INVERTED_SQL = r"""
@@ -6750,7 +6450,7 @@ def _robots_check(spark, sf):
                  F.col("doc_id").cast("string")).alias("url")
     )
     return crawl_allowed(urls, robots,
-                         agent="lexoidbot").transform(_srt("url", pin=False))
+                         agent="lexoidbot").transform(_srt("url"))
 
 
 _ROBOTS_CHECK_SQL = r"""
@@ -6827,7 +6527,7 @@ def _sitemap_frontier(spark, sf):
         ).alias("robots_txt"),
     )
     return sitemap_frontier(sitemaps, robots,
-                            agent="lexoidbot").transform(_srt("url", pin=False))
+                            agent="lexoidbot").transform(_srt("url"))
 
 
 def _html_head_meta(spark, sf):
@@ -6868,7 +6568,7 @@ def _html_head_meta(spark, sf):
         m["meta_robots"].alias("meta_robots"),
         m["noindex"].alias("noindex"),
         m["lang"].alias("page_lang"),
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _HTML_HEAD_META_SQL = """
@@ -6909,7 +6609,7 @@ def _html_jsonld(spark, sf):
         F.get_json_object(block, "$.wordCount").cast("long")
         .alias("word_count"),
         F.get_json_object(block, "$.inLanguage").alias("in_language"),
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _HTML_JSONLD_SQL = """
@@ -6948,7 +6648,7 @@ def _feed_discovery(spark, sf):
         F.when(F.col("doc_id") % 2 == 0, rss).otherwise(atom)
         .alias("feed_xml"),
     )
-    return parse_feed(feeds).transform(_srt("url", pin=False))
+    return parse_feed(feeds).transform(_srt("url"))
 
 
 _FEED_DISCOVERY_SQL = """
@@ -6981,7 +6681,7 @@ def _sitemap_index_parse(spark, sf):
         F.concat(F.col("source"), F.lit(".example.com")).alias("host"),
         xml.alias("index_xml"),
     )
-    return parse_sitemap_index(idx).transform(_srt("sitemap_url", pin=False))
+    return parse_sitemap_index(idx).transform(_srt("sitemap_url"))
 
 
 _SITEMAP_INDEX_SQL = """
@@ -7053,7 +6753,7 @@ def _sitemap_gz_parse(spark, sf):
             gz("sitemap_xml").alias("sitemap_blob"),
         )
     )
-    return parse_sitemap_bytes(sitemaps).transform(_srt("url", pin=False))
+    return parse_sitemap_bytes(sitemaps).transform(_srt("url"))
 
 
 _SITEMAP_GZ_PARSE_SQL = r"""
@@ -7112,7 +6812,7 @@ def _crawl_schedule(spark, sf):
                  F.col("doc_id").cast("string")).alias("url")
     )
     return crawl_schedule(urls, robots, agent="lexoidbot",
-                          default_delay_s=1).transform(_srt("url", pin=False))
+                          default_delay_s=1).transform(_srt("url"))
 
 
 _CRAWL_SCHEDULE_SQL = r"""
@@ -7170,7 +6870,7 @@ def _corpus_diff(spark, sf):
             .when(F.col("h1") != F.col("h2"), "changed")
             .otherwise("unchanged").alias("status"),
         )
-        .transform(_srt("doc_id", pin=False))
+        .transform(_srt("doc_id"))
     )
 
 
@@ -7211,7 +6911,7 @@ def _langid_confusion(spark, sf):
         .join(pred, "id")
         .groupBy("lang", "lang_pred")
         .agg(F.count("*").alias("n"))
-        .transform(_srt("lang", "lang_pred", pin=False))
+        .transform(_srt("lang", "lang_pred"))
     )
 
 
@@ -7266,7 +6966,7 @@ def _train_val_split(spark, sf):
         "doc_id", "lang",
         F.when(b < 90, "train").when(b < 95, "val")
         .otherwise("test").alias("split"),
-    ).transform(_srt("doc_id", pin=False))
+    ).transform(_srt("doc_id"))
 
 
 _TRAIN_VAL_SPLIT_SQL = """
@@ -7314,7 +7014,7 @@ def _corpus_report(spark, sf):
             F.expr("(2 * sum_tokens * 1000000 + n_docs) div (2 * n_docs)")
             / F.lit(1000000.0),
         )
-        .transform(_srt("lang", pin=False))
+        .transform(_srt("lang"))
     )
 
 
@@ -7355,7 +7055,7 @@ def _phrase_merges(spark, sf):
     # of 12); plan depth at 6 merges never needs the lineage
     # truncation a 30k-merge run would re-enable via checkpoint_every
     return phrase_merges(docs, "doc_id", "text", n_merges=6,
-                         checkpoint_every=0).transform(_srt("doc_id", pin=False))
+                         checkpoint_every=0).transform(_srt("doc_id"))
 
 
 def _phrase_sql(n_merges: int = 6, sample_mod: int = 0) -> str:
@@ -7441,7 +7141,7 @@ def _phrase_merges_sampled(spark, sf):
     docs = _t(spark, sf, "documents")
     return phrase_merges(docs, "doc_id", "text", n_merges=6,
                          checkpoint_every=0,
-                         sample_mod=4).transform(_srt("doc_id", pin=False))
+                         sample_mod=4).transform(_srt("doc_id"))
 
 
 _PHRASE_MERGES_SAMPLED_SQL = _phrase_sql(sample_mod=4)
@@ -7513,7 +7213,7 @@ def _anchor_index(spark, sf):
     return anchor_text_index(
         docs.select("doc_id", md.alias("md")), "doc_id", "md",
         max_anchors=10,
-    ).transform(_srt("url", pin=False))
+    ).transform(_srt("url"))
 
 
 _ANCHOR_INDEX_SQL = """
@@ -7537,345 +7237,185 @@ FROM pairs GROUP BY url ORDER BY url
 # ---------------------------------------------------------------------------
 
 
+# name → (builder, DuckDB oracle SQL); queries() and oracle_sql() are
+# both derived from this one table, in this order
+_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "q1_pricing_summary": (_q1, _Q1_SQL),
+    "q3_shipping_priority": (_q3, _Q3_SQL),
+    "q4_order_priority": (_q4, _Q4_SQL),
+    "q5_local_suppliers": (_q5, _Q5_SQL),
+    "q6_forecast_revenue": (_q6, _Q6_SQL),
+    "q10_returned_items": (_q10, _Q10_SQL),
+    "q12_shipmode": (_q12, _Q12_SQL),
+    "q14_type_share": (_q14_type_share, _Q14_SQL),
+    "q18_large_volume": (_q18, _Q18_SQL),
+    "q19_discounted_revenue": (_q19, _Q19_SQL),
+    "q7_volume_shipping": (_q7_volume_shipping, _Q7_SQL),
+    "q8_market_share": (_q8_market_share, _Q8_SQL),
+    "q16_supplier_cnt": (_q16_supplier_cnt, _Q16_SQL),
+    "q20_small_part_suppliers": (_q20_small_part_suppliers, _Q20_SQL),
+    "q13_customer_distribution": (_q13_customer_distribution, _Q13_SQL),
+    "q17_small_quantity_revenue": (_q17_small_quantity_revenue, _Q17_SQL),
+    "q21_waiting_supplier": (_q21_waiting_supplier, _Q21_SQL),
+    "q22_global_sales_opportunity": (_q22_global_sales_opportunity, _Q22_SQL),
+    "top_customers": (_top_customers, _TOP_CUST_SQL),
+    "supplier_rank": (_supplier_rank, _SUPPLIER_RANK_SQL),
+    "events_daily": (_events_daily, _EVENTS_DAILY_SQL),
+    "events_sessions": (_events_sessions, _EVENTS_SESSIONS_SQL),
+    "events_json": (_events_json, _EVENTS_JSON_SQL),
+    "sessions_closed": (_sessions_closed, _SESSIONS_CLOSED_SQL),
+    "docs_by_lang": (_docs_by_lang, _DOCS_BY_LANG_SQL),
+    "doc_token_stats": (_doc_token_stats, _DOC_TOKEN_STATS_SQL),
+    "doc_bpe_tokens": (_doc_bpe_tokens, _DOC_BPE_SQL),
+    "doc_quality": (_doc_quality, _DOC_QUALITY_SQL),
+    "doc_langid": (_doc_langid, _DOC_LANGID_SQL),
+    "doc_fingerprint": (_doc_fingerprint, _DOC_FINGERPRINT_SQL),
+    "doc_winnow": (_doc_winnow, _DOC_WINNOW_SQL),
+    "gopher_filters": (_gopher_filters, _GOPHER_SQL),
+    "quality_classifier": (_quality_classifier, _QUALITY_CLASSIFIER_SQL),
+    "exact_dup_groups": (_exact_dup_groups, _EXACT_DUP_SQL),
+    "exact_dedup_keepers": (_exact_dedup_keepers, _EXACT_DEDUP_SQL),
+    "events_windowed": (_events_windowed, _EVENTS_WINDOWED_SQL),
+    "ngram_jaccard_adjacent": (_ngram_jaccard_adjacent, _NGRAM_JACCARD_SQL),
+    "minhash_sample": (_minhash_sample, _MINHASH_SAMPLE_SQL),
+    "minhash_band_pairs": (_minhash_band_pairs, _MINHASH_PAIRS_SQL),
+    "dup_clusters": (_dup_clusters, _DUP_CLUSTERS_SQL),
+    "dedup_keep_list": (_dedup_keep_list, _DEDUP_KEEP_SQL),
+    "simhash_pairs": (_simhash_pairs, _SIMHASH_PAIRS_SQL),
+    "ann_cosine_topk": (_ann_cosine_topk, _ANN_COSINE_SQL),
+    "ann_ivf_topk": (_ann_ivf_topk, _ANN_IVF_SQL),
+    "ann_sq8_topk": (_ann_sq8_topk, _ANN_SQ8_SQL),
+    "ann_ivfpq_topk": (_ann_ivfpq_topk, _ANN_IVFPQ_SQL),
+    "emb_near_dup": (_emb_near_dup, _EMB_NEAR_DUP_SQL),
+    "emb_near_dup_hof": (_emb_near_dup_hof, _EMB_NEAR_DUP_SQL),
+    "image_meta": (_image_meta, _IMAGE_META_SQL),
+    "png_meta": (_png_meta, _PNG_META_SQL),
+    "webp_meta": (_webp_meta, _WEBP_META_SQL),
+    "mp3_meta": (_mp3_meta, _MP3_META_SQL),
+    "png_resize": (_png_resize, _PNG_RESIZE_SQL),
+    "png_dialects": (_png_dialects, _PNG_DIALECTS_SQL),
+    "jpeg_resize": (_jpeg_resize, _JPEG_RESIZE_SQL),
+    "jpeg_progressive": (_jpeg_progressive, _JPEG_PROGRESSIVE_SQL),
+    "gif_meta": (_gif_meta, _GIF_META_SQL),
+    "jpeg_meta": (_jpeg_meta, _JPEG_META_SQL),
+    "wav_meta": (_wav_meta, _WAV_META_SQL),
+    "mp4_frames": (_mp4_frames, _MP4_FRAMES_SQL),
+    "image_resize": (_image_resize, _IMAGE_RESIZE_SQL),
+    "video_frames": (_video_frames, _VIDEO_FRAMES_SQL),
+    "video_frame_ocr": (_video_frame_ocr, _VIDEO_FRAME_OCR_SQL),
+    "video_mjpeg_ocr": (_video_mjpeg_ocr, _VIDEO_MJPEG_OCR_SQL),
+    "avi_mjpeg_ocr": (_avi_mjpeg_ocr, _AVI_MJPEG_OCR_SQL),
+    "flac_meta": (_flac_meta, _FLAC_META_SQL),
+    "audio_meta": (_audio_meta, _AUDIO_META_SQL),
+    "audio_chunks": (_audio_chunks, _AUDIO_CHUNKS_SQL),
+    "extract_html_h1": (_extract_html_h1, _EXTRACT_HTML_SQL),
+    "html_charset_1252": (_html_charset_1252, _HTML_CHARSET_SQL),
+    "epub_extract": (_epub_extract, _EPUB_EXTRACT_SQL),
+    "rtf_extract": (_rtf_extract, _RTF_EXTRACT_SQL),
+    "extract_html_main": (_extract_html_main, _EXTRACT_HTML_MAIN_SQL),
+    "extract_segments_n": (_extract_segments_n, _EXTRACT_SEGMENTS_SQL),
+    "email_embed": (_email_embed, _EMAIL_EMBED_SQL),
+    "md_url_extract": (_md_url_extract, _MD_URL_SQL),
+    "strip_md_roundtrip": (_strip_md_roundtrip, _STRIP_MD_SQL),
+    "clean_text_roundtrip": (_clean_text_roundtrip, _CLEAN_TEXT_SQL),
+    "crawl_reachable": (_crawl_reachable, _CRAWL_SQL),
+    "parse_quality_metrics": (_parse_quality_metrics, _PARSE_QUALITY_SQL),
+    "bbox_range_join": (_bbox_range_join, _BBOX_RANGE_JOIN_SQL),
+    "low_yield_split": (_low_yield_split, _LOW_YIELD_SQL),
+    "quality_by_lang": (_quality_by_lang, _QUALITY_BY_LANG_SQL),
+    "pdf_word_boxes": (_pdf_word_boxes, _PDF_WORD_BOXES_SQL),
+    "pipeline_extract": (_pipeline_extract, _PIPELINE_EXTRACT_SQL),
+    "pdf_flate_extract": (_pdf_flate_extract, _PDF_FLATE_SQL),
+    "pdf_rc4_extract": (_pdf_rc4_extract, _PDF_RC4_SQL),
+    "pdf_aes_extract": (_pdf_aes_extract, _PDF_AES_SQL),
+    "pdf_aes256_extract": (_pdf_aes256_extract, _PDF_AES256_SQL),
+    "pdf_filters_extract": (_pdf_filters_extract, _PDF_FILTERS_SQL),
+    "bmp_tiff_meta": (_bmp_tiff_meta, _BMP_TIFF_SQL),
+    "canonical_urls": (_canonical_urls, _CANONICAL_SQL),
+    "pdf_cid_extract": (_pdf_cid_extract, _PDF_CID_SQL),
+    "pdf_ucs2_extract": (_pdf_ucs2_extract, _PDF_UCS2_SQL),
+    "pdf_cffcid_extract": (_pdf_cffcid_extract, _PDF_CFFCID_SQL),
+    "pdf_ttf_extract": (_pdf_ttf_extract, _PDF_TTF_SQL),
+    "pdf_cff_extract": (_pdf_cff_extract, _PDF_CFF_SQL),
+    "ocr_scanned": (_ocr_scanned, _OCR_SCANNED_SQL),
+    "ocr_glyph_scan": (_ocr_glyph_scan, _OCR_GLYPH_SCAN_SQL),
+    "ocr_mixed_case": (_ocr_mixed_case, _OCR_MIXED_CASE_SQL),
+    "ocr_noise_quarantine": (_ocr_noise_quarantine, _OCR_NOISE_QUARANTINE_SQL),
+    "pdf_g3_scan": (_pdf_g3_scan, _PDF_G3_SCAN_SQL),
+    "pdf_inline_image": (_pdf_inline_image, _PDF_INLINE_IMAGE_SQL),
+    "pdf_type3_extract": (_pdf_type3_extract, _PDF_TYPE3_SQL),
+    "pdf_jbig2_scan": (_pdf_jbig2_scan, _PDF_JBIG2_SCAN_SQL),
+    "pdf_jpx_scan": (_pdf_jpx_scan, _PDF_JPX_SCAN_SQL),
+    "tiff_ocr_scan": (_tiff_ocr_scan, _TIFF_OCR_SCAN_SQL),
+    "pdf_ocr_extract": (_pdf_ocr_extract, _PDF_OCR_EXTRACT_SQL),
+    "pdf_speed_arm": (_pdf_speed_arm, _PDF_SPEED_SQL),
+    "pii_redact_docs": (_pii_redact_docs, _PII_REDACT_SQL),
+    "para_dedup": (_para_dedup, _PARA_DEDUP_SQL),
+    "doc_repetition": (_doc_repetition, _DOC_REPETITION_SQL),
+    "url_normalize": (_url_normalize, _URL_NORMALIZE_SQL),
+    "doc_sample_stratified": (_doc_sample_stratified, _DOC_SAMPLE_SQL),
+    "token_pack_bins": (_token_pack_bins, _TOKEN_PACK_SQL),
+    "stream_dedup": (_stream_dedup, _STREAM_DEDUP_SQL),
+    "pdf_objstm_extract": (_pdf_objstm_extract, _PDF_OBJSTM_SQL),
+    "curation_pipeline": (_curation_pipeline, _CURATION_PIPELINE_SQL),
+    "charlm_familiarity": (_charlm_familiarity, _CHARLM_SQL),
+    "c4_filter": (_c4_filter, _C4_FILTER_SQL),
+    "dsir_importance": (_dsir_importance, _DSIR_SQL),
+    "unimax_alloc": (_unimax_alloc, _UNIMAX_ALLOC_SQL),
+    "unimax_sample": (_unimax_sample, _UNIMAX_SAMPLE_SQL),
+    "semdedup_keep": (_semdedup_keep, _SEMDEDUP_SQL),
+    "semdedup_greedy": (_semdedup_greedy, _SEMDEDUP_GREEDY_SQL),
+    "dup_span_removal": (_dup_span_removal, _DUP_SPAN_SQL),
+    "char_span_removal": (_char_span_removal, _CHAR_SPAN_SQL),
+    "char_span_winnow": (_char_span_winnow, _CHAR_WINNOW_SQL),
+    "tfidf_topk": (_tfidf_topk, _TFIDF_SQL),
+    "inverted_postings": (_inverted_postings, _INVERTED_SQL),
+    "warc_ingest": (_warc_ingest, _WARC_INGEST_SQL),
+    "warc_gz_ingest": (_warc_gz_ingest, _WARC_GZ_INGEST_SQL),
+    "wet_roundtrip": (_wet_roundtrip, _WET_ROUNDTRIP_SQL),
+    "robots_check": (_robots_check, _ROBOTS_CHECK_SQL),
+    "sitemap_frontier": (_sitemap_frontier, _SITEMAP_FRONTIER_SQL),
+    "sitemap_gz_parse": (_sitemap_gz_parse, _SITEMAP_GZ_PARSE_SQL),
+    "html_head_meta": (_html_head_meta, _HTML_HEAD_META_SQL),
+    "feed_discovery": (_feed_discovery, _FEED_DISCOVERY_SQL),
+    "html_jsonld": (_html_jsonld, _HTML_JSONLD_SQL),
+    "sitemap_index_parse": (_sitemap_index_parse, _SITEMAP_INDEX_SQL),
+    "crawl_schedule": (_crawl_schedule, _CRAWL_SCHEDULE_SQL),
+    "corpus_diff": (_corpus_diff, _CORPUS_DIFF_SQL),
+    "langid_confusion": (_langid_confusion, _LANGID_CONFUSION_SQL),
+    "train_val_split": (_train_val_split, _TRAIN_VAL_SPLIT_SQL),
+    "corpus_report": (_corpus_report, _CORPUS_REPORT_SQL),
+    "phrase_merges": (_phrase_merges, _PHRASE_MERGES_SQL),
+    "phrase_merges_sampled": (
+        _phrase_merges_sampled, _PHRASE_MERGES_SAMPLED_SQL),
+    "ccnet_buckets": (_ccnet_buckets, _CCNET_BUCKETS_SQL),
+    "anchor_index": (_anchor_index, _ANCHOR_INDEX_SQL),
+    "decontaminate": (_decontaminate, _DECONTAMINATE_SQL),
+    "mixture_rebalance": (_mixture_rebalance, _MIXTURE_REBALANCE_SQL),
+    "chunk_windows": (_chunk_windows, _CHUNK_WINDOWS_SQL),
+    "link_pagerank": (_link_pagerank, _LINK_PAGERANK_SQL),
+    "corpus_percentiles": (_corpus_percentiles, _CORPUS_PERCENTILES_SQL),
+    "events_session_window": (
+        _events_session_window, _EVENTS_SESSION_WINDOW_SQL),
+    "events_funnel": (_events_funnel, _EVENTS_FUNNEL_SQL),
+    "events_rolling_7d": (_events_rolling_7d, _EVENTS_ROLLING_SQL),
+    "sales_rollup": (_sales_rollup, _SALES_ROLLUP_SQL),
+    "orders_pivot": (_orders_pivot, _ORDERS_PIVOT_SQL),
+    "word_count_top": (_word_count_top, _WORD_COUNT_SQL),
+    "cms_token_freq": (_cms_token_freq, _CMS_TOKEN_FREQ_SQL),
+    "bloom_url_filter": (_bloom_url_filter, _BLOOM_URL_SQL),
+    "hll_doc_registers": (_hll_doc_registers, _HLL_REGISTERS_SQL),
+    "z_order_layout": (_z_order_layout, _Z_ORDER_SQL),
+    "customer_setops": (_customer_setops, _CUSTOMER_SETOPS_SQL),
+    "price_quantity_corr": (_price_quantity_corr, _PRICE_QTY_CORR_SQL),
+    "customer_balance_deciles": (
+        _customer_balance_deciles, _CUSTOMER_DECILES_SQL),
+}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q1_pricing_summary": _q1,
-        "q3_shipping_priority": _q3,
-        "q4_order_priority": _q4,
-        "q5_local_suppliers": _q5,
-        "q6_forecast_revenue": _q6,
-        "q10_returned_items": _q10,
-        "q12_shipmode": _q12,
-        "q14_type_share": _q14_type_share,
-        "q18_large_volume": _q18,
-        "q19_discounted_revenue": _q19,
-        "q7_volume_shipping": _q7_volume_shipping,
-        "q8_market_share": _q8_market_share,
-        "q16_supplier_cnt": _q16_supplier_cnt,
-        "q20_small_part_suppliers": _q20_small_part_suppliers,
-        "q13_customer_distribution": _q13_customer_distribution,
-        "q17_small_quantity_revenue": _q17_small_quantity_revenue,
-        "q21_waiting_supplier": _q21_waiting_supplier,
-        "q22_global_sales_opportunity": _q22_global_sales_opportunity,
-        "top_customers": _top_customers,
-        "supplier_rank": _supplier_rank,
-        "events_daily": _events_daily,
-        "events_sessions": _events_sessions,
-        "events_json": _events_json,
-        "sessions_closed": _sessions_closed,
-        "docs_by_lang": _docs_by_lang,
-        "doc_token_stats": _doc_token_stats,
-        "doc_bpe_tokens": _doc_bpe_tokens,
-        "doc_quality": _doc_quality,
-        "doc_langid": _doc_langid,
-        "doc_fingerprint": _doc_fingerprint,
-        "doc_winnow": _doc_winnow,
-        "gopher_filters": _gopher_filters,
-        "quality_classifier": _quality_classifier,
-        "exact_dup_groups": _exact_dup_groups,
-        "exact_dedup_keepers": _exact_dedup_keepers,
-        "events_windowed": _events_windowed,
-        "ngram_jaccard_adjacent": _ngram_jaccard_adjacent,
-        "minhash_sample": _minhash_sample,
-        "minhash_band_pairs": _minhash_band_pairs,
-        "dup_clusters": _dup_clusters,
-        "dedup_keep_list": _dedup_keep_list,
-        "simhash_pairs": _simhash_pairs,
-        "ann_cosine_topk": _ann_cosine_topk,
-        "ann_ivf_topk": _ann_ivf_topk,
-        "ann_sq8_topk": _ann_sq8_topk,
-        "ann_ivfpq_topk": _ann_ivfpq_topk,
-        "emb_near_dup": _emb_near_dup,
-        "emb_near_dup_hof": _emb_near_dup_hof,
-        "image_meta": _image_meta,
-        "png_meta": _png_meta,
-        "webp_meta": _webp_meta,
-        "mp3_meta": _mp3_meta,
-        "png_resize": _png_resize,
-        "png_dialects": _png_dialects,
-        "jpeg_resize": _jpeg_resize,
-        "jpeg_progressive": _jpeg_progressive,
-        "gif_meta": _gif_meta,
-        "jpeg_meta": _jpeg_meta,
-        "wav_meta": _wav_meta,
-        "mp4_frames": _mp4_frames,
-        "image_resize": _image_resize,
-        "video_frames": _video_frames,
-        "video_frame_ocr": _video_frame_ocr,
-        "video_mjpeg_ocr": _video_mjpeg_ocr,
-        "avi_mjpeg_ocr": _avi_mjpeg_ocr,
-        "flac_meta": _flac_meta,
-        "audio_meta": _audio_meta,
-        "audio_chunks": _audio_chunks,
-        "extract_html_h1": _extract_html_h1,
-        "html_charset_1252": _html_charset_1252,
-        "epub_extract": _epub_extract,
-        "rtf_extract": _rtf_extract,
-        "extract_html_main": _extract_html_main,
-        "extract_segments_n": _extract_segments_n,
-        "email_embed": _email_embed,
-        "md_url_extract": _md_url_extract,
-        "strip_md_roundtrip": _strip_md_roundtrip,
-        "clean_text_roundtrip": _clean_text_roundtrip,
-        "crawl_reachable": _crawl_reachable,
-        "parse_quality_metrics": _parse_quality_metrics,
-        "bbox_range_join": _bbox_range_join,
-        "low_yield_split": _low_yield_split,
-        "quality_by_lang": _quality_by_lang,
-        "pdf_word_boxes": _pdf_word_boxes,
-        "pipeline_extract": _pipeline_extract,
-        "pdf_flate_extract": _pdf_flate_extract,
-        "pdf_rc4_extract": _pdf_rc4_extract,
-        "pdf_aes_extract": _pdf_aes_extract,
-        "pdf_aes256_extract": _pdf_aes256_extract,
-        "pdf_filters_extract": _pdf_filters_extract,
-        "bmp_tiff_meta": _bmp_tiff_meta,
-        "canonical_urls": _canonical_urls,
-        "pdf_cid_extract": _pdf_cid_extract,
-        "pdf_ucs2_extract": _pdf_ucs2_extract,
-        "pdf_cffcid_extract": _pdf_cffcid_extract,
-        "pdf_ttf_extract": _pdf_ttf_extract,
-        "pdf_cff_extract": _pdf_cff_extract,
-        "ocr_scanned": _ocr_scanned,
-        "ocr_glyph_scan": _ocr_glyph_scan,
-        "ocr_mixed_case": _ocr_mixed_case,
-        "ocr_noise_quarantine": _ocr_noise_quarantine,
-        "pdf_g3_scan": _pdf_g3_scan,
-        "pdf_inline_image": _pdf_inline_image,
-        "pdf_type3_extract": _pdf_type3_extract,
-        "pdf_jbig2_scan": _pdf_jbig2_scan,
-        "pdf_jpx_scan": _pdf_jpx_scan,
-        "tiff_ocr_scan": _tiff_ocr_scan,
-        "pdf_ocr_extract": _pdf_ocr_extract,
-        "pdf_speed_arm": _pdf_speed_arm,
-        "pii_redact_docs": _pii_redact_docs,
-        "para_dedup": _para_dedup,
-        "doc_repetition": _doc_repetition,
-        "url_normalize": _url_normalize,
-        "doc_sample_stratified": _doc_sample_stratified,
-        "token_pack_bins": _token_pack_bins,
-        "stream_dedup": _stream_dedup,
-        "pdf_objstm_extract": _pdf_objstm_extract,
-        "curation_pipeline": _curation_pipeline,
-        "charlm_familiarity": _charlm_familiarity,
-        "c4_filter": _c4_filter,
-        "dsir_importance": _dsir_importance,
-        "unimax_alloc": _unimax_alloc,
-        "unimax_sample": _unimax_sample,
-        "semdedup_keep": _semdedup_keep,
-        "semdedup_greedy": _semdedup_greedy,
-        "dup_span_removal": _dup_span_removal,
-        "char_span_removal": _char_span_removal,
-        "char_span_winnow": _char_span_winnow,
-        "tfidf_topk": _tfidf_topk,
-        "inverted_postings": _inverted_postings,
-        "warc_ingest": _warc_ingest,
-        "warc_gz_ingest": _warc_gz_ingest,
-        "wet_roundtrip": _wet_roundtrip,
-        "robots_check": _robots_check,
-        "sitemap_frontier": _sitemap_frontier,
-        "sitemap_gz_parse": _sitemap_gz_parse,
-        "html_head_meta": _html_head_meta,
-        "feed_discovery": _feed_discovery,
-        "html_jsonld": _html_jsonld,
-        "sitemap_index_parse": _sitemap_index_parse,
-        "crawl_schedule": _crawl_schedule,
-        "corpus_diff": _corpus_diff,
-        "langid_confusion": _langid_confusion,
-        "train_val_split": _train_val_split,
-        "corpus_report": _corpus_report,
-        "phrase_merges": _phrase_merges,
-        "phrase_merges_sampled": _phrase_merges_sampled,
-        "ccnet_buckets": _ccnet_buckets,
-        "anchor_index": _anchor_index,
-        "decontaminate": _decontaminate,
-        "mixture_rebalance": _mixture_rebalance,
-        "chunk_windows": _chunk_windows,
-        "link_pagerank": _link_pagerank,
-        "corpus_percentiles": _corpus_percentiles,
-        "events_session_window": _events_session_window,
-        "events_funnel": _events_funnel,
-        "events_rolling_7d": _events_rolling_7d,
-        "sales_rollup": _sales_rollup,
-        "orders_pivot": _orders_pivot,
-        "word_count_top": _word_count_top,
-        "cms_token_freq": _cms_token_freq,
-        "bloom_url_filter": _bloom_url_filter,
-        "hll_doc_registers": _hll_doc_registers,
-        "z_order_layout": _z_order_layout,
-        "customer_setops": _customer_setops,
-        "price_quantity_corr": _price_quantity_corr,
-        "customer_balance_deciles": _customer_balance_deciles,
-    }
+    return {name: build for name, (build, _) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "q1_pricing_summary": _Q1_SQL,
-        "q3_shipping_priority": _Q3_SQL,
-        "q4_order_priority": _Q4_SQL,
-        "q5_local_suppliers": _Q5_SQL,
-        "q6_forecast_revenue": _Q6_SQL,
-        "q10_returned_items": _Q10_SQL,
-        "q12_shipmode": _Q12_SQL,
-        "q14_type_share": _Q14_SQL,
-        "q18_large_volume": _Q18_SQL,
-        "q19_discounted_revenue": _Q19_SQL,
-        "q7_volume_shipping": _Q7_SQL,
-        "q8_market_share": _Q8_SQL,
-        "q16_supplier_cnt": _Q16_SQL,
-        "q20_small_part_suppliers": _Q20_SQL,
-        "q13_customer_distribution": _Q13_SQL,
-        "q17_small_quantity_revenue": _Q17_SQL,
-        "q21_waiting_supplier": _Q21_SQL,
-        "q22_global_sales_opportunity": _Q22_SQL,
-        "top_customers": _TOP_CUST_SQL,
-        "supplier_rank": _SUPPLIER_RANK_SQL,
-        "events_daily": _EVENTS_DAILY_SQL,
-        "events_sessions": _EVENTS_SESSIONS_SQL,
-        "events_json": _EVENTS_JSON_SQL,
-        "sessions_closed": _SESSIONS_CLOSED_SQL,
-        "docs_by_lang": _DOCS_BY_LANG_SQL,
-        "doc_token_stats": _DOC_TOKEN_STATS_SQL,
-        "doc_bpe_tokens": _DOC_BPE_SQL,
-        "doc_quality": _DOC_QUALITY_SQL,
-        "doc_langid": _DOC_LANGID_SQL,
-        "doc_fingerprint": _DOC_FINGERPRINT_SQL,
-        "doc_winnow": _DOC_WINNOW_SQL,
-        "gopher_filters": _GOPHER_SQL,
-        "quality_classifier": _QUALITY_CLASSIFIER_SQL,
-        "exact_dup_groups": _EXACT_DUP_SQL,
-        "exact_dedup_keepers": _EXACT_DEDUP_SQL,
-        "events_windowed": _EVENTS_WINDOWED_SQL,
-        "ngram_jaccard_adjacent": _NGRAM_JACCARD_SQL,
-        "minhash_sample": _MINHASH_SAMPLE_SQL,
-        "minhash_band_pairs": _MINHASH_PAIRS_SQL,
-        "dup_clusters": _DUP_CLUSTERS_SQL,
-        "dedup_keep_list": _DEDUP_KEEP_SQL,
-        "simhash_pairs": _SIMHASH_PAIRS_SQL,
-        "ann_cosine_topk": _ANN_COSINE_SQL,
-        "ann_ivf_topk": _ANN_IVF_SQL,
-        "ann_sq8_topk": _ANN_SQ8_SQL,
-        "ann_ivfpq_topk": _ANN_IVFPQ_SQL,
-        "emb_near_dup": _EMB_NEAR_DUP_SQL,
-        "emb_near_dup_hof": _EMB_NEAR_DUP_SQL,
-        "image_meta": _IMAGE_META_SQL,
-        "png_meta": _PNG_META_SQL,
-        "webp_meta": _WEBP_META_SQL,
-        "mp3_meta": _MP3_META_SQL,
-        "png_resize": _PNG_RESIZE_SQL,
-        "png_dialects": _PNG_DIALECTS_SQL,
-        "jpeg_resize": _JPEG_RESIZE_SQL,
-        "jpeg_progressive": _JPEG_PROGRESSIVE_SQL,
-        "gif_meta": _GIF_META_SQL,
-        "jpeg_meta": _JPEG_META_SQL,
-        "wav_meta": _WAV_META_SQL,
-        "mp4_frames": _MP4_FRAMES_SQL,
-        "image_resize": _IMAGE_RESIZE_SQL,
-        "video_frames": _VIDEO_FRAMES_SQL,
-        "video_frame_ocr": _VIDEO_FRAME_OCR_SQL,
-        "video_mjpeg_ocr": _VIDEO_MJPEG_OCR_SQL,
-        "avi_mjpeg_ocr": _AVI_MJPEG_OCR_SQL,
-        "flac_meta": _FLAC_META_SQL,
-        "audio_meta": _AUDIO_META_SQL,
-        "audio_chunks": _AUDIO_CHUNKS_SQL,
-        "extract_html_h1": _EXTRACT_HTML_SQL,
-        "html_charset_1252": _HTML_CHARSET_SQL,
-        "epub_extract": _EPUB_EXTRACT_SQL,
-        "rtf_extract": _RTF_EXTRACT_SQL,
-        "extract_html_main": _EXTRACT_HTML_MAIN_SQL,
-        "extract_segments_n": _EXTRACT_SEGMENTS_SQL,
-        "email_embed": _EMAIL_EMBED_SQL,
-        "md_url_extract": _MD_URL_SQL,
-        "strip_md_roundtrip": _STRIP_MD_SQL,
-        "clean_text_roundtrip": _CLEAN_TEXT_SQL,
-        "crawl_reachable": _CRAWL_SQL,
-        "parse_quality_metrics": _PARSE_QUALITY_SQL,
-        "bbox_range_join": _BBOX_RANGE_JOIN_SQL,
-        "low_yield_split": _LOW_YIELD_SQL,
-        "quality_by_lang": _QUALITY_BY_LANG_SQL,
-        "pdf_word_boxes": _PDF_WORD_BOXES_SQL,
-        "pipeline_extract": _PIPELINE_EXTRACT_SQL,
-        "pdf_flate_extract": _PDF_FLATE_SQL,
-        "pdf_rc4_extract": _PDF_RC4_SQL,
-        "pdf_aes_extract": _PDF_AES_SQL,
-        "pdf_aes256_extract": _PDF_AES256_SQL,
-        "pdf_filters_extract": _PDF_FILTERS_SQL,
-        "bmp_tiff_meta": _BMP_TIFF_SQL,
-        "canonical_urls": _CANONICAL_SQL,
-        "pdf_cid_extract": _PDF_CID_SQL,
-        "pdf_ucs2_extract": _PDF_UCS2_SQL,
-        "pdf_cffcid_extract": _PDF_CFFCID_SQL,
-        "pdf_ttf_extract": _PDF_TTF_SQL,
-        "pdf_cff_extract": _PDF_CFF_SQL,
-        "ocr_scanned": _OCR_SCANNED_SQL,
-        "ocr_glyph_scan": _OCR_GLYPH_SCAN_SQL,
-        "ocr_mixed_case": _OCR_MIXED_CASE_SQL,
-        "ocr_noise_quarantine": _OCR_NOISE_QUARANTINE_SQL,
-        "pdf_g3_scan": _PDF_G3_SCAN_SQL,
-        "pdf_inline_image": _PDF_INLINE_IMAGE_SQL,
-        "pdf_type3_extract": _PDF_TYPE3_SQL,
-        "pdf_jbig2_scan": _PDF_JBIG2_SCAN_SQL,
-        "pdf_jpx_scan": _PDF_JPX_SCAN_SQL,
-        "tiff_ocr_scan": _TIFF_OCR_SCAN_SQL,
-        "pdf_ocr_extract": _PDF_OCR_EXTRACT_SQL,
-        "pdf_speed_arm": _PDF_SPEED_SQL,
-        "pii_redact_docs": _PII_REDACT_SQL,
-        "para_dedup": _PARA_DEDUP_SQL,
-        "doc_repetition": _DOC_REPETITION_SQL,
-        "url_normalize": _URL_NORMALIZE_SQL,
-        "doc_sample_stratified": _DOC_SAMPLE_SQL,
-        "token_pack_bins": _TOKEN_PACK_SQL,
-        "stream_dedup": _STREAM_DEDUP_SQL,
-        "pdf_objstm_extract": _PDF_OBJSTM_SQL,
-        "curation_pipeline": _CURATION_PIPELINE_SQL,
-        "charlm_familiarity": _CHARLM_SQL,
-        "c4_filter": _C4_FILTER_SQL,
-        "dsir_importance": _DSIR_SQL,
-        "unimax_alloc": _UNIMAX_ALLOC_SQL,
-        "unimax_sample": _UNIMAX_SAMPLE_SQL,
-        "semdedup_keep": _SEMDEDUP_SQL,
-        "semdedup_greedy": _SEMDEDUP_GREEDY_SQL,
-        "dup_span_removal": _DUP_SPAN_SQL,
-        "char_span_removal": _CHAR_SPAN_SQL,
-        "char_span_winnow": _CHAR_WINNOW_SQL,
-        "tfidf_topk": _TFIDF_SQL,
-        "inverted_postings": _INVERTED_SQL,
-        "warc_ingest": _WARC_INGEST_SQL,
-        "warc_gz_ingest": _WARC_GZ_INGEST_SQL,
-        "wet_roundtrip": _WET_ROUNDTRIP_SQL,
-        "robots_check": _ROBOTS_CHECK_SQL,
-        "sitemap_frontier": _SITEMAP_FRONTIER_SQL,
-        "sitemap_gz_parse": _SITEMAP_GZ_PARSE_SQL,
-        "html_head_meta": _HTML_HEAD_META_SQL,
-        "feed_discovery": _FEED_DISCOVERY_SQL,
-        "html_jsonld": _HTML_JSONLD_SQL,
-        "sitemap_index_parse": _SITEMAP_INDEX_SQL,
-        "crawl_schedule": _CRAWL_SCHEDULE_SQL,
-        "corpus_diff": _CORPUS_DIFF_SQL,
-        "langid_confusion": _LANGID_CONFUSION_SQL,
-        "train_val_split": _TRAIN_VAL_SPLIT_SQL,
-        "corpus_report": _CORPUS_REPORT_SQL,
-        "phrase_merges": _PHRASE_MERGES_SQL,
-        "phrase_merges_sampled": _PHRASE_MERGES_SAMPLED_SQL,
-        "ccnet_buckets": _CCNET_BUCKETS_SQL,
-        "anchor_index": _ANCHOR_INDEX_SQL,
-        "decontaminate": _DECONTAMINATE_SQL,
-        "mixture_rebalance": _MIXTURE_REBALANCE_SQL,
-        "chunk_windows": _CHUNK_WINDOWS_SQL,
-        "link_pagerank": _LINK_PAGERANK_SQL,
-        "corpus_percentiles": _CORPUS_PERCENTILES_SQL,
-        "events_session_window": _EVENTS_SESSION_WINDOW_SQL,
-        "events_funnel": _EVENTS_FUNNEL_SQL,
-        "events_rolling_7d": _EVENTS_ROLLING_SQL,
-        "sales_rollup": _SALES_ROLLUP_SQL,
-        "orders_pivot": _ORDERS_PIVOT_SQL,
-        "word_count_top": _WORD_COUNT_SQL,
-        "cms_token_freq": _CMS_TOKEN_FREQ_SQL,
-        "bloom_url_filter": _BLOOM_URL_SQL,
-        "hll_doc_registers": _HLL_REGISTERS_SQL,
-        "z_order_layout": _Z_ORDER_SQL,
-        "customer_setops": _CUSTOMER_SETOPS_SQL,
-        "price_quantity_corr": _PRICE_QTY_CORR_SQL,
-        "customer_balance_deciles": _CUSTOMER_DECILES_SQL,
-    }
+    return {name: sql for name, (_, sql) in _REGISTRY.items()}

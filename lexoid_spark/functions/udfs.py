@@ -60,12 +60,6 @@ def html_main_to_md_udf(payloads: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-@F.pandas_udf(RAW_ERR_TYPE)
-def csv_to_md_udf(payloads: pd.Series) -> pd.DataFrame:
-    rows = [_guarded(csv_to_md)(p) for p in payloads]
-    return pd.DataFrame(rows)
-
-
 def _txt_decode(payload) -> str:
     from lexoid_spark.kernels.text_ops import decode_payload
 
@@ -253,14 +247,6 @@ def make_extract_doc_map(pdf_framework: str = "pdfplumber",
             yield pd.DataFrame(out)
 
     return extract_doc_map
-
-
-# default kernel: full-layout PDF arm. mapInPandas kernel:
-# (url, doctype, html) → extracted doc rows. Single pass over the scan —
-# no per-branch re-reads, no shuffle: the whole static-parse path runs
-# where the bytes are. Errors become quarantine rows (error != NULL),
-# never task failures.
-extract_doc_map = make_extract_doc_map("pdfplumber")
 
 
 # --- PDF page explosion (mapInPandas: variable row count out) ---------------

@@ -12,15 +12,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _size_col(df: DataFrame, payload_col: str):
-    """Byte size of the payload: numeric columns pass through (a
-    precomputed ``n_bytes``), binary/string payloads get ``length()``.
-    (``F.length`` on an int would count its decimal digits.)"""
-    dtype = dict(df.dtypes).get(payload_col, "binary")
+    """Byte size of the payload: numeric columns of any type pass
+    through (a precomputed ``n_bytes``), binary/string payloads get
+    ``length()``. (``F.length`` on a number would count the digits of
+    its printed form.)"""
+    dtype = {f.name: f.dataType for f in df.schema.fields}.get(payload_col)
     c = F.col(payload_col)
-    return c if dtype in ("int", "bigint", "long", "double") else F.length(c)
+    return c if isinstance(dtype, T.NumericType) else F.length(c)
 
 
 def repartition_by_size(df: DataFrame, num_partitions: int,

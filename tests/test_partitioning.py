@@ -20,6 +20,14 @@ def test_size_col_numeric_passthrough(spark):
     )
     got = df.select(_size_col(df, "n_bytes").alias("s")).collect()
     assert sorted(r["s"] for r in got) == [999, 1500000]
+    # every numeric type passes through, not only int/bigint/double
+    for dtype, big in (("decimal(20,0)", 1500000), ("float", 1500000),
+                       ("smallint", 30000)):
+        tdf = spark.createDataFrame(
+            [("a", big), ("b", 999)], "url string, n_bytes long"
+        ).select("url", F.col("n_bytes").cast(dtype).alias("n_bytes"))
+        got = tdf.select(_size_col(tdf, "n_bytes").alias("s")).collect()
+        assert sorted(int(r["s"]) for r in got) == [999, big], dtype
     bdf = spark.createDataFrame([("a", b"xyz")], "url string, html binary")
     assert bdf.select(_size_col(bdf, "html").alias("s")).collect()[0]["s"] == 3
 

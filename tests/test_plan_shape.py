@@ -404,3 +404,25 @@ def test_phrase_merges_sampled_apply_is_fused(spark):
     assert "CartesianProduct" not in plan
     assert "Join" not in plan          # apply is join-free now
     assert plan.count("regexp_replace") >= 2  # fused chain, one Project
+
+
+@pytest.mark.parametrize("name", ["q1_pricing_summary", "pdf_flate_extract"])
+def test_sort_tail_is_samplerless_single_partition(spark, name):
+    """The `_srt` tail: a round-robin Exchange to SinglePartition plus
+    a local Sort. A range exchange (`orderBy`) would run a boundary
+    sampler that executes the child a second time, and a pinned result
+    would add an InMemoryRelation. Checked on the executed plan of one
+    relational tail and one Python-kernel tail; the kernel query keeps
+    exactly the one InMemoryRelation that `_materialize` puts on its
+    generated pages."""
+    import re
+
+    import __spark_entry__ as em
+
+    df = em.queries()[name](spark, "/root/testdata/sf0.001")
+    df.collect()
+    plan = _formatted(df)
+    assert "SinglePartition" in plan
+    assert "rangepartitioning" not in plan.lower()
+    n_cached = len(re.findall(r"^\(\d+\) InMemoryRelation$", plan, re.M))
+    assert n_cached == (1 if name == "pdf_flate_extract" else 0)
