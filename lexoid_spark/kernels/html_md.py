@@ -28,6 +28,14 @@ Deliberate upgrades over raw markdownify (documented, pinned in goldens):
 This is a brand-new implementation: a minimal DOM built with stdlib
 ``html.parser`` plus a recursive emitter. No code is taken from
 markdownify or the reference.
+
+Linear time: each node's children are emitted into a list and joined
+once (:func:`_join_blocks` keeps the trailing newline run as a count,
+never re-stripping the text built so far); every element records its
+position in its parent (``idx``), so sibling lookups scan only the
+whitespace between neighbours; ``<ol>`` numbers are assigned in one pass
+per list. Cost grows with page size times nesting depth, never with the
+number of siblings squared.
 """
 
 from __future__ import annotations
@@ -68,13 +76,17 @@ P_CLOSERS = frozenset(
 
 
 class Node:
-    __slots__ = ("name", "attrs", "children", "parent")
+    # idx: position in parent.children (set on append, renumbered by
+    # strip_boilerplate); ordinal: <li> number within its <ol>
+    __slots__ = ("name", "attrs", "children", "parent", "idx", "ordinal")
 
     def __init__(self, name, attrs=None, parent=None):
         self.name = name  # None => text node; "" => document root
         self.attrs = attrs or {}
         self.children = []
         self.parent = parent
+        self.idx = 0
+        self.ordinal = 0
 
     def get(self, key, default=None):
         return self.attrs.get(key, default)
@@ -99,6 +111,11 @@ class _DomBuilder(HTMLParser):
     def _cur(self):
         return self.stack[-1]
 
+    def _append(self, node):
+        siblings = node.parent.children
+        node.idx = len(siblings)
+        siblings.append(node)
+
     def handle_starttag(self, tag, attrs):
         if self._drop_depth:
             if tag not in VOID_TAGS:
@@ -109,8 +126,7 @@ class _DomBuilder(HTMLParser):
                 self._drop_depth = 1
             return
         if tag in VOID_TAGS:
-            node = Node(tag, dict(attrs), self._cur())
-            self._cur().children.append(node)
+            self._append(Node(tag, dict(attrs), self._cur()))
             return
         # implicit </p> / </li> handling
         if tag in P_CLOSERS:
@@ -127,7 +143,7 @@ class _DomBuilder(HTMLParser):
             while self._cur().name in ("td", "th", "tr"):
                 self.stack.pop()
         node = Node(tag, dict(attrs), self._cur())
-        self._cur().children.append(node)
+        self._append(node)
         self.stack.append(node)
 
     def handle_startendtag(self, tag, attrs):
@@ -135,8 +151,7 @@ class _DomBuilder(HTMLParser):
             return
         if tag in DROP_TAGS:
             return
-        node = Node(tag, dict(attrs), self._cur())
-        self._cur().children.append(node)
+        self._append(Node(tag, dict(attrs), self._cur()))
 
     def handle_endtag(self, tag):
         if self._drop_depth:
@@ -193,26 +208,100 @@ def _has_ancestor(node, names):
     return False
 
 
-def _prev_elem_sibling(node):
-    sibs = node.parent.children if node.parent else []
-    idx = sibs.index(node)
-    for s in reversed(sibs[:idx]):
-        if isinstance(s, Node):
-            return s
-        if isinstance(s, Text) and s.data.strip():
+def _prev_sibling(node):
+    """Nearest earlier sibling that is an element or non-blank text."""
+    sibs = node.parent.children
+    for i in range(node.idx - 1, -1, -1):
+        s = sibs[i]
+        if isinstance(s, Node) or s.data.strip():
             return s
     return None
 
 
-def _next_elem_sibling(node):
-    sibs = node.parent.children if node.parent else []
-    idx = sibs.index(node)
-    for s in sibs[idx + 1:]:
-        if isinstance(s, Node):
-            return s
-        if isinstance(s, Text) and s.data.strip():
+def _next_sibling(node):
+    """Nearest later sibling that is an element or non-blank text."""
+    sibs = node.parent.children
+    for i in range(node.idx + 1, len(sibs)):
+        s = sibs[i]
+        if isinstance(s, Node) or s.data.strip():
             return s
     return None
+
+
+def _drop_boundary_ws(children):
+    """Drop whitespace-only text that is the first or last child or sits
+    next to a list/table element (the nested-whitespace rule)."""
+    for el in children:
+        if isinstance(el, Text) and not el.data.strip():
+            break
+    else:
+        return children  # no whitespace-only text to consider
+    last = len(children) - 1
+    next_node = [None] * len(children)  # nearest later Node, one reverse scan
+    nxt = None
+    for i in range(last, -1, -1):
+        next_node[i] = nxt
+        if isinstance(children[i], Node):
+            nxt = children[i]
+    kept = []
+    for i, el in enumerate(children):
+        if isinstance(el, Text) and el.data.strip() == "":
+            prev_n = kept[-1] if kept and isinstance(kept[-1], Node) else None
+            nxt = next_node[i]
+            if (
+                i == 0
+                or i == last
+                or (prev_n is not None and prev_n.name in NESTED_TAGS)
+                or (nxt is not None and nxt.name in NESTED_TAGS)
+            ):
+                continue
+        kept.append(el)
+    return kept
+
+
+def _li_tail_texts(children):
+    """Texts of an <li> with no later significant sibling, or a nested
+    list next: they lose trailing whitespace."""
+    tails = set()
+    nxt = None
+    for el in reversed(children):
+        if isinstance(el, Text):
+            if nxt is None or (isinstance(nxt, Node) and nxt.name in ("ul", "ol")):
+                tails.add(el)
+            if el.data.strip():
+                nxt = el
+        else:
+            nxt = el
+    return tails
+
+
+def _join_blocks(pieces):
+    """Concatenate ``(text, is_block)`` pieces in one pass.
+
+    Text pieces append verbatim. A block's leading newline run and the
+    accumulated trailing run merge into ``max(left, right)`` newlines.
+    The trailing run is held as a count, never stripped off a string.
+    """
+    if len(pieces) == 1:
+        return pieces[0][0]  # merging into "" keeps any piece verbatim
+    parts = []
+    nl = 0  # trailing newline run of the output so far
+    for text, is_block in pieces:
+        if is_block:
+            body = text.lstrip("\n")
+            nl = max(nl, len(text) - len(body))
+            text = body
+        body = text.rstrip("\n")
+        if body:
+            if nl:
+                parts.append("\n" * nl)
+            parts.append(body)
+            nl = len(text) - len(body)
+        else:
+            nl += len(text)
+    if nl:
+        parts.append("\n" * nl)
+    return "".join(parts)
 
 
 class MarkdownEmitter:
@@ -225,39 +314,25 @@ class MarkdownEmitter:
 
     # -- core recursion (block newline-run merging = max(left, right))
     def _children_text(self, node: Node, as_inline: bool) -> str:
-        is_heading_or_cell = node.name in _HEADING_NAMES or node.name in ("td", "th")
-        child_inline = as_inline or is_heading_or_cell
-
-        children = list(node.children)
-        if node.name in NESTED_TAGS:
-            kept = []
-            for i, el in enumerate(children):
-                if isinstance(el, Text) and el.data.strip() == "":
-                    prev_n = kept[-1] if kept and isinstance(kept[-1], Node) else None
-                    nxt = next((c for c in children[i + 1:] if isinstance(c, Node)), None)
-                    boundary = (
-                        i == 0
-                        or i == len(children) - 1
-                        or (prev_n is not None and prev_n.name in NESTED_TAGS)
-                        or (nxt is not None and nxt.name in NESTED_TAGS)
-                    )
-                    if boundary:
-                        continue
-                kept.append(el)
-            children = kept
-
-        text = ""
+        children = node.children
+        if not children:
+            return ""
+        name = node.name
+        child_inline = as_inline or name in _HEADING_NAMES or name in ("td", "th")
+        if name in NESTED_TAGS:
+            children = _drop_boundary_ws(children)
+        tails = _li_tail_texts(children) if name == "li" else ()
+        n_items = 0
+        pieces = []
         for el in children:
             if isinstance(el, Text):
-                text += self._process_text(el)
+                pieces.append((self._process_text(el, el in tails), False))
             else:
-                left = text.rstrip("\n")
-                nl_left = len(text) - len(left)
-                nxt = self._process_tag(el, child_inline)
-                right = nxt.lstrip("\n")
-                nl_right = len(nxt) - len(right)
-                text = left + "\n" * max(nl_left, nl_right) + right
-        return text
+                if name == "ol" and el.name == "li":
+                    el.ordinal = n_items
+                    n_items += 1
+                pieces.append((self._process_tag(el, child_inline), True))
+        return _join_blocks(pieces)
 
     def _process_tag(self, node: Node, as_inline: bool) -> str:
         text = self._children_text(node, as_inline)
@@ -267,18 +342,18 @@ class MarkdownEmitter:
         return text  # unknown tags: transparent (div/span/section/...)
 
     # -- text nodes
-    def _process_text(self, el: Text) -> str:
+    def _process_text(self, el: Text, strip_tail: bool) -> str:
         text = el.data
         if not _has_ancestor(el, ("pre",)):
-            text = _NL_WS_RE.sub("\n", text)
-            text = _WS_RE.sub(" ", text)
+            # each sub is the identity when its guard fails
+            if "\n" in text or "\r" in text:
+                text = _NL_WS_RE.sub("\n", text)
+            if "\t" in text or "  " in text:
+                text = _WS_RE.sub(" ", text)
         if not _has_ancestor(el, _CODE_PARENTS):
             text = text.replace("*", r"\*").replace("_", r"\_")
-        parent = el.parent
-        if parent is not None and parent.name == "li":
-            nxt = _next_elem_sibling_text(el)
-            if nxt is None or (isinstance(nxt, Node) and nxt.name in ("ul", "ol")):
-                text = text.rstrip()
+        if strip_tail:
+            text = text.rstrip()
         return text
 
     # -- block elements
@@ -409,7 +484,7 @@ class MarkdownEmitter:
             p = p.parent
         if nested:
             return "\n" + _LINE_BEGIN_RE.sub("\t", text).rstrip()
-        nxt = _next_elem_sibling(node)
+        nxt = _next_sibling(node)
         before_paragraph = nxt is not None and not (
             isinstance(nxt, Node) and nxt.name in ("ul", "ol")
         )
@@ -422,13 +497,7 @@ class MarkdownEmitter:
                 start = int(parent.get("start", "1"))
             except (TypeError, ValueError):
                 start = 1
-            li_index = 0
-            for sib in parent.children:
-                if isinstance(sib, Node) and sib.name == "li":
-                    if sib is node:
-                        break
-                    li_index += 1
-            bullet = "%s." % (start + li_index)
+            bullet = "%s." % (start + node.ordinal)
         else:
             depth = -1
             p = node
@@ -453,9 +522,9 @@ class MarkdownEmitter:
         ]
         is_headrow = bool(cells) and all(c.name == "th" for c in cells)
         parent = node.parent
-        is_first = _prev_elem_sibling(node) is None
+        is_first = _prev_sibling(node) is None
         if is_first and parent is not None and parent.name in ("thead", "tbody"):
-            is_first = _prev_elem_sibling(parent) is None
+            is_first = _prev_sibling(parent) is None
         n = 0
         for c in cells:
             try:
@@ -479,17 +548,6 @@ class MarkdownEmitter:
         return " " + text.strip().replace("\n", " ") + " |" * colspan
 
     _c_th = _c_td
-
-
-def _next_elem_sibling_text(el):
-    sibs = el.parent.children if el.parent else []
-    idx = sibs.index(el)
-    for s in sibs[idx + 1:]:
-        if isinstance(s, Node):
-            return s
-        if isinstance(s, Text) and s.data.strip():
-            return s
-    return None
 
 
 _EMITTER = MarkdownEmitter()
@@ -517,6 +575,7 @@ def strip_boilerplate(root: Node) -> Node:
                 if _is_boilerplate(ch):
                     continue
                 prune(ch)
+                ch.idx = len(kept)
             kept.append(ch)
         node.children = kept
 

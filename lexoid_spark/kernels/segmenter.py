@@ -18,24 +18,24 @@ when a per-segment table is needed.
 from __future__ import annotations
 
 import re
+from collections import Counter
 from typing import List, Tuple
 
 _UNDERLINE_RE = re.compile(r"^[^\n]+\n-+$", re.MULTILINE)
-_HASH_LEVELS = ("#####", "####", "###", "##", "#")
+# a line opening with exactly 1-5 hashes then a space (six or more
+# hashes never match: the space cannot follow the fifth)
+_HASH_PREFIX_RE = re.compile(r"^(#{1,5}) ", re.MULTILINE)
 
 
 def find_dominant_heading_level(md: str) -> str:
     """Dominant heading pattern: ``'underline'`` or a hash prefix."""
     if len(_UNDERLINE_RE.findall(md)) > 1:
         return "underline"
-    counts = {}
-    for pattern in _HASH_LEVELS:
-        matches = re.findall(rf"^{pattern} .*$", md, re.MULTILINE)
-        if len(matches) > 1:
-            counts[pattern] = len(matches)
-    if not counts:
+    counts = Counter(_HASH_PREFIX_RE.findall(md))
+    repeated = [prefix for prefix, n in counts.items() if n > 1]
+    if not repeated:
         return "#"
-    return min(counts.keys(), key=len)
+    return min(repeated, key=len)
 
 
 def split_md_by_headings(md: str, heading_pattern: str) -> List[Tuple[str, str]]:

@@ -3,6 +3,7 @@
 10^12 arbitrary web documents: total functions over arbitrary bytes,
 deterministic output, segmentation that loses no content."""
 
+import re
 import string
 
 import pytest
@@ -10,9 +11,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from lexoid_spark.kernels.html_md import html_to_md
+from lexoid_spark.kernels.html_md import _join_blocks, html_to_md
 from lexoid_spark.kernels.pdf_md import sniff_doctype
-from lexoid_spark.kernels.segmenter import segment_md
+from lexoid_spark.kernels.segmenter import find_dominant_heading_level, segment_md
 from lexoid_spark.kernels.table_md import csv_to_md
 
 
@@ -56,6 +57,54 @@ def test_segmenter_loses_no_heading_content(md):
     assert isinstance(segs, list)
     for _section, content in segs:
         assert content in md or content.strip() in md or content == ""
+
+
+_newline_heavy = st.text(alphabet="\n\n\na b", max_size=12)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(_newline_heavy, st.booleans()), max_size=12))
+def test_join_blocks_matches_naive_fold(pieces):
+    """The emitter's one-pass join equals the string fold it replaced:
+    text appends; a block merges newline runs as max(left, right)."""
+    expected = ""
+    for text, is_block in pieces:
+        if is_block:
+            left = expected.rstrip("\n")
+            right = text.lstrip("\n")
+            n = max(len(expected) - len(left), len(text) - len(right))
+            expected = left + "\n" * n + right
+        else:
+            expected += text
+    assert _join_blocks(pieces) == expected
+
+
+def _dominant_level_spec(md):
+    """The six-regex rule: underline if repeated, else the shortest
+    hash prefix whose ``^{prefix} .*$`` lines occur more than once."""
+    if len(re.findall(r"^[^\n]+\n-+$", md, re.MULTILINE)) > 1:
+        return "underline"
+    counts = {}
+    for prefix in ("#####", "####", "###", "##", "#"):
+        matches = re.findall(rf"^{prefix} .*$", md, re.MULTILINE)
+        if len(matches) > 1:
+            counts[prefix] = len(matches)
+    return min(counts, key=len) if counts else "#"
+
+
+_heading_line = st.builds(
+    lambda hashes, sep, rest: "#" * hashes + sep + rest,
+    st.integers(0, 7),
+    st.sampled_from(["", " ", "  ", "\t"]),
+    st.text(alphabet="#- a\r", max_size=6),
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_heading_line, max_size=10))
+def test_dominant_heading_level_matches_spec(lines):
+    md = "\n".join(lines)
+    assert find_dominant_heading_level(md) == _dominant_level_spec(md)
 
 
 @settings(max_examples=100, deadline=None)
