@@ -10,6 +10,7 @@ task failures — the reference's retry decorators (``api.py:56-123``,
 
 from __future__ import annotations
 
+import time
 from typing import Iterator
 
 import pandas as pd
@@ -123,6 +124,12 @@ DOC_SCHEMA = T.StructType([
     T.StructField("error", T.StringType()),
 ])
 
+# the dispatch kernel's output: DOC_SCHEMA + the document's in-band
+# kernel time in µs (``_extract_one`` wall, also for a quarantined doc)
+TIMED_DOC_SCHEMA = T.StructType(
+    DOC_SCHEMA.fields + [T.StructField("kernel_us", T.LongType())]
+)
+
 
 def _extract_one(doctype: str, payload, pdf_framework: str = "pdfplumber",
                  html_main_content: bool = False):
@@ -221,16 +228,17 @@ def make_extract_doc_map(pdf_framework: str = "pdfplumber",
                          html_main_content: bool = False):
     """Factory for the dispatch kernel with the per-arm knobs bound
     (mapInPandas takes a fixed-signature function; the knobs ride the
-    closure, serialized once per task)."""
+    closure, serialized once per task). Output: ``TIMED_DOC_SCHEMA``."""
 
     def extract_doc_map(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
         for b in batches:
             out = {"url": [], "raw": [], "segments": [],
-                   "parser_used": [], "error": []}
+                   "parser_used": [], "error": [], "kernel_us": []}
             for url, doctype, payload in zip(
                     b["url"], b["doctype"], b["html"]):
+                t0 = time.perf_counter_ns()
                 try:
                     raw, segs, parser = _extract_one(
                         doctype, payload, pdf_framework,
@@ -244,6 +252,8 @@ def make_extract_doc_map(pdf_framework: str = "pdfplumber",
                 out["segments"].append(segs)
                 out["parser_used"].append(parser)
                 out["error"].append(err)
+                out["kernel_us"].append(
+                    (time.perf_counter_ns() - t0) // 1000)
             yield pd.DataFrame(out)
 
     return extract_doc_map

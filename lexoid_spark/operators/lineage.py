@@ -1,18 +1,24 @@
 """Per-partition lineage rows (north_rule D7 / SURVEY.md A10).
 
-A ``mapInPandas`` side-pass over any stage's output: one metrics row per
-physical partition — (run_id, partition_id, n_docs, n_bytes, n_errors,
-wall_ms). Written to the ``lineage`` sink so a 1000-executor run leaves
-an auditable per-partition trail and stragglers are measurable.
+A native aggregate over the dispatch kernel's ``docs`` frame (url, raw,
+error, kernel_us, …): one metrics row per physical partition —
+(partition_id, n_docs, n_bytes, n_errors, wall_ms) + run_id + ts.
+Written to the ``lineage`` sink so a 1000-executor run leaves an
+auditable per-partition trail and stragglers are measurable.
+
+  * ``n_docs``   rows extracted (null ``error``);
+  * ``n_errors`` rows quarantined (non-null ``error``);
+  * ``n_bytes``  Σ ``length(raw)`` — the extracted ``n_chars`` total;
+  * ``wall_ms``  Σ ``kernel_us`` // 1000 — the dispatch kernel's own
+    per-document time, carried in-band, so it measures the work (and
+    shows stragglers) rather than a re-read of a cached frame.
+
+JVM-only: ``groupBy(spark_partition_id(), …)`` with count_if/sum,
+partially aggregated map-side, so no Python-worker task runs.
 """
 
 from __future__ import annotations
 
-import time
-from typing import Iterator
-
-import pandas as pd
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -26,11 +32,10 @@ LINEAGE_SCHEMA = T.StructType([
 ])
 
 
-def lineage_rows(df: DataFrame, run_id: str,
-                 bytes_col: str = "n_chars",
-                 error_col: str = "error",
+def lineage_rows(docs: DataFrame, run_id: str,
                  group_col: str | None = None) -> DataFrame:
-    """Aggregate df into one lineage row per physical partition.
+    """Aggregate ``docs`` into one lineage row per physical partition
+    that holds rows (an empty input yields no row).
 
     With ``group_col`` (e.g. the resume bucket), one row per
     (partition, group value) instead — the job layer then writes
@@ -39,51 +44,19 @@ def lineage_rows(df: DataFrame, run_id: str,
     appending duplicates (the append-only variant double-counts
     n_docs/n_bytes for every replayed bucket).
     """
-    has_bytes = bytes_col in df.columns
-    has_err = error_col in df.columns
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t0 = time.monotonic()
-        # counters keyed by group value (single key None when ungrouped)
-        docs: dict = {}
-        nbytes: dict = {}
-        errs: dict = {}
-        for b in batches:
-            if group_col is None:
-                grouped = {None: b}
-            else:
-                grouped = dict(tuple(b.groupby(group_col, sort=False)))
-            for g, sub in grouped.items():
-                docs[g] = docs.get(g, 0) + len(sub)
-                if has_bytes:
-                    nbytes[g] = nbytes.get(g, 0) + int(
-                        sub[bytes_col].fillna(0).sum())
-                if has_err:
-                    errs[g] = errs.get(g, 0) + int(
-                        sub[error_col].notna().sum())
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        wall = int((time.monotonic() - t0) * 1000)
-        keys = list(docs) or ([] if group_col else [None])
-        out = pd.DataFrame({
-            "partition_id": [pid] * len(keys),
-            "n_docs": [docs.get(k, 0) for k in keys],
-            "n_bytes": [nbytes.get(k, 0) for k in keys],
-            "n_errors": [errs.get(k, 0) for k in keys],
-            "wall_ms": [wall] * len(keys),
-        })
-        if group_col is not None:
-            out[group_col] = keys
-        yield out
-
-    schema = LINEAGE_SCHEMA
-    if group_col is not None:
-        schema = T.StructType(
-            LINEAGE_SCHEMA.fields
-            + [T.StructField(group_col, df.schema[group_col].dataType)]
-        )
+    keys = ["partition_id"] + ([group_col] if group_col else [])
+    failed = F.col("error").isNotNull()
     return (
-        df.mapInPandas(emit, schema)
+        docs.withColumn("partition_id", F.spark_partition_id())
+        .groupBy(*keys)
+        .agg(
+            F.count_if(~failed).alias("n_docs"),
+            F.coalesce(F.sum(F.length("raw")), F.lit(0)).cast("long")
+            .alias("n_bytes"),
+            F.count_if(failed).alias("n_errors"),
+            F.expr("coalesce(sum(kernel_us), 0) div 1000").alias("wall_ms"),
+        )
+        .select(*LINEAGE_SCHEMA.fieldNames(), *keys[1:])
         .withColumn("run_id", F.lit(run_id))
         .withColumn("ts", F.current_timestamp())
     )

@@ -1,12 +1,16 @@
-"""Checkpointed progress table + resume anti-join (north_rule D3/J5).
+"""Checkpointed progress table + resume (north_rule D3/J5).
 
 The unit of resumability is a *bucket*: ``pmod(xxhash64(url), n_buckets)``.
 A run processes pending buckets in groups and, once a group's output is
 written, appends one progress row per bucket of the group in a single
-write; on restart, ``pending = all buckets ∖ completed`` via left
-anti-join, so a killed job resumes at partition granularity with no
-duplicates (idempotent bucket keys — re-running a bucket overwrites its
-own output directory).
+write; on restart, ``pending = all buckets ∖ completed``, so a killed
+job resumes at partition granularity with no duplicates (idempotent
+bucket keys — re-running a bucket overwrites its own output directory).
+
+Everything here is JVM-only: the progress rows are a ``LocalTableScan``
+(``session.local_rows_df``), the completed set is one parquet-scan
+collect and the difference is taken on the driver. No Python-worker
+task runs, so none pays the worker's fixed per-task cost.
 
 This replaces the reference's benchmark result-cache skip-on-hit
 (``tests/benchmark.py:150-181``) with an exactly-once batch pattern.
@@ -19,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from lexoid_spark.session import local_rows_df
 
 PROGRESS_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
@@ -36,17 +42,25 @@ def with_bucket(df: DataFrame, n_buckets: int,
     )
 
 
-def read_progress(spark: SparkSession, progress_dir: str) -> DataFrame:
-    if os.path.isdir(progress_dir) and any(
+def _has_progress(progress_dir: str) -> bool:
+    return os.path.isdir(progress_dir) and any(
         f.endswith(".parquet") for _, _, fs in os.walk(progress_dir) for f in fs
-    ):
+    )
+
+
+def read_progress(spark: SparkSession, progress_dir: str) -> DataFrame:
+    if _has_progress(progress_dir):
         return spark.read.schema(PROGRESS_SCHEMA).parquet(progress_dir)
-    return spark.createDataFrame([], PROGRESS_SCHEMA)
+    return local_rows_df(spark, [], PROGRESS_SCHEMA)
 
 
 def pending_buckets(spark: SparkSession, n_buckets: int,
                     progress_dir: str, run_id: str) -> list[int]:
-    """All-buckets ∖ completed-in-THIS-run — the resume anti-join (J5).
+    """All-buckets ∖ completed-in-THIS-run (J5).
+
+    With no progress file yet, every bucket is pending and no Spark job
+    runs. Otherwise one JVM job collects this run's done buckets (a few
+    rows per bucket at most) and the difference is taken on the driver.
 
     Progress rows are scoped per ``run_id``: resuming means relaunching
     with the same run id; a *new* run id over the same output_dir
@@ -54,23 +68,23 @@ def pending_buckets(spark: SparkSession, n_buckets: int,
     own partition) instead of silently inheriting another run's
     completions.
     """
-    all_b = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
-    done = (
-        read_progress(spark, progress_dir)
+    if not _has_progress(progress_dir):
+        return list(range(n_buckets))
+    done = {
+        r["bucket"] for r in read_progress(spark, progress_dir)
         .filter((F.col("status") == "done") & (F.col("run_id") == run_id))
         .select("bucket")
-        .distinct()
-    )
-    rows = all_b.join(done, "bucket", "left_anti").collect()
-    return sorted(r["bucket"] for r in rows)
+        .collect()
+    }
+    return [b for b in range(n_buckets) if b not in done]
 
 
 def mark_done(spark: SparkSession, progress_dir: str, run_id: str,
               counts: dict[int, int]) -> None:
     """Append one progress row per bucket of a finished group
-    ``{bucket: n_docs}`` in ONE write: the group's buckets become done
-    together or, if the write dies, not at all."""
+    ``{bucket: n_docs}`` in ONE write of one file: the group's buckets
+    become done together or, if the write dies, not at all."""
     rows = [(run_id, b, "done", n) for b, n in sorted(counts.items())]
-    spark.createDataFrame(rows, PROGRESS_SCHEMA).coalesce(1).write.mode(
+    local_rows_df(spark, rows, PROGRESS_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(progress_dir)

@@ -36,6 +36,7 @@ from lexoid_spark.functions.columns import doc_title
 from lexoid_spark.functions.udfs import (
     DOC_SCHEMA,
     PDF_PAGES_SCHEMA,
+    TIMED_DOC_SCHEMA,
     make_extract_doc_map,
     pdf_pages_map,
 )
@@ -68,6 +69,8 @@ def extract(pages: DataFrame, run_id: str = "run0",
     (``plans/job.py``, once per bucket group) and the streaming sink —
     persist it so the kernels run once per document, not once per
     branch (Spark's cache manager matches the shared analyzed plan).
+    Its columns are ``TIMED_DOC_SCHEMA``: ``DOC_SCHEMA`` plus each
+    document's in-band ``kernel_us`` (null for per-page exploded PDFs).
 
     ``pdf_framework``: "pdfplumber" (full layout reconstruction,
     default) or "pdfminer" (cheap text-only arm) — the reference's
@@ -106,7 +109,7 @@ def extract(pages: DataFrame, run_id: str = "run0",
     if not explode_pdf_pages:
         docs = src.select("url", "doctype", "html").mapInPandas(
             make_extract_doc_map(pdf_framework, html_main_content),
-            DOC_SCHEMA,
+            TIMED_DOC_SCHEMA,
         )
     else:
         # per-page fan-out for giant-PDF skew: explode pages, merge back
@@ -123,7 +126,7 @@ def extract(pages: DataFrame, run_id: str = "run0",
             .unionByName(ocr_pdfs)
             .mapInPandas(
                 make_extract_doc_map(pdf_framework, html_main_content),
-                DOC_SCHEMA,
+                TIMED_DOC_SCHEMA,
             )
         )
         pdf_src = pdf_flagged.filter(~F.col("has_image"))
@@ -149,6 +152,7 @@ def extract(pages: DataFrame, run_id: str = "run0",
             ).alias("segments"),
             F.lit("STATIC_PARSE").alias("parser_used"),
             F.lit(None).cast("string").alias("error"),
+            F.lit(None).cast("long").alias("kernel_us"),
         )
         pdf_err_docs = pdf_errors.select(
             "url",
@@ -156,6 +160,7 @@ def extract(pages: DataFrame, run_id: str = "run0",
             F.lit(None).cast(DOC_SCHEMA["segments"].dataType).alias("segments"),
             F.lit("STATIC_PARSE").alias("parser_used"),
             F.col("error"),
+            F.lit(None).cast("long").alias("kernel_us"),
         )
         docs = docs_simple.unionByName(pdf_docs).unionByName(pdf_err_docs)
 

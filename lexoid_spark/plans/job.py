@@ -15,10 +15,20 @@ exactly-once batch pattern:
   * per-bucket doc counts come from an ``Observation`` on the
     ``extracted`` write, not from a separate count job;
   * each group then replaces its buckets' per-physical-partition
-    lineage rows and, last, appends ONE progress write with a row per
-    bucket of the group — a kill before it replays the whole group;
-  * on restart, ``pending = all buckets ∖ done`` (left anti-join), so a
-    killed job resumes with no duplicates and no lost work.
+    lineage rows, aggregated from the same cached ``docs``: ``n_docs``
+    extracted and ``n_errors`` quarantined rows, ``n_bytes`` Σ
+    ``n_chars``, and ``wall_ms`` the dispatch kernel's own time
+    (Σ in-band ``kernel_us`` // 1000) — and, last, appends ONE progress
+    write with a row per bucket of the group — a kill before it replays
+    the whole group;
+  * on restart, ``pending = all buckets ∖ done`` (taken on the driver
+    from one collect of the run's done buckets), so a killed job
+    resumes with no duplicates and no lost work.
+
+Only the dispatch kernel runs Python: progress, resume and lineage are
+JVM-only jobs, because every Python-worker task pays a fixed
+~0.20 CPU-s (``importlib.invalidate_caches()`` at task start) before
+it does any work.
 
 At 10^12 rows the bucket count scales (e.g. 4096) and the group size
 matches cluster width; here the defaults are sandbox-sized. Run via::
@@ -79,7 +89,7 @@ def run_extract_job(
     Layout under ``output_dir``:
       extracted/bucket=<b>/   per-bucket parquet (overwrite = idempotent)
       errors/bucket=<b>/      quarantined docs
-      lineage/                append-only per-partition metrics
+      lineage/bucket=<b>/     per-(partition, bucket) metrics (overwrite)
       progress/               append-only (run_id, bucket, done, n_docs)
     """
     progress_dir = os.path.join(output_dir, "progress")
@@ -150,13 +160,16 @@ def run_extract_job(
                 err.write.mode("overwrite").options(**dyn).partitionBy(
                     "bucket"
                 ).parquet(os.path.join(output_dir, "errors"))
-                # lineage after the data writes, partitioned by bucket
-                # with the same dynamic overwrite: a killed-and-resumed
-                # bucket REPLACES its lineage rows (append-only lineage
-                # double-counts replays)
-                lineage_rows(ext, run_id, group_col="bucket").write.mode(
-                    "overwrite"
-                ).options(**dyn).partitionBy("bucket").parquet(lineage_dir)
+                # lineage after the data writes, from the same cached
+                # docs (so n_errors and the kernel's wall_ms are seen),
+                # partitioned by bucket with the same dynamic overwrite:
+                # a killed-and-resumed bucket REPLACES its lineage rows
+                # (append-only lineage double-counts replays)
+                lineage_rows(
+                    with_bucket(docs, n_buckets), run_id, group_col="bucket"
+                ).write.mode("overwrite").options(**dyn).partitionBy(
+                    "bucket"
+                ).parquet(lineage_dir)
                 # last: a kill before this line replays the whole group
                 mark_done(spark, progress_dir, run_id, counts)
             finally:

@@ -127,6 +127,44 @@ def test_explode_mode_byte_identical(spark, result):
     assert exploded.count() == result["extracted"].count()
 
 
+def test_kernel_us_in_band(spark):
+    """The dispatch kernel carries each document's kernel time (µs)
+    in-band next to the ``DOC_SCHEMA`` columns; lineage ``wall_ms`` is
+    its per-(partition, bucket) Σ // 1000. Per-page exploded PDFs have
+    no single kernel call, so theirs is null."""
+    from lexoid_spark.functions.udfs import DOC_SCHEMA
+    from lexoid_spark.operators.lineage import lineage_rows
+    from lexoid_spark.operators.progress import with_bucket
+
+    pages = pages_df(spark, N_DOCS)
+    docs = extract(pages, return_docs=True)["docs"]
+    assert docs.columns == DOC_SCHEMA.fieldNames() + ["kernel_us"]
+    docs = with_bucket(docs, 4).persist()
+    try:
+        rows = docs.select(F.spark_partition_id().alias("pid"), "bucket",
+                           "kernel_us").collect()
+        assert len(rows) == N_DOCS
+        assert all(r["kernel_us"] is not None and r["kernel_us"] >= 0
+                   for r in rows)
+        assert sum(r["kernel_us"] for r in rows) > 0
+        want: dict = {}
+        for r in rows:
+            key = (r["pid"], r["bucket"])
+            want[key] = want.get(key, 0) + r["kernel_us"]
+        got = {(r["partition_id"], r["bucket"]): r["wall_ms"]
+               for r in lineage_rows(docs, "t", group_col="bucket").collect()}
+        assert got == {k: us // 1000 for k, us in want.items()}
+    finally:
+        docs.unpersist()
+
+    exploded = extract(pages, explode_pdf_pages=True, salt_buckets=4,
+                       return_docs=True)["docs"]
+    untimed = {r["url"] for r in
+               exploded.filter(F.col("kernel_us").isNull()).collect()}
+    assert untimed and all("/pdf_" in u for u in untimed)
+    assert exploded.filter(F.col("kernel_us") < 0).count() == 0
+
+
 def test_column_pruning_in_plan(spark):
     """The scan must read only url+html, not text/lang/warc_ts (free
     Catalyst win we verify, SURVEY.md §4.2)."""

@@ -426,3 +426,74 @@ def test_sort_tail_is_samplerless_single_partition(spark, name):
     assert "rangepartitioning" not in plan.lower()
     n_cached = len(re.findall(r"^\(\d+\) InMemoryRelation$", plan, re.M))
     assert n_cached == (1 if name == "pdf_flate_extract" else 0)
+
+
+_PYTHON_OPS = ("MapInPandas", "MapInArrow", "PythonUDF", "ArrowEvalPython",
+               "BatchEvalPython", "Scan ExistingRDD")
+
+
+def _traced(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result, the ids
+    of the Spark jobs it started and the physical plans of the SQL
+    executions it started (read from the session's SQL status store)."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        execs = store.executionsList()
+        return {e.executionId(): e.physicalPlanDescription()
+                for e in (execs.apply(i) for i in range(execs.size()))}
+
+    before = executions()
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    plans = [p for i, p in executions().items() if i not in before]
+    return out, list(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+
+def test_job_control_plane_is_jvm_only(spark, tmp_path):
+    """Progress, resume and lineage of the shipped job run no Python:
+    every Python-worker task pays a fixed ~0.2 CPU-s at start, so the
+    only Python tasks of ``run_extract_job`` are the dispatch kernel's.
+    Pinned on the executed plans of the progress-rows write, the
+    pending-buckets read and the lineage aggregate (over a JVM-only
+    docs-shaped input), and on the job counts of the resume check:
+    none before any progress exists, one after."""
+    from lexoid_spark.operators.lineage import lineage_rows
+    from lexoid_spark.operators.progress import (
+        mark_done,
+        pending_buckets,
+        with_bucket,
+    )
+
+    progress_dir = str(tmp_path / "progress")
+    pending, jobs, _ = _traced(spark, "pending-none", lambda: pending_buckets(
+        spark, 8, progress_dir, "r1"))
+    assert pending == list(range(8)) and jobs == []
+
+    _, _, plans = _traced(spark, "mark-done", lambda: mark_done(
+        spark, progress_dir, "r1", {0: 3, 5: 0}))
+    pending, jobs, read_plans = _traced(
+        spark, "pending-read",
+        lambda: pending_buckets(spark, 8, progress_dir, "r1"))
+    assert pending == [1, 2, 3, 4, 6, 7] and len(jobs) == 1
+
+    i = F.col("id")
+    docs = with_bucket(spark.range(24, numPartitions=3).select(
+        F.concat(F.lit("u"), i.cast("string")).alias("url"),
+        F.when(i % 5 != 0, F.repeat(F.lit("x"), i.cast("int"))).alias("raw"),
+        F.when(i % 5 == 0, F.lit("E: bad")).alias("error"),
+        (i * 700).alias("kernel_us"),
+    ), 4)
+    lineage = lineage_rows(docs, "r1", group_col="bucket")
+    _, _, lineage_plans = _traced(spark, "lineage", lineage.collect)
+
+    plans += read_plans + lineage_plans
+    assert len(plans) == 3
+    for plan in plans:
+        for op in _PYTHON_OPS:
+            assert op not in plan, plan

@@ -124,13 +124,17 @@ def _urls(spark, path):
     return [r["url"] for r in spark.read.parquet(path).select("url").collect()]
 
 
-def test_extracted_and_errors_partition_input(spark, tmp_path):
-    # a zip-magic payload that is not a valid OPC container → quarantine
-    bad = b"PK\x03\x04not actually a zip"
+# a zip-magic payload that is not a valid OPC container → quarantine
+BAD_ZIP = b"PK\x03\x04not actually a zip"
+
+
+def _killed_and_resumed_with_bad_zips(spark, tmp_path):
+    """12 HTML pages + 6 bad zips through a kill (2 of 4 buckets) and a
+    resume; returns (input rows, output dir)."""
     rows = [(f"http://p.test/ok{i}", None,
              b"<html><body><p>page %d</p></body></html>" % i, "x", "en")
             for i in range(12)]
-    rows += [(f"http://p.test/bad{i}", None, bad, "x", "en")
+    rows += [(f"http://p.test/bad{i}", None, BAD_ZIP, "x", "en")
              for i in range(6)]
     inp = str(tmp_path / "pages")
     spark.createDataFrame(rows, PAGES_SCHEMA_DDL).write.parquet(inp)
@@ -138,11 +142,15 @@ def test_extracted_and_errors_partition_input(spark, tmp_path):
     kw = dict(run_id="r1", n_buckets=4, group_size=2)
     run_extract_job(spark, inp, out, max_buckets=2, **kw)
     run_extract_job(spark, inp, out, **kw)
+    return rows, out
 
+
+def test_extracted_and_errors_partition_input(spark, tmp_path):
+    rows, out = _killed_and_resumed_with_bad_zips(spark, tmp_path)
     ext = _urls(spark, os.path.join(out, "extracted"))
     err = _urls(spark, os.path.join(out, "errors"))
     assert sorted(ext + err) == sorted(r[0] for r in rows)
-    assert set(err) == {r[0] for r in rows if r[2] == bad}
+    assert set(err) == {r[0] for r in rows if r[2] == BAD_ZIP}
 
     ext_by_bucket = {
         r["bucket"]: r["count"] for r in spark.read.parquet(
@@ -153,6 +161,30 @@ def test_extracted_and_errors_partition_input(spark, tmp_path):
             .collect()}
     assert sum(prog.values()) == len(ext)
     assert {b: n for b, n in prog.items() if n} == ext_by_bucket
+
+
+def test_lineage_matches_outputs_per_bucket(spark, tmp_path):
+    """Per bucket, lineage Σ n_docs / Σ n_errors / Σ n_bytes equal the
+    extracted rows, the quarantined rows and Σ n_chars, and Σ n_docs
+    equals the progress row's n_docs — across a kill and a resume."""
+    _, out = _killed_and_resumed_with_bad_zips(spark, tmp_path)
+
+    def per_bucket(table, *aggs):
+        df = spark.read.parquet(os.path.join(out, table))
+        return {r["bucket"]: tuple(r)[1:]
+                for r in df.groupBy("bucket").agg(*aggs).collect()}
+
+    ext = per_bucket("extracted", F.count("*"), F.sum("n_chars"))
+    err = per_bucket("errors", F.count("*"))
+    lin = per_bucket("lineage", F.sum("n_docs"), F.sum("n_errors"),
+                     F.sum("n_bytes"))
+    prog = {r["bucket"]: r["n_docs"] for r in
+            read_progress(spark, os.path.join(out, "progress")).collect()}
+    assert sum(n for n, in err.values()) == 6
+    for b in range(4):
+        n_ext, n_chars = ext.get(b, (0, 0))
+        assert lin.get(b, (0, 0, 0)) == (n_ext, err.get(b, (0,))[0], n_chars)
+        assert prog[b] == n_ext
 
 
 def test_empty_bucket_gets_progress_row(spark, tmp_path):
