@@ -10,8 +10,8 @@ index (seeded arithmetic, no wall clock), so goldens are stable bytes.
 
 Goldens are produced by running the kernels driver-side: the pipeline
 test then asserts the *Spark* output is byte-identical per url — this
-checks the distributed plumbing (Arrow transport, explode, salted merge
-ordering) cannot corrupt a single byte.
+checks the distributed plumbing (Arrow transport, giant-tail split,
+quarantine split) cannot corrupt a single byte.
 """
 
 from __future__ import annotations
@@ -631,8 +631,8 @@ def golden_raw_for_row(url: str, payload: bytes) -> str:
 
     Delegates to the SAME single-document dispatch the Spark kernel
     wraps (``functions.udfs._extract_one``) — the golden check pins the
-    distributed plumbing (Arrow transport, explode, salted merge
-    ordering), not the kernels, which have their own unit tests."""
+    distributed plumbing (Arrow transport, giant-tail split, quarantine
+    split), not the kernels, which have their own unit tests."""
     from lexoid_spark.functions.udfs import _extract_one
     from lexoid_spark.kernels.pdf_md import sniff_doctype
 

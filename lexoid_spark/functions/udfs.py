@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lexoid_spark.kernels.html_md import html_to_md
-from lexoid_spark.kernels.pdf_md import pdf_flags, pdf_to_pages, sniff_doctype
+from lexoid_spark.kernels.pdf_md import pdf_flags, pdf_to_pages
 from lexoid_spark.kernels.segmenter import segment_md
 from lexoid_spark.kernels.table_md import csv_to_md
 
@@ -76,23 +76,6 @@ def _txt_decode(payload) -> str:
 @F.pandas_udf(RAW_ERR_TYPE)
 def txt_decode_udf(payloads: pd.Series) -> pd.DataFrame:
     rows = [_guarded(_txt_decode)(p) for p in payloads]
-    return pd.DataFrame(rows)
-
-
-@F.pandas_udf(T.StringType())
-def sniff_doctype_udf(payloads: pd.Series) -> pd.Series:
-    return payloads.map(sniff_doctype)
-
-
-@F.pandas_udf(T.StructType([
-    T.StructField("has_image", T.BooleanType()),
-    T.StructField("has_hyperlink", T.BooleanType()),
-]))
-def pdf_flags_udf(payloads: pd.Series) -> pd.DataFrame:
-    rows = []
-    for p in payloads:
-        img, link = pdf_flags(p)
-        rows.append({"has_image": img, "has_hyperlink": link})
     return pd.DataFrame(rows)
 
 
@@ -257,44 +240,6 @@ def make_extract_doc_map(pdf_framework: str = "pdfplumber",
             yield pd.DataFrame(out)
 
     return extract_doc_map
-
-
-# --- PDF page explosion (mapInPandas: variable row count out) ---------------
-
-PDF_PAGES_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("page", T.IntegerType()),
-    T.StructField("content", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-def pdf_pages_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (url, html) batches → per-page markdown rows.
-
-    One output row per PDF page (the reference's per-split-file unit,
-    ``api.py:339-359``, becomes a per-page row; Spark partitions replace
-    split files). Errors emit a single quarantine row with page = -1.
-    """
-    for pdf_batch in batches:
-        urls, pages_out, contents, errors = [], [], [], []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            try:
-                pages = pdf_to_pages(payload, start=0)
-                if not pages:
-                    urls.append(url); pages_out.append(1)
-                    contents.append(""); errors.append(None)
-                for pnum, content in pages:
-                    urls.append(url); pages_out.append(pnum)
-                    contents.append(content); errors.append(None)
-            except Exception as e:
-                urls.append(url); pages_out.append(-1)
-                contents.append(None)
-                errors.append(f"{type(e).__name__}: {e}")
-        yield pd.DataFrame({
-            "url": urls, "page": pages_out,
-            "content": contents, "error": errors,
-        })
 
 
 # --- PDF word-box table (the reference's bbox side-channel as rows) ----------

@@ -1,11 +1,12 @@
-"""Skew-aware partitioning policies (north_rule: explicit
-repartition-by-size + salted keys for giant blobs).
+"""Partitioning and data-layout operators.
 
 At 100 TB the ``pages`` table has a heavy tail of 100×–1000× median-size
-HTML blobs (FIXTURES.md §1 skew knob). Equal-row partitions would make
-byte-skewed stragglers; ``repartition_by_size`` range-partitions on the
-payload byte length so each task sees ~equal *bytes*. ``salted`` gives
-the classic partial/final two-phase aggregation key for hot urls.
+HTML blobs (FIXTURES.md §1 skew knob). Parquet input splits already
+give ~byte-balanced input, so the one skew rule is
+:func:`split_giant_tail`: shuffle only the straggler tail round-robin
+and leave the bulk on its input splits (the rule DS2, ICDE 2021, argues
+for). :func:`write_bucketed` co-locates url-keyed joins;
+:func:`cluster_by_z` lays a table out in Z-order for two-column pruning.
 """
 
 from __future__ import annotations
@@ -25,25 +26,6 @@ def _size_col(df: DataFrame, payload_col: str):
     return c if isinstance(dtype, T.NumericType) else F.length(c)
 
 
-def repartition_by_size(df: DataFrame, num_partitions: int,
-                        payload_col: str = "html") -> DataFrame:
-    """Range-repartition on payload byte size with a hash tiebreaker.
-
-    ``repartitionByRange(length)`` alone puts all giant blobs in one
-    range bucket; adding ``xxhash64(url)`` as the second sort key
-    spreads equal-size rows uniformly. Small/medium docs co-locate into
-    byte-balanced tasks; the giant tail spreads across partitions.
-
-    This shuffles EVERY payload byte — use :func:`split_giant_tail`
-    (the extract() default) unless the whole table needs re-balancing.
-    """
-    return df.repartitionByRange(
-        num_partitions,
-        _size_col(df, payload_col).asc(),
-        F.xxhash64("url").asc(),
-    )
-
-
 def split_giant_tail(df: DataFrame, num_partitions: int,
                      payload_col: str = "html",
                      threshold_bytes: int = 1 << 20) -> DataFrame:
@@ -54,8 +36,8 @@ def split_giant_tail(df: DataFrame, num_partitions: int,
     rare giant documents. So: filter rows above ``threshold_bytes`` into
     a round-robin ``repartition`` (spreads them across all tasks) and
     union the untouched bulk — shuffle volume is the tail's bytes only,
-    not the table's. At 100 TB with a ~2% tail that is a 50× cheaper
-    shuffle than ``repartition_by_size``.
+    not the table's: at 100 TB with a ~2% tail, 50× less than a full
+    range repartition on byte size.
     """
     # null size (e.g. a null n_bytes metadata column) must not drop the
     # row from BOTH branches (null <= t and null > t are both null):
@@ -78,15 +60,6 @@ def split_giant_tail(df: DataFrame, num_partitions: int,
     return bulk.unionByName(tail)
 
 
-def with_size_bucket(df: DataFrame, payload_col: str = "html",
-                     col_name: str = "size_bucket") -> DataFrame:
-    """Coarse log2 byte-size bucket column (for lineage/bench reporting)."""
-    return df.withColumn(
-        col_name,
-        F.floor(F.log2(F.greatest(F.length(F.col(payload_col)), F.lit(1)))),
-    )
-
-
 def write_bucketed(df: DataFrame, table: str, key: str = "url",
                    n_buckets: int = 64, sort: bool = True) -> None:
     """Persist a table bucketed (and sorted) by ``key`` so every later
@@ -102,49 +75,6 @@ def write_bucketed(df: DataFrame, table: str, key: str = "url",
     if sort:
         writer = writer.sortBy(key)
     writer.format("parquet").saveAsTable(table)
-
-
-def salted_group_merge(df: DataFrame, key: str, sort_col: str,
-                       content_col: str, salt_buckets: int,
-                       sep: str = "\n\n") -> DataFrame:
-    """Two-phase (partial → final) ordered string merge per key.
-
-    Replaces the reference's chunk-merge loop (``api.py:361-382``): the
-    per-url page concat becomes ``groupBy(key, salt)`` partials (map-side
-    combine limits shuffle volume for hot keys) followed by a final
-    ``groupBy(key)``. Ordering is made total before any aggregation by
-    sorting structs on (sort_col ASC) — struct sort order is
-    lexicographic on field order, so output bytes are deterministic
-    under any physical row order (SURVEY.md §7.4(4)).
-    """
-    # salt on (key, sort_col): a single hot key's rows spread across
-    # salt_buckets partial groups (salting on key alone would keep the
-    # hot key in one bucket and help nothing)
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(key), F.col(sort_col)),
-                        F.lit(salt_buckets))
-    )
-    partial = (
-        salted.groupBy(key, "_salt")
-        .agg(
-            F.collect_list(
-                F.struct(F.col(sort_col).alias("s"),
-                         F.col(content_col).alias("c"))
-            ).alias("_parts")
-        )
-    )
-    final = (
-        partial.groupBy(key)
-        .agg(
-            F.array_sort(F.flatten(F.collect_list("_parts"))).alias("_all")
-        )
-        .select(
-            key,
-            F.concat_ws(sep, F.col("_all").getField("c")).alias(content_col),
-            F.col("_all").alias("_sorted_parts"),
-        )
-    )
-    return final
 
 
 # ---------------------------------------------------------------------------

@@ -1,19 +1,18 @@
 """Doctype routing + error quarantine (reference P1-P7 as DataFrame ops).
 
 The reference's AUTO router (``utils.py:530-588``) is an imperative
-if/else over per-file probes; here the probes are columns computed once
-per row (magic-byte sniff, PDF image/hyperlink flags) and the decision
-is a ``when/otherwise`` chain — free for Catalyst to prune when a branch
-filter makes it constant. Exceptions become ``error`` columns and
-quarantined unions (P6/P7), never task failures.
+if/else over per-file probes; here the magic-byte sniff is a native
+column computed once per row and the decision is a ``when/otherwise``
+chain — free for Catalyst to prune when a branch filter makes it
+constant. The PDF image/hyperlink byte scan (P2/P3) runs inside the
+dispatch kernel, next to the parse it selects. Exceptions become
+``error`` columns and quarantined unions (P6/P7), never task failures.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from lexoid_spark.functions.udfs import pdf_flags_udf, sniff_doctype_udf
 
 
 def with_doctype(df: DataFrame, payload_col: str = "html") -> DataFrame:
@@ -120,22 +119,6 @@ def with_doctype(df: DataFrame, payload_col: str = "html") -> DataFrame:
             F.lit("csv"),
         )
         .otherwise(F.lit("txt")),
-    )
-
-
-def with_doctype_kernel(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Pandas-UDF variant of the sniff (kept for parity testing)."""
-    return df.withColumn("doctype", sniff_doctype_udf(F.col(payload_col)))
-
-
-def with_pdf_flags(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Add has_image / has_hyperlink byte-scan flags (P2/P3)."""
-    flags = pdf_flags_udf(F.col(payload_col))
-    return (
-        df.withColumn("_flags", flags)
-        .withColumn("has_image", F.col("_flags.has_image"))
-        .withColumn("has_hyperlink", F.col("_flags.has_hyperlink"))
-        .drop("_flags")
     )
 
 

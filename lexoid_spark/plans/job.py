@@ -51,6 +51,7 @@ from lexoid_spark.operators.progress import (
     pending_buckets,
     with_bucket,
 )
+from lexoid_spark.operators.routing import quarantine
 from lexoid_spark.plans.extract import extract
 
 
@@ -130,8 +131,7 @@ def run_extract_job(
             subset = pages.filter(F.col("bucket").isin(group)).drop("bucket")
             out = extract(subset, run_id=run_id, repartition=repartition,
                           pdf_framework=pdf_framework,
-                          html_main_content=html_main_content,
-                          return_docs=True)
+                          html_main_content=html_main_content)
             # both branches below read this cache: the kernel runs once
             # per doc, so extracted/ and errors/ partition the group
             docs = out["docs"].persist()
@@ -139,14 +139,10 @@ def run_extract_job(
                 ext = with_bucket(out["extracted"], n_buckets)
                 err = with_bucket(out["errors"], n_buckets)
                 if warc_bad is not None:
-                    err = err.unionByName(
-                        warc_bad.filter(F.col("bucket").isin(group))
-                        .select(
-                            "url", F.lit("warc_ingest").alias("stage"),
-                            "error", F.lit(run_id).alias("run_id"),
-                            "bucket",
-                        )
-                    )
+                    err = err.unionByName(with_bucket(quarantine(
+                        warc_bad.filter(F.col("bucket").isin(group)),
+                        "warc_ingest", run_id,
+                    ), n_buckets))
                 # per-bucket doc counts ride the extracted write as
                 # observed metrics instead of a separate count job
                 obs = Observation()

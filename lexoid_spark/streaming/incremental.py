@@ -29,6 +29,7 @@ import os
 from pyspark.sql import SparkSession
 
 from lexoid_spark.corpus.gen import PAGES_SCHEMA_DDL
+from lexoid_spark.operators.routing import quarantine
 from lexoid_spark.plans.extract import extract
 
 
@@ -51,8 +52,6 @@ def incremental_extract(
     its blobs to pages rows first (map-only) and malformed blobs join
     the errors sink with stage ``warc_ingest`` — continuous crawl
     ingestion with the same quarantine contract as the batch job."""
-    from pyspark.sql import functions as F
-
     if schema is None:
         if input_format == "warc":
             from lexoid_spark.sources.warc import WARC_BLOBS_SCHEMA_DDL
@@ -77,17 +76,12 @@ def incremental_extract(
             # cache the exploded rows so the blob parse runs once per
             # microbatch, not once per sink branch
             warc_pages_cache = batch_df = batch_df.persist()
-        out = extract(batch_df, run_id=run_id,
-                      repartition=False, return_docs=True)
+        out = extract(batch_df, run_id=run_id, repartition=False)
         docs = out["docs"].persist()
         errors = out["errors"]
         if warc_bad is not None:
             errors = errors.unionByName(
-                warc_bad.select(
-                    "url", F.lit("warc_ingest").alias("stage"),
-                    "error", F.lit(run_id).alias("run_id"),
-                )
-            )
+                quarantine(warc_bad, "warc_ingest", run_id))
         try:
             out["extracted"].write.mode("overwrite").parquet(
                 os.path.join(output_dir, f"batch={batch_id}")

@@ -1,14 +1,10 @@
-"""Skew-partitioning policies: byte-size keying (not digit-count), tail
-split semantics, and row preservation under both shuffle modes."""
+"""Skew partitioning: byte-size keying (not digit-count), tail split
+semantics, and extract() output unchanged by the tail split."""
 
 from pyspark.sql import functions as F
 
-from lexoid_spark.corpus.gen import pages_df
-from lexoid_spark.operators.partitioning import (
-    _size_col,
-    repartition_by_size,
-    split_giant_tail,
-)
+from lexoid_spark.corpus.gen import PAGES_SCHEMA_DDL, pages_df
+from lexoid_spark.operators.partitioning import _size_col, split_giant_tail
 from lexoid_spark.plans.extract import extract
 
 
@@ -53,29 +49,30 @@ def test_split_giant_tail_preserves_rows_and_spreads(spark):
     assert spread >= min(n_tail, 2)  # giants not all in one partition
 
 
-def test_extract_modes_same_rows(spark):
-    pages = pages_df(spark, 30, p_giant=0.1)
+def test_tail_split_keeps_extract_output(spark):
+    """A page above extract()'s 1 MiB tail threshold really moves
+    through the round-robin shuffle, and the rows come out the same as
+    with no split at all."""
+    import datetime as dt
 
-    def rows(mode_kw):
-        ext = extract(pages, repartition=True, **mode_kw)["extracted"]
+    from lexoid_spark.corpus.gen import _html_giant, _rng
+
+    giant_url = "https://fixtures.test/html_giant/big"
+    payload = _html_giant(7, _rng(7), repeat=3000)
+    assert len(payload) > 1 << 20
+    giant = spark.createDataFrame(
+        [(giant_url, dt.datetime(2024, 1, 1), payload, "", "en")],
+        PAGES_SCHEMA_DDL,
+    )
+    pages = pages_df(spark, 30).unionByName(giant)
+
+    def rows(repartition):
+        ext = extract(pages, repartition=repartition)["extracted"]
         return sorted((r["url"], r["raw"]) for r in ext.collect())
 
-    base = rows({"skew_mode": "tail"})
-    assert base == rows({"skew_mode": "range"})
-    assert base == rows({"skew_mode": "tail",
-                         "giant_threshold_bytes": 10_000})
-
-
-def test_repartition_by_size_balances_bytes(spark):
-    pages = pages_df(spark, 60, p_giant=0.05)
-    rep = repartition_by_size(pages.select("url", "html"), 4)
-    sizes = (
-        rep.select(F.spark_partition_id().alias("p"),
-                   F.length("html").alias("b"))
-        .groupBy("p").agg(F.sum("b").alias("bytes"))
-        .collect()
-    )
-    assert len(sizes) == 4
+    split = rows(True)
+    assert split == rows(False)
+    assert giant_url in {url for url, _ in split}
 
 
 def test_z_order_key_matches_reference_interleave(spark):

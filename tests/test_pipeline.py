@@ -26,8 +26,9 @@ def test_every_doc_extracted_or_quarantined(spark, result):
 
 def test_byte_identity_vs_kernel_goldens(spark, result):
     """Join extracted vs driver-side kernel output on url: the Spark
-    plumbing (Arrow transport, explode, salted merge) must not change a
-    single byte (north_rule: byte-identical extracted text per url)."""
+    plumbing (Arrow transport, tail split, quarantine split) must not
+    change a single byte (north_rule: byte-identical extracted text per
+    url)."""
     golden = spark.createDataFrame(golden_rows(N_DOCS))
     joined = result["extracted"].join(golden, "url", "inner")
     n_joined = joined.count()
@@ -114,33 +115,21 @@ def test_giant_skew_tail_processed(spark):
     assert all(r["n_chars"] > 100_000 for r in rows)
 
 
-def test_explode_mode_byte_identical(spark, result):
-    """The per-page explode + salted-merge PDF path must produce the
-    same bytes as the in-kernel assembly (SURVEY.md §7.4(4))."""
-    pages = pages_df(spark, N_DOCS)
-    exploded = extract(pages, run_id="explode_run", explode_pdf_pages=True,
-                       salt_buckets=4)["extracted"]
-    default = result["extracted"].select("url", F.col("raw").alias("raw_d"))
-    joined = exploded.join(default, "url", "full_outer")
-    mism = joined.filter(~F.col("raw").eqNullSafe(F.col("raw_d"))).count()
-    assert mism == 0
-    assert exploded.count() == result["extracted"].count()
-
-
 def test_kernel_us_in_band(spark):
     """The dispatch kernel carries each document's kernel time (µs)
     in-band next to the ``DOC_SCHEMA`` columns; lineage ``wall_ms`` is
-    its per-(partition, bucket) Σ // 1000. Per-page exploded PDFs have
-    no single kernel call, so theirs is null."""
+    its per-(partition, bucket) Σ // 1000. Every document, quarantined
+    ones included, has one."""
     from lexoid_spark.functions.udfs import DOC_SCHEMA
     from lexoid_spark.operators.lineage import lineage_rows
     from lexoid_spark.operators.progress import with_bucket
 
     pages = pages_df(spark, N_DOCS)
-    docs = extract(pages, return_docs=True)["docs"]
+    docs = extract(pages)["docs"]
     assert docs.columns == DOC_SCHEMA.fieldNames() + ["kernel_us"]
     docs = with_bucket(docs, 4).persist()
     try:
+        assert docs.filter(F.col("kernel_us").isNull()).count() == 0
         rows = docs.select(F.spark_partition_id().alias("pid"), "bucket",
                            "kernel_us").collect()
         assert len(rows) == N_DOCS
@@ -156,13 +145,6 @@ def test_kernel_us_in_band(spark):
         assert got == {k: us // 1000 for k, us in want.items()}
     finally:
         docs.unpersist()
-
-    exploded = extract(pages, explode_pdf_pages=True, salt_buckets=4,
-                       return_docs=True)["docs"]
-    untimed = {r["url"] for r in
-               exploded.filter(F.col("kernel_us").isNull()).collect()}
-    assert untimed and all("/pdf_" in u for u in untimed)
-    assert exploded.filter(F.col("kernel_us") < 0).count() == 0
 
 
 def test_column_pruning_in_plan(spark):

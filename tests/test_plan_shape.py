@@ -58,6 +58,23 @@ def test_no_shuffle_without_repartition(spark, bench_pages):
     assert "Exchange" not in plan  # pure map pipeline
 
 
+def test_extract_default_plan_is_one_dispatch(spark, bench_pages):
+    """The default plan runs the dispatch kernel once and shuffles only
+    the giant tail, round-robin: no second kernel pass, no merge
+    aggregation, no range repartition."""
+    import re
+
+    from lexoid_spark.plans.extract import extract
+
+    ext = extract(bench_pages, repartition=True)["extracted"]
+    plan = ext._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    exchanges = re.findall(r"Exchange (\w+)\(", plan)
+    assert exchanges == ["RoundRobinPartitioning"], plan
+    assert "HashAggregate" not in plan
+    assert "rangepartitioning" not in plan.lower()
+
+
 def test_bucketed_join_elides_shuffle(spark, tmp_path_factory):
     """J4 at scale: two url-bucketed tables equi-join with no Exchange."""
     from lexoid_spark.corpus.gen import pages_df
