@@ -16,3 +16,15 @@ Architecture (SURVEY.md §1.3, §7):
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+# First lexoid code a Python worker runs (every lexoid UDF unpickles
+# through this package): make the worker's per-task import refresh lazy
+# for the rest of its life (zip_refresh.py). The driver, where pyspark
+# never sets the flag, skips it without importing anything.
+_spark_files = _sys.modules.get("pyspark.core.files")
+if _spark_files is not None and _spark_files.SparkFiles._is_running_on_worker:
+    from lexoid_spark.zip_refresh import install as _install_zip_refresh
+
+    _install_zip_refresh()

@@ -2,10 +2,11 @@
 
 The reference's AUTO router (``utils.py:530-588``) is an imperative
 if/else over per-file probes; here the magic-byte sniff is a native
-column computed once per row and the decision is a ``when/otherwise``
-chain — free for Catalyst to prune when a branch filter makes it
-constant. The PDF image/hyperlink byte scan (P2/P3) runs inside the
-dispatch kernel, next to the parse it selects. Exceptions become
+``CASE`` column computed once per row — free for Catalyst to prune when
+a branch filter makes it constant. The STATIC/OCR decision and the PDF
+image/hyperlink byte scan (P2/P3) it rests on run inside the dispatch
+kernel (``functions/udfs.py::_extract_one``), next to the parse they
+select. Exceptions become
 ``error`` columns and quarantined unions (P6/P7), never task failures.
 """
 
@@ -15,140 +16,116 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _left_deep(op: str, terms) -> str:
+    """``t1 op t2 op ...`` grouped to the left, as Python's ``|``/``&``
+    build a Column chain. Spark's SQL parser balances an unparenthesized
+    chain instead (``a OR b OR c OR d OR e`` parses as
+    ``((a OR b) OR c) OR (d OR e)``), so every step is parenthesized."""
+    terms = list(terms)
+    sql = terms[0]
+    for term in terms[1:]:
+        sql = f"({sql}) {op} ({term})"
+    return sql
+
+
+def _any(*terms) -> str:
+    return _left_deep("OR", terms)
+
+
+def _all(*terms) -> str:
+    return _left_deep("AND", terms)
+
+
+def _sniff_sql(payload_col: str) -> str:
+    """The doctype ``CASE`` of ``with_doctype`` as one SQL expression."""
+    p = "`" + payload_col.replace("`", "``") + "`"
+
+    def hex_at(pos: int, n: int) -> str:
+        return f"hex(substring({p}, {pos}, {n}))"
+
+    def head(charset: str) -> str:
+        return f"decode(substring({p}, 1, 512), '{charset}')"
+
+    def lstripped_lower(text: str) -> str:
+        # bytes.lstrip() strips all whitespace, Spark ltrim only spaces
+        # → a regexp matches the kernel twin exactly
+        return f"lower(regexp_replace({text}, r'^\\s+', ''))"
+
+    def first_line(text: str) -> str:
+        # the literal newline keeps the pattern identical whether or
+        # not the session unescapes string literals
+        return f"split({text}, '\n')[0]"
+
+    def is_html(low: str) -> str:
+        return _any(*(f"startswith({low}, '{tag}')" for tag in
+                      ("<!doctype", "<html", "<head", "<body")),
+                    f"contains({low}, '<html')")
+
+    def csv_terms(text: str) -> tuple[str, str]:
+        line = first_line(text)
+        return f"contains({line}, ',')", f"NOT contains({line}, '<')"
+
+    image = _any(
+        # FAKE container "IMG!", PNG, GIF8; JPEG
+        f"{hex_at(1, 4)} IN ('494D4721', '89504E47', '47494638')",
+        f"{hex_at(1, 3)} = 'FFD8FF'",
+        # JPEG 2000: JP2 signature box / raw SOC codestream
+        f"{hex_at(1, 8)} = '0000000C6A502020'",
+        f"{hex_at(1, 2)} = 'FF4F'",
+        # TIFF: II*\0 little / MM\0* big endian
+        f"{hex_at(1, 4)} IN ('49492A00', '4D4D002A')",
+        # BMP: 'BM' + a known DIB header size at offset 14 ('BM' alone
+        # is a plausible text prefix)
+        _all(f"{hex_at(1, 2)} = '424D'",
+             f"{hex_at(15, 4)} IN ('28000000', '34000000', '38000000', "
+             "'6C000000', '7C000000')"),
+        # WebP: RIFF....WEBP
+        _all(f"{hex_at(1, 4)} = '52494646'", f"{hex_at(9, 4)} = '57454250'"),
+    )
+    arms = [
+        (f"{hex_at(1, 5)} = '255044462D'", "pdf"),
+        (f"{hex_at(1, 4)} = '504B0304'", "zip"),  # OPC; refined in-kernel
+        (image, "image"),  # → OCR arm (P5)
+    ]
+    # 4-byte UTF-32 BOMs must be probed BEFORE the 2-byte UTF-16 ones
+    # (the UTF-32-LE BOM FF FE 00 00 *starts with* the UTF-16-LE BOM
+    # FF FE) — same ordering as text_ops.decode_payload's _BOMS table.
+    # Java's UTF-16/UTF-32 charsets honor the BOM, matching python's
+    # "utf-16"/"utf-32" codecs.
+    for bom, charset in (
+        (f"{hex_at(1, 4)} IN ('FFFE0000', '0000FEFF')", "UTF-32"),
+        (f"{hex_at(1, 2)} IN ('FFFE', 'FEFF')", "UTF-16"),
+    ):
+        text = head(charset)
+        arms += [
+            (_all(bom, is_html(lstripped_lower(text))), "html"),
+            (_all(bom, *csv_terms(text)), "csv"),
+            (bom, "txt"),
+        ]
+    latin1 = head("ISO-8859-1")
+    arms += [
+        (is_html(lstripped_lower(latin1)), "html"),
+        (_all(*csv_terms(latin1)), "csv"),
+    ]
+    whens = " ".join(f"WHEN {cond} THEN '{label}'" for cond, label in arms)
+    return f"CASE {whens} ELSE 'txt' END"
+
+
 def with_doctype(df: DataFrame, payload_col: str = "html") -> DataFrame:
     """Add the magic-byte ``doctype`` column (S1) — fully native.
 
     Mirrors ``kernels.pdf_md.sniff_doctype`` (the kernel twin used for
-    golden computation) with JVM-side expressions: hex-compare the %PDF-
-    magic, latin-1 decode of the first 512 bytes for the HTML probes,
-    first-line comma test for CSV. No Python in this hot path.
+    golden computation) with JVM-side expressions: hex-compare the
+    magic bytes, decode the first 512 bytes (UTF-32/UTF-16 when a BOM
+    says so, else latin-1) for the HTML probes, first-line comma test
+    for CSV. No Python in this hot path.
+
+    The expression is one SQL string handed to a single ``F.expr``: the
+    same ``CASE`` through the Column API took ~140 calls, each several
+    py4j round trips, on every ``extract()``. tests/test_plan_shape.py
+    pins the analyzed and optimized plans to the Column-API spelling.
     """
-    head = F.decode(F.substring(F.col(payload_col), 1, 512), "ISO-8859-1")
-    # bytes.lstrip() strips all whitespace, Spark ltrim only spaces →
-    # use a regexp to match the kernel twin exactly
-    low = F.lower(F.regexp_replace(head, r"^\s+", ""))
-    first_line = F.split(head, "\n").getItem(0)
-    # 4-byte UTF-32 BOMs must be probed BEFORE the 2-byte UTF-16 ones
-    # (the UTF-32-LE BOM FF FE 00 00 *starts with* the UTF-16-LE BOM
-    # FF FE) — same ordering as text_ops.decode_payload's _BOMS table.
-    _u32bom = F.hex(F.substring(F.col(payload_col), 1, 4)).isin(
-        "FFFE0000", "0000FEFF"
-    )
-    _u32 = F.decode(F.substring(F.col(payload_col), 1, 512), "UTF-32")
-    _u32low = F.lower(F.regexp_replace(_u32, r"^\s+", ""))
-    _u32first = F.split(_u32, "\n").getItem(0)
-    _u16bom = F.hex(F.substring(F.col(payload_col), 1, 2)).isin(
-        "FFFE", "FEFF"
-    )
-    _u16 = F.decode(F.substring(F.col(payload_col), 1, 512), "UTF-16")
-    _u16low = F.lower(F.regexp_replace(_u16, r"^\s+", ""))
-    _u16first = F.split(_u16, "\n").getItem(0)
-    return df.withColumn(
-        "doctype",
-        F.when(
-            F.hex(F.substring(F.col(payload_col), 1, 5)) == "255044462D",
-            F.lit("pdf"),
-        )
-        .when(
-            F.hex(F.substring(F.col(payload_col), 1, 4)) == "504B0304",
-            F.lit("zip"),  # OPC container (docx/xlsx/pptx); refined in-kernel
-        )
-        .when(
-            F.hex(F.substring(F.col(payload_col), 1, 4)).isin(
-                "494D4721",  # FAKE container "IMG!"
-                "89504E47",  # PNG
-                "47494638",  # GIF8
-            )
-            | (F.hex(F.substring(F.col(payload_col), 1, 3)) == "FFD8FF")
-            # JPEG 2000: JP2 signature box / raw SOC codestream
-            | (F.hex(F.substring(F.col(payload_col), 1, 8))
-               == "0000000C6A502020")
-            | (F.hex(F.substring(F.col(payload_col), 1, 2)) == "FF4F")
-            # TIFF: II*\0 little / MM\0* big endian
-            | F.hex(F.substring(F.col(payload_col), 1, 4)).isin(
-                "49492A00", "4D4D002A")
-            # BMP: 'BM' + a known DIB header size at offset 14 ('BM'
-            # alone is a plausible text prefix)
-            | ((F.hex(F.substring(F.col(payload_col), 1, 2)) == "424D")
-               & F.hex(F.substring(F.col(payload_col), 15, 4)).isin(
-                   "28000000", "34000000", "38000000",
-                   "6C000000", "7C000000"))
-            # WebP: RIFF....WEBP
-            | ((F.hex(F.substring(F.col(payload_col), 1, 4)) == "52494646")
-               & (F.hex(F.substring(F.col(payload_col), 9, 4))
-                  == "57454250")),
-            F.lit("image"),  # → OCR arm (P5)
-        )
-        # UTF-32 BOM first (see _u32bom comment), then UTF-16: probe
-        # the decoded head (Java's UTF-16/UTF-32 charsets honor the
-        # BOM, matching python's "utf-16"/"utf-32" codecs)
-        .when(
-            _u32bom & (
-                _u32low.startswith("<!doctype") | _u32low.startswith("<html")
-                | _u32low.startswith("<head") | _u32low.startswith("<body")
-                | _u32low.contains("<html")
-            ),
-            F.lit("html"),
-        )
-        .when(
-            _u32bom & _u32first.contains(",") & ~_u32first.contains("<"),
-            F.lit("csv"),
-        )
-        .when(_u32bom, F.lit("txt"))
-        .when(
-            _u16bom & (
-                _u16low.startswith("<!doctype") | _u16low.startswith("<html")
-                | _u16low.startswith("<head") | _u16low.startswith("<body")
-                | _u16low.contains("<html")
-            ),
-            F.lit("html"),
-        )
-        .when(
-            _u16bom & _u16first.contains(",") & ~_u16first.contains("<"),
-            F.lit("csv"),
-        )
-        .when(_u16bom, F.lit("txt"))
-        .when(
-            low.startswith("<!doctype") | low.startswith("<html")
-            | low.startswith("<head") | low.startswith("<body")
-            | low.contains("<html"),
-            F.lit("html"),
-        )
-        .when(
-            first_line.contains(",") & ~first_line.contains("<"),
-            F.lit("csv"),
-        )
-        .otherwise(F.lit("txt")),
-    )
-
-
-def route_parser(df: DataFrame) -> DataFrame:
-    """Three-way router (P1/P5 minus the LLM arm).
-
-    The reference routes text/spreadsheet → STATIC always, PDFs
-    without images → STATIC (``utils.py:557-588``); image files and
-    image-bearing PDFs route to the OCR arm (``bbox_router``,
-    ``utils.py:591-612``: image/* → paddleocr, pdf with images →
-    paddleocr, pdf without → pdfplumber). The LLM arm stays out of the
-    static rebuild's scope → UNSUPPORTED/quarantine.
-    """
-    return df.withColumn(
-        "route",
-        F.when(
-            F.col("doctype").isin("html", "csv", "txt", "zip"),
-            F.lit("STATIC"),
-        )
-        .when(
-            (F.col("doctype") == "pdf") & (~F.col("has_image")),
-            F.lit("STATIC"),
-        )
-        .when(
-            (F.col("doctype") == "image")
-            | ((F.col("doctype") == "pdf") & F.col("has_image")),
-            F.lit("OCR"),
-        )
-        .otherwise(F.lit("UNSUPPORTED")),
-    )
+    return df.withColumn("doctype", F.expr(_sniff_sql(payload_col)))
 
 
 def low_yield_split(extracted: DataFrame,

@@ -26,9 +26,10 @@ exactly-once batch pattern:
     resumes with no duplicates and no lost work.
 
 Only the dispatch kernel runs Python: progress, resume and lineage are
-JVM-only jobs, because every Python-worker task pays a fixed
-~0.20 CPU-s (``importlib.invalidate_caches()`` at task start) before
-it does any work.
+JVM-only jobs, because every Python-worker task pays a fixed cost
+(UDF unpickle, Arrow set-up, scheduling; a worker's first task also
+~0.20 CPU-s of ``importlib.invalidate_caches()``, see
+``zip_refresh``) before it does any work.
 
 At 10^12 rows the bucket count scales (e.g. 4096) and the group size
 matches cluster width; here the defaults are sandbox-sized. Run via::

@@ -67,13 +67,14 @@ def local_rows_df(spark, rows, schema):
     The rows go driver → Arrow → a ``LocalTableScan``: no Spark job
     and no Python worker. ``spark.createDataFrame(list)`` (or of a
     ``parallelize``d list) instead pickles the rows through a Python
-    job, and every Python-worker task pays ~0.20 CPU-s in
-    ``importlib.invalidate_caches()`` before it does anything. A 2-row
+    job: its tasks pay a UDF unpickle, Arrow set-up and scheduling, and
+    a worker's first task ~0.20 CPU-s more in
+    ``importlib.invalidate_caches()`` (see ``zip_refresh``). A 2-row
     ``coalesce(1)`` parquet append took 0.82–1.14 s from a list,
     0.23–0.38 s from a one-slice ``parallelize`` and 0.10–0.13 s this
-    way (4 CPUs, local mode). Do not inline the values as literal
-    structs either: each new value set compiles again. Empty ``rows``
-    give an empty LocalTableScan."""
+    way (4 CPUs, local mode, before the lazy refresh). Do not inline
+    the values as literal structs either: each new value set compiles
+    again. Empty ``rows`` give an empty LocalTableScan."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType

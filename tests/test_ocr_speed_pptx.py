@@ -42,19 +42,6 @@ def test_native_sniff_matches_kernel_for_images(spark):
     assert got == exp == ["image", "image", "image", "pdf", "txt"]
 
 
-def test_route_parser_three_way(spark):
-    from lexoid_spark.operators.routing import route_parser
-
-    rows = [
-        ("a", "html", False), ("b", "pdf", False), ("c", "pdf", True),
-        ("d", "image", False), ("e", "weird", False),
-    ]
-    df = spark.createDataFrame(rows, "url string, doctype string, has_image boolean")
-    got = {r["url"]: r["route"] for r in route_parser(df).collect()}
-    assert got == {"a": "STATIC", "b": "STATIC", "c": "OCR", "d": "OCR",
-                   "e": "UNSUPPORTED"}
-
-
 def test_pdf_flags_reference_strip_semantics():
     scanned = build_pdf([{"images": [(320, 240, 3)]}])
     assert pdf_flags(scanned) == (True, False)

@@ -474,8 +474,10 @@ def _traced(spark, group, fn):
 
 def test_job_control_plane_is_jvm_only(spark, tmp_path):
     """Progress, resume and lineage of the shipped job run no Python:
-    every Python-worker task pays a fixed ~0.2 CPU-s at start, so the
-    only Python tasks of ``run_extract_job`` are the dispatch kernel's.
+    every Python-worker task pays a fixed start cost (UDF unpickle,
+    Arrow set-up, scheduling; ~0.2 CPU-s more on a worker's first
+    task), so the only Python tasks of ``run_extract_job`` are the
+    dispatch kernel's.
     Pinned on the executed plans of the progress-rows write, the
     pending-buckets read and the lineage aggregate (over a JVM-only
     docs-shaped input), and on the job counts of the resume check:
@@ -514,3 +516,124 @@ def test_job_control_plane_is_jvm_only(spark, tmp_path):
     for plan in plans:
         for op in _PYTHON_OPS:
             assert op not in plan, plan
+
+
+def _column_api_doctype(df, payload_col="html"):
+    """Spec for ``routing.with_doctype``: the sniff spelled through the
+    Column API, as it was built before it became one SQL string."""
+    pc = F.col(payload_col)
+    head = F.decode(F.substring(pc, 1, 512), "ISO-8859-1")
+    low = F.lower(F.regexp_replace(head, r"^\s+", ""))
+    first_line = F.split(head, "\n").getItem(0)
+    _u32bom = F.hex(F.substring(pc, 1, 4)).isin("FFFE0000", "0000FEFF")
+    _u32 = F.decode(F.substring(pc, 1, 512), "UTF-32")
+    _u32low = F.lower(F.regexp_replace(_u32, r"^\s+", ""))
+    _u32first = F.split(_u32, "\n").getItem(0)
+    _u16bom = F.hex(F.substring(pc, 1, 2)).isin("FFFE", "FEFF")
+    _u16 = F.decode(F.substring(pc, 1, 512), "UTF-16")
+    _u16low = F.lower(F.regexp_replace(_u16, r"^\s+", ""))
+    _u16first = F.split(_u16, "\n").getItem(0)
+    return df.withColumn(
+        "doctype",
+        F.when(F.hex(F.substring(pc, 1, 5)) == "255044462D", F.lit("pdf"))
+        .when(F.hex(F.substring(pc, 1, 4)) == "504B0304", F.lit("zip"))
+        .when(
+            F.hex(F.substring(pc, 1, 4)).isin(
+                "494D4721", "89504E47", "47494638")
+            | (F.hex(F.substring(pc, 1, 3)) == "FFD8FF")
+            | (F.hex(F.substring(pc, 1, 8)) == "0000000C6A502020")
+            | (F.hex(F.substring(pc, 1, 2)) == "FF4F")
+            | F.hex(F.substring(pc, 1, 4)).isin("49492A00", "4D4D002A")
+            | ((F.hex(F.substring(pc, 1, 2)) == "424D")
+               & F.hex(F.substring(pc, 15, 4)).isin(
+                   "28000000", "34000000", "38000000",
+                   "6C000000", "7C000000"))
+            | ((F.hex(F.substring(pc, 1, 4)) == "52494646")
+               & (F.hex(F.substring(pc, 9, 4)) == "57454250")),
+            F.lit("image"),
+        )
+        .when(
+            _u32bom & (
+                _u32low.startswith("<!doctype") | _u32low.startswith("<html")
+                | _u32low.startswith("<head") | _u32low.startswith("<body")
+                | _u32low.contains("<html")
+            ),
+            F.lit("html"),
+        )
+        .when(_u32bom & _u32first.contains(",") & ~_u32first.contains("<"),
+              F.lit("csv"))
+        .when(_u32bom, F.lit("txt"))
+        .when(
+            _u16bom & (
+                _u16low.startswith("<!doctype") | _u16low.startswith("<html")
+                | _u16low.startswith("<head") | _u16low.startswith("<body")
+                | _u16low.contains("<html")
+            ),
+            F.lit("html"),
+        )
+        .when(_u16bom & _u16first.contains(",") & ~_u16first.contains("<"),
+              F.lit("csv"))
+        .when(_u16bom, F.lit("txt"))
+        .when(
+            low.startswith("<!doctype") | low.startswith("<html")
+            | low.startswith("<head") | low.startswith("<body")
+            | low.contains("<html"),
+            F.lit("html"),
+        )
+        .when(first_line.contains(",") & ~first_line.contains("<"),
+              F.lit("csv"))
+        .otherwise(F.lit("txt")),
+    )
+
+
+def _plan_texts(df):
+    import re
+
+    qe = df._jdf.queryExecution()
+    return [re.sub(r"#\d+L?", "#_", p.toString())
+            for p in (qe.analyzed(), qe.optimizedPlan())]
+
+
+@pytest.mark.parametrize("payload_col", ["html", "payload"])
+def test_sniff_plan_matches_column_api_spec(spark, payload_col):
+    """The one-SQL-string sniff analyzes and optimizes to exactly the
+    plan of its Column-API spelling (left-deep OR/AND chains, same
+    literals, same CASE arm order)."""
+    from lexoid_spark.operators.routing import with_doctype
+
+    src = spark.range(4).select(
+        "id", F.col("id").cast("string").cast("binary").alias(payload_col))
+    got = _plan_texts(with_doctype(src, payload_col=payload_col))
+    spec = _plan_texts(_column_api_doctype(src, payload_col=payload_col))
+    assert got == spec
+
+
+def test_sniff_build_is_a_few_gateway_commands(spark):
+    """Building the sniff costs a handful of py4j commands on the
+    driver, not the ~1,400 of the Column-API spelling: every
+    ``extract()`` builds it. Counted, not timed; py4j's ``m\\nd``
+    memory-release commands (garbage collection) are not counted."""
+    from lexoid_spark.operators.routing import with_doctype
+
+    src = spark.range(4).select(
+        F.col("id").cast("string").cast("binary").alias("html"))
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    real_send = client.send_command
+
+    def counting_send(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return real_send(command, *args, **kwargs)
+
+    client.send_command = counting_send
+    try:
+        with_doctype(src)
+        n_new = len(sent)
+        sent.clear()
+        _column_api_doctype(src)
+        n_spec = len(sent)
+    finally:
+        del client.send_command
+    assert n_new <= 10, n_new
+    assert n_spec > 100 * n_new  # the counter does see Column-API calls
