@@ -93,19 +93,16 @@ def _fixture_extract(spark, sf, host: str,
                      where=None, **extract_kw) -> dict:
     """Generated-fixture documents through the FULL extract() plan.
 
-    ``make_doc(doc_id) -> bytes`` builds one document; it runs inside a
-    binary pandas UDF named after it (so plans show the generator)
+    ``make_doc(doc_id) -> bytes`` builds one document; it runs as a
+    binary ``row_udf`` (named after it, so plans show the generator)
     over the fanned-out ``documents`` ids, optionally filtered by
     ``where``. Each page gets url ``http://<host>/<doc_id>``, a null
     ``warc_ts``, empty text and lang 'en'; the pages frame is pinned by
     ``_materialize`` and extracted in place (``repartition=False``).
     Returns extract()'s dict of frames."""
+    from lexoid_spark.functions.udfs import row_udf
     from lexoid_spark.plans.extract import extract
 
-    def gen(doc_ids: pd.Series) -> pd.Series:
-        return pd.Series([make_doc(int(d)) for d in doc_ids])
-
-    gen.__name__ = gen.__qualname__ = make_doc.__name__
     docs = _tp(spark, sf, "documents")
     if where is not None:
         docs = docs.filter(where)
@@ -113,7 +110,7 @@ def _fixture_extract(spark, sf, host: str,
         F.concat(F.lit(f"http://{host}/"),
                  F.col("doc_id").cast("string")).alias("url"),
         F.lit(None).cast("timestamp").alias("warc_ts"),
-        F.pandas_udf(gen, "binary")("doc_id").alias("html"),
+        row_udf(make_doc, "binary")("doc_id").alias("html"),
         F.lit("").alias("text"),
         F.lit("en").alias("lang"),
     )
@@ -2041,23 +2038,18 @@ def _webp_meta(spark, sf):
     typed); dims/alpha are closed-form in the doc row, so DuckDB
     predicts every value."""
     from lexoid_spark.functions.multimodal import image_meta
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.webp_meta import make_test_webp
 
-    @F.pandas_udf("binary")
-    def webp_bytes(doc_ids: pd.Series, n_chars: pd.Series) -> pd.Series:
-        from lexoid_spark.kernels.webp_meta import make_test_webp
-
-        flavors = ("vp8", "vp8l", "vp8x")
-        out = []
-        for d, nc in zip(doc_ids, n_chars):
-            d, nc = int(d), int(nc)
-            out.append(make_test_webp(
-                nc % 120 + 8, (nc * 7) % 90 + 8,
-                flavor=flavors[d % 3], alpha=bool(d % 2)))
-        return pd.Series(out)
+    def webp_bytes(d: int, nc: int) -> bytes:
+        return make_test_webp(
+            nc % 120 + 8, (nc * 7) % 90 + 8,
+            flavor=("vp8", "vp8l", "vp8x")[d % 3], alpha=bool(d % 2))
 
     docs = _t(spark, sf, "documents")
     imgs = docs.select(
-        "doc_id", webp_bytes("doc_id", "n_chars").alias("payload"))
+        "doc_id",
+        row_udf(webp_bytes, "binary")("doc_id", "n_chars").alias("payload"))
     return (
         image_meta(imgs, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "width", "height",
@@ -2114,18 +2106,16 @@ def _jpeg_meta(spark, sf):
     from the SOF frame header (kernels/jpeg_meta.py) — the wild
     format's metadata path; pixel decode stays behind the codec seam."""
     from lexoid_spark.functions.multimodal import image_meta
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.jpeg_meta import make_test_jpeg_header
 
-    @F.pandas_udf("binary")
-    def jpg(doc_ids: pd.Series) -> pd.Series:
-        from lexoid_spark.kernels.jpeg_meta import make_test_jpeg_header
-        return pd.Series([
-            make_test_jpeg_header(int(d) % 1600 + 16, (int(d) * 3) % 900 + 16,
-                                  int(d) % 3 + 1)
-            for d in doc_ids
-        ])
+    def jpg(d: int) -> bytes:
+        return make_test_jpeg_header(d % 1600 + 16, (d * 3) % 900 + 16,
+                                     d % 3 + 1)
 
     docs = _t(spark, sf, "documents")
-    jpgs = docs.select("doc_id", jpg("doc_id").alias("payload"))
+    jpgs = docs.select("doc_id",
+                       row_udf(jpg, "binary")("doc_id").alias("payload"))
     return (
         image_meta(jpgs, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "width", "height",
@@ -2222,19 +2212,15 @@ def _png_dialects(spark, sf):
     both via PIL (lexoid/core/utils.py:65-89)."""
     import numpy as np
 
-    @F.pandas_udf("boolean")
-    def dialect_roundtrip(w: pd.Series, h: pd.Series, seed: pd.Series,
-                          variant: pd.Series) -> pd.Series:
-        from lexoid_spark.kernels.png_codec import (
-            make_test_png, png_decode, png_encode)
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.png_codec import (
+        make_test_png, png_decode, png_encode)
 
-        out = []
-        for wi, hi, si, vi in zip(w, h, seed, variant):
-            base = png_decode(make_test_png(int(wi), int(hi), seed=int(si)))
-            enc = png_encode(base, depth=16 if vi >= 1 else 8,
-                             interlace=vi != 1)
-            out.append(bool(np.array_equal(png_decode(enc), base)))
-        return pd.Series(out)
+    def dialect_roundtrip(w: int, h: int, seed: int, variant: int) -> bool:
+        base = png_decode(make_test_png(w, h, seed=seed))
+        enc = png_encode(base, depth=16 if variant >= 1 else 8,
+                         interlace=variant != 1)
+        return bool(np.array_equal(png_decode(enc), base))
 
     docs = _tp(spark, sf, "documents")
     v = (F.col("doc_id") % 3).cast("int")
@@ -2245,7 +2231,7 @@ def _png_dialects(spark, sf):
             v + 1).alias("dialect"),
         (F.col("n_chars") % 120 + 8).cast("int").alias("width"),
         ((F.col("n_chars") * 7) % 90 + 8).cast("int").alias("height"),
-        dialect_roundtrip(
+        row_udf(dialect_roundtrip, "boolean")(
             (F.col("n_chars") % 120 + 8).cast("int"),
             ((F.col("n_chars") * 7) % 90 + 8).cast("int"),
             (F.col("doc_id") % 256).cast("int"), v,
@@ -2330,27 +2316,19 @@ def _jpeg_progressive(spark, sf):
     (utils.py:65-89)."""
     import numpy as np
 
-    @F.pandas_udf("boolean")
-    def prog_roundtrip(w: pd.Series, h: pd.Series,
-                       seed: pd.Series) -> pd.Series:
-        from lexoid_spark.kernels.jpeg_codec import (
-            jpeg_decode, jpeg_encode)
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.jpeg_codec import jpeg_decode, jpeg_encode
 
-        out = []
-        for wi, hi, si in zip(w, h, seed):
-            y = np.arange(int(hi))[:, None, None]
-            x = np.arange(int(wi))[None, :, None]
-            ch = np.arange(3)[None, None, :]
-            px = ((x * 31 + y * 17 + ch * 7 + int(si) * 13) % 256
-                  ).astype(np.uint8)
-            sub = "420" if int(si) % 2 else "444"
-            base = jpeg_decode(jpeg_encode(px, quality=90,
-                                           subsample=sub))
-            prog = jpeg_decode(jpeg_encode(px, quality=90,
-                                           subsample=sub,
-                                           progressive=True))
-            out.append(bool(np.array_equal(base, prog)))
-        return pd.Series(out)
+    def prog_roundtrip(w: int, h: int, seed: int) -> bool:
+        y = np.arange(h)[:, None, None]
+        x = np.arange(w)[None, :, None]
+        ch = np.arange(3)[None, None, :]
+        px = ((x * 31 + y * 17 + ch * 7 + seed * 13) % 256).astype(np.uint8)
+        sub = "420" if seed % 2 else "444"
+        base = jpeg_decode(jpeg_encode(px, quality=90, subsample=sub))
+        prog = jpeg_decode(jpeg_encode(px, quality=90, subsample=sub,
+                                       progressive=True))
+        return bool(np.array_equal(base, prog))
 
     # deterministic 1-in-10 doc subset + small rasters: the scan
     # script is 10 python-loop entropy passes per doc (4 codec runs),
@@ -2364,7 +2342,7 @@ def _jpeg_progressive(spark, sf):
         F.element_at(F.array(F.lit("444"), F.lit("420")),
                      (F.col("doc_id") % 2).cast("int") + 1
                      ).alias("subsample"),
-        prog_roundtrip(
+        row_udf(prog_roundtrip, "boolean")(
             (F.col("n_chars") % 48 + 8).cast("int"),
             ((F.col("n_chars") * 5) % 36 + 8).cast("int"),
             (F.col("doc_id") % 64).cast("int"),
@@ -2422,24 +2400,18 @@ def _mp3_meta(spark, sf):
     DuckDB predicts every value including the exact-integer half-up
     duration. Metadata fixture class (decode arms quarantine typed)."""
     from lexoid_spark.functions.multimodal import audio_meta
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.mp3_meta import make_test_mp3
 
-    @F.pandas_udf("binary")
-    def mp3_bytes(doc_ids: pd.Series, n_chars: pd.Series) -> pd.Series:
-        from lexoid_spark.kernels.mp3_meta import make_test_mp3
-
-        rates = (44100, 48000, 32000)
-        kbps = (96, 128, 160, 192)
-        out = []
-        for d, nc in zip(doc_ids, n_chars):
-            d, nc = int(d), int(nc)
-            out.append(make_test_mp3(
-                nc % 20 + 3, kbps=kbps[d % 4], rate=rates[d % 3],
-                id3=bool(d % 2)))
-        return pd.Series(out)
+    def mp3_bytes(d: int, nc: int) -> bytes:
+        return make_test_mp3(
+            nc % 20 + 3, kbps=(96, 128, 160, 192)[d % 4],
+            rate=(44100, 48000, 32000)[d % 3], id3=bool(d % 2))
 
     docs = _t(spark, sf, "documents")
     auds = docs.select(
-        "doc_id", mp3_bytes("doc_id", "n_chars").alias("payload"))
+        "doc_id",
+        row_udf(mp3_bytes, "binary")("doc_id", "n_chars").alias("payload"))
     return (
         audio_meta(auds, id_col="doc_id")
         .select(F.col("id").alias("doc_id"), "sample_rate", "n_samples",
@@ -2528,38 +2500,22 @@ def _video_frame_ocr(spark, sf):
     Reference has no video path — this is LLM-pipeline surface.
     Closed-form per (doc_id, frame), so DuckDB predicts every row."""
     from lexoid_spark.functions.multimodal import frame_ocr
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.h264 import h264_encode_ipcm
+    from lexoid_spark.kernels.mp4_avc import make_test_mp4_h264
+    from lexoid_spark.kernels.ocr_glyph import render_text_frames
 
-    @F.pandas_udf("binary")
-    def h264_vid(doc_ids: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from lexoid_spark.kernels.h264 import h264_encode_ipcm
-        from lexoid_spark.kernels.mp4_avc import make_test_mp4_h264
-        from lexoid_spark.kernels.ocr_glyph import render_text
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 3 + 2
-            fr = [render_text(f"VID {d % 100} F {i}", scale=2)
-                  for i in range(k)]
-            H = max(a.shape[0] for a in fr)
-            W = max(a.shape[1] for a in fr)
-            H += H % 2
-            W += W % 2
-            padded = np.stack([
-                np.pad(a, ((0, H - a.shape[0]), (0, W - a.shape[1])),
-                       constant_values=255)
-                for a in fr
-            ])
-            out.append(h264_encode_ipcm(padded) if d % 2 == 0
-                       else make_test_mp4_h264(padded))
-        return pd.Series(out)
+    def h264_vid(d: int) -> bytes:
+        frames = render_text_frames(
+            [f"VID {d % 100} F {i}" for i in range(d % 3 + 2)], even=True)
+        return (h264_encode_ipcm(frames) if d % 2 == 0
+                else make_test_mp4_h264(frames))
 
     # 1-in-13 subset: encode+decode+OCR of k frames is honest
     # per-doc pixel work
     docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 13 == 0)
-    vids = docs.select("doc_id", h264_vid("doc_id").alias("payload"))
+    vids = docs.select("doc_id",
+                       row_udf(h264_vid, "binary")("doc_id").alias("payload"))
     return (
         frame_ocr(vids, every_n=2, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "frame_idx", "text")
@@ -2588,34 +2544,19 @@ def _video_mjpeg_ocr(spark, sf):
     predicts every row. Reference has no video path — LLM-pipeline
     surface."""
     from lexoid_spark.functions.multimodal import frame_ocr
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.mp4_avc import make_test_mp4_mjpeg
+    from lexoid_spark.kernels.ocr_glyph import render_text_frames
 
-    @F.pandas_udf("binary")
-    def mjpeg_vid(doc_ids: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from lexoid_spark.kernels.mp4_avc import make_test_mp4_mjpeg
-        from lexoid_spark.kernels.ocr_glyph import render_text
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 3 + 2
-            fr = [render_text(f"MJ {d % 100} F {i}", scale=2)
-                  for i in range(k)]
-            H = max(a.shape[0] for a in fr)
-            W = max(a.shape[1] for a in fr)
-            padded = np.stack([
-                np.pad(a, ((0, H - a.shape[0]), (0, W - a.shape[1])),
-                       constant_values=255)
-                for a in fr
-            ])
-            out.append(make_test_mp4_mjpeg(padded, quality=90))
-        return pd.Series(out)
+    def mjpeg_vid(d: int) -> bytes:
+        return make_test_mp4_mjpeg(render_text_frames(
+            [f"MJ {d % 100} F {i}" for i in range(d % 3 + 2)]), quality=90)
 
     # 1-in-11 subset (offset from video_frame_ocr's 1-in-13):
     # encode+decode of k JPEG frames is honest per-doc pixel work
     docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 11 == 7)
-    vids = docs.select("doc_id", mjpeg_vid("doc_id").alias("payload"))
+    vids = docs.select("doc_id",
+                       row_udf(mjpeg_vid, "binary")("doc_id").alias("payload"))
     return (
         frame_ocr(vids, every_n=2, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "frame_idx", "text")
@@ -2643,33 +2584,18 @@ def _avi_mjpeg_ocr(spark, sf):
     per (doc_id, frame). Reference has no video path — LLM-pipeline
     surface."""
     from lexoid_spark.functions.multimodal import frame_ocr
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.avi import make_test_avi_mjpeg
+    from lexoid_spark.kernels.ocr_glyph import render_text_frames
 
-    @F.pandas_udf("binary")
-    def avi_vid(doc_ids: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from lexoid_spark.kernels.avi import make_test_avi_mjpeg
-        from lexoid_spark.kernels.ocr_glyph import render_text
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 3 + 2
-            fr = [render_text(f"AV {d % 100} F {i}", scale=2)
-                  for i in range(k)]
-            H = max(a.shape[0] for a in fr)
-            W = max(a.shape[1] for a in fr)
-            padded = np.stack([
-                np.pad(a, ((0, H - a.shape[0]), (0, W - a.shape[1])),
-                       constant_values=255)
-                for a in fr
-            ])
-            out.append(make_test_avi_mjpeg(
-                padded, quality=90, omit_dht=bool(d % 2)))
-        return pd.Series(out)
+    def avi_vid(d: int) -> bytes:
+        return make_test_avi_mjpeg(render_text_frames(
+            [f"AV {d % 100} F {i}" for i in range(d % 3 + 2)]),
+            quality=90, omit_dht=bool(d % 2))
 
     docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 9 == 4)
-    vids = docs.select("doc_id", avi_vid("doc_id").alias("payload"))
+    vids = docs.select("doc_id",
+                       row_udf(avi_vid, "binary")("doc_id").alias("payload"))
     return (
         frame_ocr(vids, every_n=2, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "frame_idx", "text")
@@ -2695,33 +2621,26 @@ def _flac_meta(spark, sf):
     in-kernel. The sample pattern is closed-form in (doc_id, i), so
     DuckDB predicts the sums exactly (integer arithmetic end to
     end). Reference has no audio path — LLM-pipeline surface."""
+    from lexoid_spark.functions.multimodal import (
+        decode_audio_header,
+        decode_audio_samples,
+    )
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.flac import make_test_flac
 
-    @F.pandas_udf("struct<sample_rate:int, n_samples:bigint, "
-                  "sample_sum:bigint>")
-    def fl(doc_ids: pd.Series) -> pd.DataFrame:
-        from lexoid_spark.functions.multimodal import (
-            decode_audio_header,
-            decode_audio_samples,
-        )
-        from lexoid_spark.kernels.flac import make_test_flac
-
-        rows = []
-        for d in doc_ids:
-            d = int(d)
-            b = make_test_flac(16000, d % 800 + 160, seed=d % 32,
-                               order=d % 3,
-                               lpc=(d % 2 == 1 and d % 3 > 0))
-            sr, n = decode_audio_header(b)
-            s = decode_audio_samples(b)
-            rows.append((sr, n, int(s.sum())))
-        return pd.DataFrame(
-            rows, columns=["sample_rate", "n_samples", "sample_sum"])
+    def flac_stats(d: int) -> list[int]:
+        """[sample_rate, n_samples, sample_sum] of one generated FLAC."""
+        b = make_test_flac(16000, d % 800 + 160, seed=d % 32, order=d % 3,
+                           lpc=(d % 2 == 1 and d % 3 > 0))
+        return [*decode_audio_header(b), int(decode_audio_samples(b).sum())]
 
     docs = _tp(spark, sf, "documents")
+    m = row_udf(flac_stats, "array<bigint>")("doc_id")
     return (
-        docs.select("doc_id", fl("doc_id").alias("m"))
-        .select("doc_id", "m.sample_rate", "m.n_samples",
-                "m.sample_sum")
+        docs.select("doc_id", m.alias("m"))
+        .select("doc_id", F.col("m")[0].cast("int").alias("sample_rate"),
+                F.col("m")[1].alias("n_samples"),
+                F.col("m")[2].alias("sample_sum"))
         .transform(_srt("doc_id"))
     )
 
@@ -2746,17 +2665,15 @@ def _wav_meta(spark, sf):
     a hash match proves the encode→parse round trip; duration derives
     in-engine (same exact-integer half-up as audio_meta)."""
     from lexoid_spark.functions.multimodal import audio_meta
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.wav_meta import make_test_wav
 
-    @F.pandas_udf("binary")
-    def wav(doc_ids: pd.Series) -> pd.Series:
-        from lexoid_spark.kernels.wav_meta import make_test_wav
-        return pd.Series([
-            make_test_wav(16000, int(d) % 8000 + 1600, seed=int(d) % 32)
-            for d in doc_ids
-        ])
+    def wav(d: int) -> bytes:
+        return make_test_wav(16000, d % 8000 + 1600, seed=d % 32)
 
     docs = _tp(spark, sf, "documents")
-    wavs = docs.select("doc_id", wav("doc_id").alias("payload"))
+    wavs = docs.select("doc_id",
+                       row_udf(wav, "binary")("doc_id").alias("payload"))
     return (
         audio_meta(wavs, id_col="doc_id")
         .select(F.col("id").alias("doc_id"), "sample_rate", "n_samples",
@@ -2779,18 +2696,15 @@ def _mp4_frames(spark, sf):
     fixed point), frame count from stts — the stdlib ISO-BMFF walk
     (kernels/mp4_meta.py) driving the UDTF-shaped sampler."""
     from lexoid_spark.functions.multimodal import frame_sample
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.mp4_meta import make_test_mp4
 
-    @F.pandas_udf("binary")
-    def mp4(doc_ids: pd.Series) -> pd.Series:
-        from lexoid_spark.kernels.mp4_meta import make_test_mp4
-        return pd.Series([
-            make_test_mp4(int(d) % 640 + 16, (int(d) * 3) % 360 + 16,
-                          int(d) % 40 + 5)
-            for d in doc_ids
-        ])
+    def mp4(d: int) -> bytes:
+        return make_test_mp4(d % 640 + 16, (d * 3) % 360 + 16, d % 40 + 5)
 
     docs = _tp(spark, sf, "documents")
-    vids = docs.select("doc_id", mp4("doc_id").alias("payload"))
+    vids = docs.select("doc_id",
+                       row_udf(mp4, "binary")("doc_id").alias("payload"))
     return (
         frame_sample(vids, every_n=7, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "frame_idx", "width", "height")
@@ -2810,7 +2724,8 @@ FROM documents ORDER BY doc_id, frame_idx
 # ---- extraction kernels with SQL-constructible ground truth ----
 
 def _extract_html_h1(spark, sf):
-    from lexoid_spark.functions.udfs import html_to_md_udf
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.html_md import html_to_md
 
     docs = _tp(spark, sf, "documents")
     html = F.concat(
@@ -2818,7 +2733,7 @@ def _extract_html_h1(spark, sf):
         F.lit("</h1><p>"), F.col("text"), F.lit("</p></body></html>"),
     )
     return docs.select(
-        "doc_id", html_to_md_udf(html).getField("raw").alias("raw")
+        "doc_id", row_udf(html_to_md, "string")(html).alias("raw")
     ).transform(_srt("doc_id"))
 
 
@@ -2837,7 +2752,11 @@ def _extract_html_main(spark, sf):
     banner / page header / social-share / footer chrome — the
     tag+class blocklists must strip ALL of it, leaving exactly the
     h1+paragraph markdown the oracle predicts."""
-    from lexoid_spark.functions.udfs import html_main_to_md_udf
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.html_md import html_to_md
+
+    def html_main_to_md(html: str) -> str:
+        return html_to_md(html, main_content=True)
 
     docs = _tp(spark, sf, "documents")
     html = F.concat(
@@ -2857,7 +2776,7 @@ def _extract_html_main(spark, sf):
         ),
     )
     return docs.select(
-        "doc_id", html_main_to_md_udf(html).getField("raw").alias("raw")
+        "doc_id", row_udf(html_main_to_md, "string")(html).alias("raw")
     ).transform(_srt("doc_id"))
 
 
@@ -2882,7 +2801,8 @@ def _html_charset_1252(spark, sf):
     reaches the same behavior class through BeautifulSoup's
     UnicodeDammit + iso-8859-1 retry (utils.py:356-363); the old
     errors='ignore' path would silently DROP every non-UTF-8 byte."""
-    from lexoid_spark.functions.udfs import html_to_md_udf
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.html_md import html_to_md
 
     docs = _tp(spark, sf, "documents")
     pre = ('<html><head><meta http-equiv="Content-Type" '
@@ -2897,7 +2817,7 @@ def _html_charset_1252(spark, sf):
         F.lit(bytearray(post)),
     )
     return docs.select(
-        "doc_id", html_to_md_udf(payload).getField("raw").alias("raw")
+        "doc_id", row_udf(html_to_md, "string")(payload).alias("raw")
     ).transform(_srt("doc_id"))
 
 
@@ -2918,7 +2838,7 @@ def _rtf_extract(spark, sf):
     Unicode fallbacks, decode \\'xx through the windows-1252 table
     and map \\par to newline — the oracle predicts the exact
     recovered text. Reference has no RTF path — web corpora do."""
-    from lexoid_spark.functions.udfs import txt_decode_udf
+    from lexoid_spark.functions.udfs import _txt_decode, row_udf
 
     docs = _tp(spark, sf, "documents")
     body = F.concat(
@@ -2932,8 +2852,8 @@ def _rtf_extract(spark, sf):
     )
     return docs.select(
         "doc_id",
-        txt_decode_udf(F.encode(body, "UTF-8"))
-        .getField("raw").alias("raw"),
+        row_udf(_txt_decode, "string")(F.encode(body, "UTF-8"))
+        .alias("raw"),
     ).transform(_srt("doc_id"))
 
 
@@ -2954,31 +2874,24 @@ def _epub_extract(spark, sf):
     so a hash match pins container resolution, OPF spine ordering and
     the chapter HTML conversion end to end. Reference has no EPUB
     path — LLM-pipeline surface."""
+    from lexoid_spark.corpus.gen import make_test_epub
+    from lexoid_spark.functions.udfs import row_udf
     from lexoid_spark.kernels.office_md import epub_to_md
 
-    @F.pandas_udf("binary")
-    def epub_bytes(doc_ids: pd.Series, texts: pd.Series,
-                   sources: pd.Series) -> pd.Series:
-        from lexoid_spark.corpus.gen import make_test_epub
-
-        out = []
-        for d, t, s in zip(doc_ids, texts, sources):
-            out.append(make_test_epub([
-                (f"Doc {int(d)} Ch 1", t),
-                (f"Doc {int(d)} Ch 2", f"chapter two of {s}"),
-            ]))
-        return pd.Series(out)
-
-    @F.pandas_udf("string")
-    def epub_md(payloads: pd.Series) -> pd.Series:
-        return pd.Series([epub_to_md(p) for p in payloads])
+    def epub_bytes(d: int, text: str, source: str) -> bytes:
+        return make_test_epub([
+            (f"Doc {d} Ch 1", text),
+            (f"Doc {d} Ch 2", f"chapter two of {source}"),
+        ])
 
     # _tp: zip+XML+HTML per doc is compute-bound — fan out past the
     # ≤3 parquet splits before the heavy map
     docs = _tp(spark, sf, "documents")
     return docs.select(
         "doc_id",
-        epub_md(epub_bytes("doc_id", "text", "source")).alias("raw"),
+        row_udf(epub_to_md, "string")(
+            row_udf(epub_bytes, "binary")("doc_id", "text", "source")
+        ).alias("raw"),
     ).transform(_srt("doc_id"))
 
 
@@ -2998,7 +2911,12 @@ FROM documents ORDER BY doc_id
 
 
 def _extract_segments_n(spark, sf):
-    from lexoid_spark.functions.udfs import html_to_md_udf, segment_md_udf
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.html_md import html_to_md
+    from lexoid_spark.kernels.segmenter import segment_md
+
+    def segment_count(md: str) -> int:
+        return len(segment_md(md))
 
     docs = _t(spark, sf, "documents")
     n = (F.col("n_chars") % 4 + 2).cast("int")
@@ -3008,9 +2926,9 @@ def _extract_segments_n(spark, sf):
         F.repeat(F.lit("<h3>Sec</h3><p>body words</p>"), n),
         F.lit("</body></html>"),
     )
-    raw = html_to_md_udf(html).getField("raw")
+    raw = row_udf(html_to_md, "string")(html)
     return docs.select(
-        "doc_id", F.size(segment_md_udf(raw)).alias("n_segments")
+        "doc_id", row_udf(segment_count, "int")(raw).alias("n_segments")
     ).transform(_srt("doc_id"))
 
 
@@ -3192,7 +3110,8 @@ FROM m ORDER BY doc_id
 def _low_yield_split(spark, sf):
     """P4 short-circuit as a query: extract SQL-constructible html,
     classify by stripped yield length against the threshold."""
-    from lexoid_spark.functions.udfs import html_to_md_udf
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.html_md import html_to_md
     from lexoid_spark.operators.routing import low_yield_split
 
     docs = _t(spark, sf, "documents")
@@ -3203,7 +3122,7 @@ def _low_yield_split(spark, sf):
         F.lit("</p></body></html>"),
     )
     extracted = docs.select(
-        "doc_id", html_to_md_udf(html).getField("raw").alias("raw")
+        "doc_id", row_udf(html_to_md, "string")(html).alias("raw")
     )
     parts = low_yield_split(extracted, character_threshold=60)
     kept = parts["kept"].select("doc_id", F.lit("kept").alias("bucket"))
@@ -3321,27 +3240,21 @@ def _pdf_word_boxes(spark, sf):
     tokenizer → layout state machine → normalized bbox rows
     (mixed-corpus PDFs are pinned to goldens in tests/test_pdf_bboxes)."""
     from lexoid_spark.corpus.pdf_gen import build_pdf
-    from lexoid_spark.functions.udfs import pdf_word_boxes
+    from lexoid_spark.functions.udfs import pdf_word_boxes, row_udf
 
-    @F.pandas_udf("binary")
-    def word_grid_pdf(doc_ids: pd.Series) -> pd.Series:
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            k = d % 4 + 2
-            y = float(700 - (d % 5) * 20)
-            words = [
-                {"text": f"w{j}x{d % 7}", "x": 72.0 + 50.0 * j, "y": y,
-                 "size": 12.0, "font": "F1"}
-                for j in range(k)
-            ]
-            out.append(build_pdf([{"words": words}]))
-        return pd.Series(out)
+    def word_grid_pdf(d: int) -> bytes:
+        y = float(700 - (d % 5) * 20)
+        words = [
+            {"text": f"w{j}x{d % 7}", "x": 72.0 + 50.0 * j, "y": y,
+             "size": 12.0, "font": "F1"}
+            for j in range(d % 4 + 2)
+        ]
+        return build_pdf([{"words": words}])
 
     docs = _t(spark, sf, "documents")
     pdfs = docs.select(
         F.col("doc_id").cast("string").alias("url"),
-        word_grid_pdf("doc_id").alias("html"),
+        row_udf(word_grid_pdf, "binary")("doc_id").alias("html"),
     )
     return (
         pdf_word_boxes(pdfs)
@@ -3618,25 +3531,20 @@ def _bmp_tiff_meta(spark, sf):
     TIFF alternating little/big endian — image_meta must read the
     same dims/channels the oracle derives from n_chars arithmetic."""
     from lexoid_spark.functions.multimodal import image_meta
+    from lexoid_spark.functions.udfs import row_udf
     from lexoid_spark.kernels.tiff_bmp import build_bmp, build_tiff
 
-    @F.pandas_udf("binary")
-    def payload(doc_ids: pd.Series, n_chars: pd.Series) -> pd.Series:
-        out = []
-        for d, n in zip(doc_ids, n_chars):
-            d, n = int(d), int(n)
-            w = n % 300 + 10
-            h = (n * 3) % 200 + 5
-            if d % 2 == 0:
-                out.append(build_bmp(w, h, bits=24))
-            else:
-                out.append(build_tiff(w, h, samples=d % 3 + 1,
-                                      big_endian=(d % 4 == 3)))
-        return pd.Series(out)
+    def payload(d: int, n: int) -> bytes:
+        w = n % 300 + 10
+        h = (n * 3) % 200 + 5
+        if d % 2 == 0:
+            return build_bmp(w, h, bits=24)
+        return build_tiff(w, h, samples=d % 3 + 1, big_endian=(d % 4 == 3))
 
     docs = _tp(spark, sf, "documents")
-    imgs = docs.select("doc_id",
-                       payload("doc_id", "n_chars").alias("payload"))
+    imgs = docs.select(
+        "doc_id",
+        row_udf(payload, "binary")("doc_id", "n_chars").alias("payload"))
     return (
         image_meta(imgs, id_col="doc_id", bin_col="payload")
         .select(F.col("id").alias("doc_id"), "width", "height",
@@ -6363,20 +6271,15 @@ def _warc_gz_ingest(spark, sf):
     oracle recomputes url/index/byte-count straight from the documents
     table; hostile/truncated members quarantine typed (pinned in
     tests/test_warc.py)."""
+    from lexoid_spark.functions.udfs import row_udf
+    from lexoid_spark.kernels.warc import build_record
     from lexoid_spark.sources.warc import read_warc_blobs
 
-    @F.pandas_udf("binary")
-    def gz_blob(sources: pd.Series, payload: pd.Series) -> pd.Series:
-        from lexoid_spark.kernels.warc import build_record
-
-        out = []
-        for src, recs in zip(sources, payload):
-            out.append(b"".join(
-                build_record("response", r["url"],
-                             "2024-01-01T00:00:00Z",
-                             r["http"].encode(), gz=True)
-                for r in recs))
-        return pd.Series(out)
+    def gz_blob(recs) -> bytes:
+        return b"".join(
+            build_record("response", r["url"], "2024-01-01T00:00:00Z",
+                         r["http"].encode(), gz=True)
+            for r in recs)
 
     docs = _tp(spark, sf, "documents").filter(F.col("doc_id") % 3 == 0)
     url = F.concat(F.lit("https://"), F.col("source"),
@@ -6399,7 +6302,7 @@ def _warc_gz_ingest(spark, sf):
         .select(
             F.regexp_extract("source", r"(\d+)", 1).cast("long")
             .alias("id"),
-            gz_blob("source", "recs").alias("data"),
+            row_udf(gz_blob, "binary")("recs").alias("data"),
         )
     )
     out = read_warc_blobs(blobs, "id", "data", strip_http=True)
@@ -6709,7 +6612,14 @@ def _sitemap_gz_parse(spark, sf):
     (operators/robots.py::parse_sitemap_bytes). Same closed-form
     document set as sitemap_frontier, so DuckDB predicts every (host,
     url, lastmod) row without modeling gzip at all."""
+    import zlib
+
+    from lexoid_spark.functions.udfs import row_udf
     from lexoid_spark.operators.robots import parse_sitemap_bytes
+
+    def gz(xml: str) -> bytes:
+        c = zlib.compressobj(9, zlib.DEFLATED, 31)
+        return c.compress(xml.encode()) + c.flush()
 
     docs = _t(spark, sf, "documents")
     entry = F.concat(
@@ -6725,17 +6635,6 @@ def _sitemap_gz_parse(spark, sf):
         ).otherwise(F.lit("")),
         F.lit("</url>"),
     )
-
-    @F.pandas_udf("binary")
-    def gz(xml: pd.Series) -> pd.Series:
-        import zlib
-
-        out = []
-        for x in xml:
-            c = zlib.compressobj(9, zlib.DEFLATED, 31)
-            out.append(c.compress(x.encode()) + c.flush())
-        return pd.Series(out)
-
     sitemaps = (
         docs.select("source", F.struct("doc_id", entry.alias("e")).alias("s"))
         .groupBy("source")
@@ -6750,7 +6649,7 @@ def _sitemap_gz_parse(spark, sf):
         )
         .select(
             F.concat(F.col("source"), F.lit(".example.com")).alias("host"),
-            gz("sitemap_xml").alias("sitemap_blob"),
+            row_udf(gz, "binary")("sitemap_xml").alias("sitemap_blob"),
         )
     )
     return parse_sitemap_bytes(sitemaps).transform(_srt("url"))

@@ -77,22 +77,6 @@ def _minhash_hash32(sh: Column, k: int) -> Column:
     ).cast("long")
 
 
-def minhash_signature(shingle_col, num_hashes: int = 16) -> Column:
-    """K minhash values: min over shingles of hash_k(shingle).
-
-    Column form for small inputs/oracle checks. For bulk use prefer
-    :func:`minhash_signatures` — Catalyst inlines ``shingle_col`` into
-    every one of the K lambda bodies here (no CSE across higher-order
-    functions), re-tokenizing the document K times.
-    """
-    return F.array(*[
-        F.array_min(
-            F.transform(shingle_col, lambda s, k=k: _minhash_hash32(s, k))
-        )
-        for k in range(num_hashes)
-    ])
-
-
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        num_hashes: int = 16,
                        shingle_n: int = 3) -> DataFrame:

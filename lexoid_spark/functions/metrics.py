@@ -10,16 +10,17 @@ are inherently per-pair algorithms → Arrow-batched pandas UDFs
 
 from __future__ import annotations
 
+import difflib
 import math
 import re
 from collections import Counter
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lexoid_spark.functions.textstats import tokens
+from lexoid_spark.functions.udfs import row_udf
 
 
 def _toklist(s: str) -> list[str]:
@@ -51,22 +52,17 @@ def _tfidf_cosine_pair(a: str, b: str) -> float:
     return dot / (na * nb) if na and nb else 0.0
 
 
-@F.pandas_udf(T.DoubleType())
-def seq_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+def seq_ratio(a: str | None, b: str | None) -> float:
     """difflib.SequenceMatcher ratio (reference benchmark_utils.py:31-41)."""
-    import difflib
-
-    return pd.Series([
-        difflib.SequenceMatcher(None, x or "", y or "").ratio()
-        for x, y in zip(a, b)
-    ])
+    return difflib.SequenceMatcher(None, a or "", b or "").ratio()
 
 
-@F.pandas_udf(T.DoubleType())
-def tfidf_cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([
-        _tfidf_cosine_pair(x or "", y or "") for x, y in zip(a, b)
-    ])
+def tfidf_cosine(a: str | None, b: str | None) -> float:
+    return _tfidf_cosine_pair(a or "", b or "")
+
+
+seq_ratio_udf = row_udf(seq_ratio, T.DoubleType())
+tfidf_cosine_udf = row_udf(tfidf_cosine, T.DoubleType())
 
 
 def token_set_metrics(a, b) -> dict[str, Column]:

@@ -35,6 +35,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lexoid_spark.functions.udfs import row_udf
+from lexoid_spark.kernels.gif_codec import make_test_gif
+from lexoid_spark.kernels.jpeg_codec import make_test_jpeg
+from lexoid_spark.kernels.png_codec import make_test_png
+
 IMG_MAGIC = b"IMG!"
 VID_MAGIC = b"VID!"
 AUD_MAGIC = b"AUD!"
@@ -500,65 +505,18 @@ def audio_chunks(df: DataFrame, chunk_sec: float = 30.0,
 
 # --- fake-corpus builders (Spark-side, vectorized) ----------------------------
 
-@F.pandas_udf(T.BinaryType())
-def fake_image_udf(width: pd.Series, height: pd.Series,
-                   channels: pd.Series) -> pd.Series:
-    return pd.Series([
-        encode_fake_image(int(w), int(h), int(c))
-        for w, h, c in zip(width, height, channels)
-    ])
+
+def png_image(width: int, height: int, seed: int) -> bytes:
+    """REAL RGB PNG bytes (stdlib encoder, deterministic pixels)."""
+    return make_test_png(width, height, 3, seed)
 
 
-@F.pandas_udf(T.BinaryType())
-def png_image_udf(width: pd.Series, height: pd.Series,
-                  seed: pd.Series) -> pd.Series:
-    """REAL PNG bytes (stdlib encoder, deterministic pixels) — the
-    corpus builder for oracled queries that exercise the real codec."""
-    from lexoid_spark.kernels.png_codec import make_test_png
-    return pd.Series([
-        make_test_png(int(w), int(h), 3, int(s))
-        for w, h, s in zip(width, height, seed)
-    ])
-
-
-@F.pandas_udf(T.BinaryType())
-def gif_image_udf(width: pd.Series, height: pd.Series,
-                  seed: pd.Series) -> pd.Series:
-    """REAL GIF bytes (stdlib LZW encoder, deterministic 16-color
-    pattern) — corpus builder for oracled real-GIF queries."""
-    from lexoid_spark.kernels.gif_codec import make_test_gif
-    return pd.Series([
-        make_test_gif(int(w), int(h), int(s))
-        for w, h, s in zip(width, height, seed)
-    ])
-
-
-@F.pandas_udf(T.BinaryType())
-def jpeg_image_udf(width: pd.Series, height: pd.Series,
-                   seed: pd.Series) -> pd.Series:
-    """REAL baseline JPEG bytes (from-scratch T.81 encoder,
-    deterministic pixels) — corpus builder for oracled real-JPEG
-    queries."""
-    from lexoid_spark.kernels.jpeg_codec import make_test_jpeg
-    return pd.Series([
-        make_test_jpeg(int(w), int(h), int(s))
-        for w, h, s in zip(width, height, seed)
-    ])
-
-
-@F.pandas_udf(T.BinaryType())
-def fake_video_udf(width: pd.Series, height: pd.Series,
-                   n_frames: pd.Series) -> pd.Series:
-    return pd.Series([
-        encode_fake_video(int(w), int(h), int(n))
-        for w, h, n in zip(width, height, n_frames)
-    ])
-
-
-@F.pandas_udf(T.BinaryType())
-def fake_audio_udf(sample_rate: pd.Series,
-                   n_samples: pd.Series) -> pd.Series:
-    return pd.Series([
-        encode_fake_audio(int(sr), int(n))
-        for sr, n in zip(sample_rate, n_samples)
-    ])
+# payload columns for oracled queries: FAKE containers, and real PNG /
+# GIF (16-color LZW) / baseline JPEG (T.81) bytes that exercise the
+# real codecs
+fake_image_udf = row_udf(encode_fake_image, T.BinaryType())
+png_image_udf = row_udf(png_image, T.BinaryType())
+gif_image_udf = row_udf(make_test_gif, T.BinaryType())
+jpeg_image_udf = row_udf(make_test_jpeg, T.BinaryType())
+fake_video_udf = row_udf(encode_fake_video, T.BinaryType())
+fake_audio_udf = row_udf(encode_fake_audio, T.BinaryType())

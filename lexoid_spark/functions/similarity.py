@@ -184,20 +184,6 @@ def ivf_centroid_rows(embeddings: DataFrame, n_centroids: int,
     return rows
 
 
-def ivf_centroids(embeddings: DataFrame, n_centroids: int,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  n_iter: int = 0, train_modulus: int = 1) -> DataFrame:
-    """DataFrame form of :func:`ivf_centroid_rows` (for joins that
-    want a centroid relation, e.g. per-query probe selection)."""
-    rows = ivf_centroid_rows(embeddings, n_centroids, id_col, vec_col,
-                             n_iter, train_modulus)
-    from lexoid_spark.session import local_rows_df
-
-    return local_rows_df(
-        embeddings.sparkSession, rows, "cid long, cvec array<double>"
-    )
-
-
 def assign_clusters(embeddings: DataFrame, n_centroids: int,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding",

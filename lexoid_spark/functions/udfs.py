@@ -1,64 +1,51 @@
 """Vectorized pandas/Arrow UDF wrappers around the pure-Python kernels.
 
-Every UDF is Series→Series (or iterator-of-batches for variable row
-counts) — one Python invocation per Arrow batch, never per row
-(BASELINE.json::input_hint: "vectorized pandas/Arrow UDFs (no per-row
-Python) throughout"). Kernel failures become an ``error`` column, not
-task failures — the reference's retry decorators (``api.py:56-123``,
-``static_parser.py:22-55``) re-expressed as error-quarantine unions.
+Every UDF runs one Python invocation per Arrow batch, never per Spark
+row (BASELINE.json::input_hint: "vectorized pandas/Arrow UDFs (no
+per-row Python) throughout"). ``row_udf`` is the one lift of a per-row
+Python function to such a column; the dispatch kernel is a
+``mapInPandas`` iterator. Dispatch failures become an ``error``
+column, not task failures — the reference's retry decorators
+(``api.py:56-123``, ``static_parser.py:22-55``) re-expressed as
+error-quarantine unions.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lexoid_spark.kernels.html_md import html_to_md
-from lexoid_spark.kernels.pdf_md import pdf_flags, pdf_to_pages
+from lexoid_spark.kernels.pdf_md import (
+    PdfInlineImageError,
+    pdf_flags,
+    pdf_to_pages,
+    pdf_to_text_pages,
+)
 from lexoid_spark.kernels.segmenter import segment_md
 from lexoid_spark.kernels.table_md import csv_to_md
 
-# result struct for fallible kernels: (raw, error)
-RAW_ERR_TYPE = T.StructType([
-    T.StructField("raw", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
 
-SEGMENT_TYPE = T.ArrayType(T.StructType([
-    T.StructField("page", T.IntegerType()),
-    T.StructField("section", T.StringType()),
-    T.StructField("content", T.StringType()),
-]))
+def row_udf(fn: Callable, return_type) -> Callable[..., Column]:
+    """``fn(*values) -> value`` as an Arrow-batched pandas UDF named
+    after ``fn``: per batch, one call per row over the batch's columns
+    as plain Python values (``Series.tolist()``: ints arrive as ``int``,
+    strings as ``str``, binary as ``bytes``, a null string or binary as
+    ``None``; a numeric column holding nulls arrives as floats with NaN,
+    pandas' Arrow conversion). A struct ``return_type`` needs a
+    DataFrame per batch, which this does not build."""
 
+    def batch(*cols: pd.Series) -> pd.Series:
+        rows = zip(*(c.tolist() for c in cols))
+        return pd.Series([fn(*row) for row in rows])
 
-def _guarded(fn):
-    def inner(payload):
-        try:
-            return {"raw": fn(payload), "error": None}
-        except Exception as e:  # quarantine, never fail the task
-            return {"raw": None, "error": f"{type(e).__name__}: {e}"}
-    return inner
-
-
-@F.pandas_udf(RAW_ERR_TYPE)
-def html_to_md_udf(payloads: pd.Series) -> pd.DataFrame:
-    rows = [_guarded(html_to_md)(p) for p in payloads]
-    return pd.DataFrame(rows)
-
-
-@F.pandas_udf(RAW_ERR_TYPE)
-def html_main_to_md_udf(payloads: pd.Series) -> pd.DataFrame:
-    """Main-content variant: boilerplate chrome stripped via the
-    tag/class blocklists before markdown emission."""
-    rows = [
-        _guarded(lambda p: html_to_md(p, main_content=True))(p)
-        for p in payloads
-    ]
-    return pd.DataFrame(rows)
+    batch.__name__ = batch.__qualname__ = fn.__name__
+    return F.pandas_udf(batch, return_type)
 
 
 def _txt_decode(payload) -> str:
@@ -71,26 +58,6 @@ def _txt_decode(payload) -> str:
 
         return rtf_to_text(payload)
     return decode_payload(payload)
-
-
-@F.pandas_udf(RAW_ERR_TYPE)
-def txt_decode_udf(payloads: pd.Series) -> pd.DataFrame:
-    rows = [_guarded(_txt_decode)(p) for p in payloads]
-    return pd.DataFrame(rows)
-
-
-@F.pandas_udf(SEGMENT_TYPE)
-def segment_md_udf(mds: pd.Series) -> pd.Series:
-    out = []
-    for md in mds:
-        if md is None:
-            out.append([])
-            continue
-        out.append([
-            {"page": None, "section": sec, "content": content}
-            for sec, content in segment_md(md)
-        ])
-    return pd.Series(out)
 
 
 # --- single-pass dispatch kernel (mapInPandas) -------------------------------
@@ -114,97 +81,100 @@ TIMED_DOC_SCHEMA = T.StructType(
 )
 
 
+def _by_heading(raw: str) -> list:
+    return [{"page": None, "section": s, "content": c}
+            for s, c in segment_md(raw)]
+
+
+def _one_page(raw: str) -> list:
+    return [{"page": 1, "section": None, "content": raw}]
+
+
+def _by_page(pages) -> list:
+    return [{"page": p, "section": None, "content": c} for p, c in pages]
+
+
+def _html_arm(payload, pdf_framework, html_main_content):
+    raw = html_to_md(payload, main_content=html_main_content)
+    return raw, _by_heading(raw), "STATIC_PARSE"
+
+
+def _pdf_arm(payload, pdf_framework, html_main_content):
+    has_image, _ = pdf_flags(payload)
+    if not has_image:
+        # text arms; a BI/ID/EI inline image mid-stream reroutes the
+        # document to the OCR arm (the byte-scan flag cannot see
+        # inline images — pdf_md.PdfInlineImageError docstring)
+        try:
+            if pdf_framework == "pdfminer":
+                pages = pdf_to_text_pages(payload, start=0)
+                raw = "\n".join(c for _, c in pages)  # static_parser.py:170
+            else:
+                pages = pdf_to_pages(payload, start=0)
+                raw = "\n\n".join(c for _, c in pages)
+            return raw, _by_page(pages), "STATIC_PARSE"
+        except PdfInlineImageError:
+            pass
+    from lexoid_spark.kernels import ocr_stub
+
+    pages = [(p, c) for p, c, _b in ocr_stub.ocr_pdf_to_pages(payload)]
+    raw = "\n\n".join(c for _, c in pages)  # static_parser.py:812
+    return raw, _by_page(pages), "OCR_PARSE"
+
+
+def _image_arm(payload, pdf_framework, html_main_content):
+    from lexoid_spark.kernels import ocr_stub
+
+    raw, _boxes = ocr_stub.ocr_image_to_page(payload)
+    return raw, _one_page(raw), "OCR_PARSE"
+
+
+# office container → segments: the reference splits pptx output by
+# headings into slides, and books segment on chapter headings like html
+_OFFICE_SEGMENTS = {"docx": _one_page, "xlsx": _one_page,
+                    "pptx": _by_heading, "epub": _by_heading}
+
+
+def _zip_arm(payload, pdf_framework, html_main_content):
+    from lexoid_spark.kernels import office_md
+
+    kind = office_md.sniff_office(payload)
+    if kind not in _OFFICE_SEGMENTS:
+        raise ValueError("unsupported zip container")  # → quarantine
+    raw = getattr(office_md, f"{kind}_to_md")(payload)
+    return raw, _OFFICE_SEGMENTS[kind](raw), "STATIC_PARSE"
+
+
+def _csv_arm(payload, pdf_framework, html_main_content):
+    raw = csv_to_md(payload)
+    return raw, _one_page(raw), "STATIC_PARSE"
+
+
+def _txt_arm(payload, pdf_framework, html_main_content):
+    raw = _txt_decode(payload)
+    return raw, _one_page(raw), "STATIC_PARSE"
+
+
+_ARMS = {"html": _html_arm, "pdf": _pdf_arm, "image": _image_arm,
+         "zip": _zip_arm, "csv": _csv_arm}
+
+
 def _extract_one(doctype: str, payload, pdf_framework: str = "pdfplumber",
                  html_main_content: bool = False):
     """One document → (raw, segments, parser). The reference's
     parse_static_doc dispatch (static_parser.py:59-141) per row, inside
-    an Arrow batch. ``pdf_framework``: "pdfplumber" (full layout
-    reconstruction, default) or "pdfminer" (text-only cheap arm,
-    static_parser.py:144-177) — the reference's framework kwarg.
-    ``html_main_content``: strip nav/ads/social chrome via the
-    tag/class blocklists (north-rule boilerplate strip; default off
-    for reference byte parity). Image files and image-bearing PDFs
-    take the OCR arm (P5, utils.py:591-612 + static_parser.py:751-818)."""
-    parser = "STATIC_PARSE"
-    if doctype == "html":
-        raw = html_to_md(payload, main_content=html_main_content)
-        segs = [
-            {"page": None, "section": s, "content": c}
-            for s, c in segment_md(raw)
-        ]
-    elif doctype == "pdf":
-        has_image, _ = pdf_flags(payload)
-        if not has_image:
-            # text arms; a BI/ID/EI inline image mid-stream reroutes
-            # the document to the OCR arm (the byte-scan flag cannot
-            # see inline images — pdf_md.PdfInlineImageError docstring)
-            from lexoid_spark.kernels.pdf_md import PdfInlineImageError
-
-            try:
-                if pdf_framework == "pdfminer":
-                    from lexoid_spark.kernels.pdf_md import pdf_to_text_pages
-
-                    pages = pdf_to_text_pages(payload, start=0)
-                    raw = "\n".join(c for _, c in pages)  # static_parser.py:170
-                else:
-                    pages = pdf_to_pages(payload, start=0)
-                    raw = "\n\n".join(c for _, c in pages)
-            except PdfInlineImageError:
-                has_image = True
-        if has_image:
-            from lexoid_spark.kernels.ocr_stub import ocr_pdf_to_pages
-
-            pages = [(p, c) for p, c, _b in ocr_pdf_to_pages(payload)]
-            raw = "\n\n".join(c for _, c in pages)  # static_parser.py:812
-            parser = "OCR_PARSE"
-        segs = [
-            {"page": p, "section": None, "content": c} for p, c in pages
-        ]
-    elif doctype == "image":
-        from lexoid_spark.kernels.ocr_stub import ocr_image_to_page
-
-        raw, _boxes = ocr_image_to_page(payload)
-        segs = [{"page": 1, "section": None, "content": raw}]
-        parser = "OCR_PARSE"
-    elif doctype == "zip":
-        from lexoid_spark.kernels.office_md import (
-            docx_to_md,
-            epub_to_md,
-            pptx_to_md,
-            sniff_office,
-            xlsx_to_md,
-        )
-
-        office = sniff_office(payload)
-        if office == "docx":
-            raw = docx_to_md(payload)
-            segs = [{"page": 1, "section": None, "content": raw}]
-        elif office == "xlsx":
-            raw = xlsx_to_md(payload)
-            segs = [{"page": 1, "section": None, "content": raw}]
-        elif office == "pptx":
-            raw = pptx_to_md(payload)
-            # reference splits pptx output by headings → slide segments
-            segs = [
-                {"page": None, "section": s, "content": c}
-                for s, c in segment_md(raw)
-            ]
-        elif office == "epub":
-            raw = epub_to_md(payload)
-            # books segment on chapter headings, like html
-            segs = [
-                {"page": None, "section": s, "content": c}
-                for s, c in segment_md(raw)
-            ]
-        else:
-            raise ValueError("unsupported zip container")  # → quarantine
-    elif doctype == "csv":
-        raw = csv_to_md(payload)
-        segs = [{"page": 1, "section": None, "content": raw}]
-    else:
-        raw = _txt_decode(payload)
-        segs = [{"page": 1, "section": None, "content": raw}]
-    return raw, segs, parser
+    an Arrow batch: ``_ARMS[doctype]``, txt for any other doctype.
+    ``pdf_framework``: "pdfplumber" (full layout reconstruction,
+    default) or "pdfminer" (text-only cheap arm, static_parser.py:
+    144-177) — the reference's framework kwarg. ``html_main_content``:
+    strip nav/ads/social chrome via the tag/class blocklists
+    (north-rule boilerplate strip; default off for reference byte
+    parity). Image files and image-bearing PDFs take the OCR arm (P5,
+    utils.py:591-612 + static_parser.py:751-818). Every arm names its
+    kernels at call time (module globals, ``ocr_stub.*``,
+    ``office_md.*_to_md``), so patching them patches the dispatch."""
+    arm = _ARMS.get(doctype, _txt_arm)
+    return arm(payload, pdf_framework, html_main_content)
 
 
 def make_extract_doc_map(pdf_framework: str = "pdfplumber",

@@ -265,6 +265,23 @@ def render_text_png(text: str, scale: int = 2) -> bytes:
     return png_encode(render_text(text, scale=scale)[:, :, None])
 
 
+def render_text_frames(texts, even: bool = False) -> np.ndarray:
+    """One ``render_text`` frame per text, padded white to a common
+    H×W (``even``: H and W rounded up to even, for 4:2:0 video) →
+    (k, H, W) uint8."""
+    fr = [render_text(t, scale=2) for t in texts]
+    H = max(a.shape[0] for a in fr)
+    W = max(a.shape[1] for a in fr)
+    if even:
+        H += H % 2
+        W += W % 2
+    return np.stack([
+        np.pad(a, ((0, H - a.shape[0]), (0, W - a.shape[1])),
+               constant_values=255)
+        for a in fr
+    ])
+
+
 def _to_ink(arr: np.ndarray) -> np.ndarray:
     """(H, W[, C]) uint8 → boolean ink mask (dark = ink)."""
     a = np.asarray(arr)

@@ -1787,16 +1787,10 @@ def _embed_links_in_text(page: PdfPage, text: str, links) -> str:
 # --- document-level entry points --------------------------------------------
 
 def pdf_to_pages(data, start: int = 0) -> List[Tuple[int, str]]:
-    """PDF bytes → [(page_number, markdown)] with page = start + idx + 1."""
-    if data is None:
-        return []
-    data = bytes(data)
-    uri_rects = get_uri_rects(data)
-    out = []
-    for idx, page in enumerate(parse_pdf(data)):
-        content, _ = process_page(page, uri_rects)
-        out.append((start + idx + 1, content))
-    return out
+    """PDF bytes → [(page_number, markdown)] with page = start + idx + 1:
+    ``pdf_to_pages_with_bboxes`` without the boxes (``process_page``
+    computes them either way)."""
+    return [(p, c) for p, c, _ in pdf_to_pages_with_bboxes(data, start)]
 
 
 def pdf_to_md(data, start: int = 0) -> str:
@@ -2070,6 +2064,10 @@ def sniff_doctype(payload) -> str:
         shead = s.split("\n", 1)[0]
         if "," in shead and "<" not in shead:
             return "csv"
+        return "txt"
+    if b.startswith(b"{\\rtf"):
+        # RTF is text (the txt arm parses it); its first line often
+        # holds a comma and no '<', which would otherwise read as csv
         return "txt"
     low = b.lstrip().lower()
     if low.startswith((b"<!doctype", b"<html", b"<head", b"<body")) or b"<html" in low:

@@ -86,6 +86,9 @@ def _sniff_sql(payload_col: str) -> str:
         (f"{hex_at(1, 5)} = '255044462D'", "pdf"),
         (f"{hex_at(1, 4)} = '504B0304'", "zip"),  # OPC; refined in-kernel
         (image, "image"),  # → OCR arm (P5)
+        # RTF ("{\rtf") is text: its first line would otherwise pass
+        # the csv probe whenever it holds a comma and no '<'
+        (f"{hex_at(1, 5)} = '7B5C727466'", "txt"),
     ]
     # 4-byte UTF-32 BOMs must be probed BEFORE the 2-byte UTF-16 ones
     # (the UTF-32-LE BOM FF FE 00 00 *starts with* the UTF-16-LE BOM

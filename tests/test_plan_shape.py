@@ -552,6 +552,7 @@ def _column_api_doctype(df, payload_col="html"):
                & (F.hex(F.substring(pc, 9, 4)) == "57454250")),
             F.lit("image"),
         )
+        .when(F.hex(F.substring(pc, 1, 5)) == "7B5C727466", F.lit("txt"))
         .when(
             _u32bom & (
                 _u32low.startswith("<!doctype") | _u32low.startswith("<html")
@@ -637,3 +638,80 @@ def test_sniff_build_is_a_few_gateway_commands(spark):
         del client.send_command
     assert n_new <= 10, n_new
     assert n_spec > 100 * n_new  # the counter does see Column-API calls
+
+
+def _executed_tree(df):
+    """The executed physical plan as a tree string: AQE's final plans
+    only (a cached relation prints its initial plan too; dropped)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    kept, skip_below = [], None
+    for line in plan.toString().splitlines():
+        indent = len(line) - len(line.lstrip(" +-:"))
+        if skip_below is not None and indent >= skip_below:
+            continue
+        skip_below = indent if "== Initial Plan ==" in line else None
+        if skip_below is None:
+            kept.append(line)
+    return "\n".join(kept)
+
+
+def test_row_udf_lifts_a_per_row_function(spark):
+    """``row_udf``: ``fn`` sees plain Python values (an int as ``int``,
+    a null as ``None``), and the column is one Arrow-batched UDF named
+    after ``fn`` — no row-at-a-time ``BatchEvalPython``."""
+    from lexoid_spark.functions.udfs import row_udf
+
+    def probe(n, s):
+        return f"{type(n).__name__}:{n}|{type(s).__name__}:{s}"
+
+    df = spark.range(3).select(
+        "id",
+        row_udf(probe, "string")(
+            F.col("id"),
+            F.when(F.col("id") > 0, F.col("id").cast("string")),
+        ).alias("v"))
+    tree = _executed_tree(df)
+    assert {r["id"]: r["v"] for r in df.collect()} == {
+        0: "int:0|NoneType:None", 1: "int:1|str:1", 2: "int:2|str:2"}
+    assert tree.count("ArrowEvalPython") == 1
+    assert "BatchEvalPython" not in tree
+    assert "ArrowEvalPython [probe(" in tree
+
+
+# (ArrowEvalPython, MapInPandas, Exchange) nodes in the executed plan of
+# one query per family whose per-row Python column is a ``row_udf``: the
+# shape the hand-written pandas UDFs had, so the lift changed no operator
+_ROW_UDF_QUERY_SHAPES = {
+    "extract_html_h1": (1, 0, 2),
+    "gif_meta": (1, 1, 1),
+    "webp_meta": (1, 1, 1),
+    "pdf_flate_extract": (1, 1, 2),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ROW_UDF_QUERY_SHAPES))
+def test_row_udf_queries_keep_operator_census(spark, name):
+    import re
+
+    import __spark_entry__ as em
+
+    tree = _executed_tree(em.queries()[name](spark, "/root/testdata/sf0.001"))
+    got = (tree.count("ArrowEvalPython"), tree.count("MapInPandas"),
+           len(re.findall(r"\bExchange\b", tree)))
+    assert got == _ROW_UDF_QUERY_SHAPES[name]
+    assert "BatchEvalPython" not in tree
+
+
+def test_similarity_report_is_one_arrow_udf_node(spark):
+    from lexoid_spark.functions.metrics import similarity_report
+
+    df = spark.createDataFrame([("a b c", "a b d"), ("x", None)],
+                               "parsed string, truth string")
+    tree = _executed_tree(similarity_report(df, "parsed", "truth"))
+    assert tree.count("ArrowEvalPython") == 1
+    assert "ArrowEvalPython [seq_ratio(" in tree
+    assert "tfidf_cosine(" in tree
+    assert "Exchange" not in tree and "BatchEvalPython" not in tree

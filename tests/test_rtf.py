@@ -53,3 +53,45 @@ class TestRtf:
 
         assert _txt_decode(rb'{\rtf1 hi\par there}') == "hi\nthere"
         assert _txt_decode(b"just text") == "just text"
+
+
+# RTF whose first line holds a comma and no '<': the csv probe of both
+# doctype sniffs would take it without the RTF arm
+RTF_CSV_LIKE = [
+    rb'{\rtf1\ansi{\fonttbl{\f0 Times;}}\pard Hello, world\par tail}',
+    rb'{\rtf1 a, b, c\par d}',
+    rb'{\rtf1\ansi\ansicpg1252 caf' + b"\\'e9" + rb', ol' + b"\\'e9" + rb'}',
+]
+
+
+class TestRtfRouting:
+    def test_sniff_twins_agree_on_txt(self, spark):
+        from lexoid_spark.kernels.pdf_md import sniff_doctype
+        from lexoid_spark.operators.routing import with_doctype
+
+        assert [sniff_doctype(p) for p in RTF_CSV_LIKE] == \
+            ["txt"] * len(RTF_CSV_LIKE)
+        df = spark.createDataFrame(
+            [(i, bytearray(p)) for i, p in enumerate(RTF_CSV_LIKE)],
+            "i long, html binary")
+        got = {r["i"]: r["doctype"] for r in with_doctype(df).collect()}
+        assert got == {i: "txt" for i in range(len(RTF_CSV_LIKE))}
+
+    def test_extract_and_parse_return_rtf_text(self, spark):
+        from lexoid_spark.api import parse
+        from lexoid_spark.plans.extract import extract
+
+        want = {f"rtf://{i}": rtf_to_text(p)
+                for i, p in enumerate(RTF_CSV_LIKE)}
+        assert "Hello, world\ntail" in want.values()
+        pages = spark.createDataFrame(
+            [(f"rtf://{i}", None, bytearray(p), "", "en")
+             for i, p in enumerate(RTF_CSV_LIKE)],
+            "url string, warc_ts timestamp, html binary, text string, "
+            "lang string")
+        out = extract(pages, repartition=False)
+        got = {r["url"]: r["raw"] for r in out["extracted"].collect()}
+        assert got == want
+        assert out["errors"].count() == 0
+        for i, p in enumerate(RTF_CSV_LIKE):
+            assert parse(p)["raw"] == want[f"rtf://{i}"]
