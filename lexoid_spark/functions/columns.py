@@ -2,7 +2,10 @@
 
 Everything here stays inside whole-stage codegen — no Python in the hot
 path. Each expression mirrors a reference scalar function (SURVEY.md
-§2.8) and its pure-Python twin in ``kernels/text_ops.py``.
+§2.8) and its pure-Python twin in ``kernels/text_ops.py``. The
+``sql_ident``/``sql_str`` quoting helpers serve the plan pieces that
+are built as SQL text (a Column-API spelling costs py4j round trips on
+every build).
 """
 
 from __future__ import annotations
@@ -63,9 +66,15 @@ def cleanup_redundant_formatting(col) -> Column:
     return c
 
 
-def doc_title(url_col) -> Column:
-    """Title = basename of the url path (reference api.py:262 analogue)."""
-    return F.element_at(F.split(url_col, "/"), -1)
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """``value`` as a SQL string literal (backslash escapes, the
+    parser's default)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def salt(col, buckets: int) -> Column:

@@ -71,9 +71,10 @@ def token_set_metrics(a, b) -> dict[str, Column]:
 
     precision = |A∩B| / |A| (A = parsed), recall = |A∩B| / |B|
     (B = ground truth), false positives = A∖B, false negatives = B∖A.
+    A null side counts as "", as in ``seq_ratio``/``tfidf_cosine``.
     """
-    sa = F.array_distinct(tokens(a))
-    sb = F.array_distinct(tokens(b))
+    sa = F.array_distinct(tokens(F.coalesce(a, F.lit(""))))
+    sb = F.array_distinct(tokens(F.coalesce(b, F.lit(""))))
     inter = F.size(F.array_intersect(sa, sb)).cast("double")
     union = F.size(F.array_union(sa, sb)).cast("double")
     na = F.size(sa).cast("double")

@@ -2,9 +2,13 @@
 
 A native aggregate over the dispatch kernel's ``docs`` frame (url, raw,
 error, kernel_us, …): one metrics row per physical partition —
-(partition_id, n_docs, n_bytes, n_errors, wall_ms) + run_id + ts.
-Written to the ``lineage`` sink so a 1000-executor run leaves an
-auditable per-partition trail and stragglers are measurable.
+``(partition_id, n_docs, n_bytes, n_errors, wall_ms)`` — or per
+(partition, bucket) in the job. The job collects these few rows to the
+driver and they ride its one progress commit (``operators/progress.py``
+``mark_done``), stamped there with ``run_id`` and ``ts``; so a
+1000-executor run leaves an auditable per-partition trail, stragglers
+are measurable, and a group killed before its commit leaves no lineage
+row to double-count on replay. :func:`read_lineage` reads them back.
 
   * ``n_docs``   rows extracted (null ``error``);
   * ``n_errors`` rows quarantined (non-null ``error``);
@@ -14,14 +18,18 @@ auditable per-partition trail and stragglers are measurable.
     shows stragglers) rather than a re-read of a cached frame.
 
 JVM-only: ``groupBy(spark_partition_id(), …)`` with count_if/sum,
-partially aggregated map-side, so no Python-worker task runs.
+partially aggregated map-side, so no Python-worker task runs. Built as
+SQL text, since the job builds it once per bucket group.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from lexoid_spark.functions.columns import sql_ident
+from lexoid_spark.operators.progress import read_ledger
 
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("partition_id", T.IntegerType()),
@@ -31,32 +39,34 @@ LINEAGE_SCHEMA = T.StructType([
     T.StructField("wall_ms", T.LongType()),
 ])
 
+_AGGS = (
+    "count_if(error IS NULL) AS n_docs",
+    "CAST(coalesce(sum(length(raw)), 0) AS BIGINT) AS n_bytes",
+    "count_if(error IS NOT NULL) AS n_errors",
+    "coalesce(sum(kernel_us), 0) div 1000 AS wall_ms",
+)
 
-def lineage_rows(docs: DataFrame, run_id: str,
-                 group_col: str | None = None) -> DataFrame:
-    """Aggregate ``docs`` into one lineage row per physical partition
-    that holds rows (an empty input yields no row).
+
+def lineage_rows(docs: DataFrame, group_col: str | None = None) -> DataFrame:
+    """Aggregate ``docs`` into one ``LINEAGE_SCHEMA`` row per physical
+    partition that holds rows (an empty input yields no row).
 
     With ``group_col`` (e.g. the resume bucket), one row per
-    (partition, group value) instead — the job layer then writes
-    lineage partitioned by that column with dynamic overwrite, so a
-    killed-and-resumed bucket *replaces* its lineage rows rather than
-    appending duplicates (the append-only variant double-counts
-    n_docs/n_bytes for every replayed bucket).
+    (partition, group value) instead, with the group column second:
+    the order ``progress.mark_done`` takes its lineage rows in.
     """
-    keys = ["partition_id"] + ([group_col] if group_col else [])
-    failed = F.col("error").isNotNull()
+    keys = ["partition_id"] + ([sql_ident(group_col)] if group_col else [])
     return (
-        docs.withColumn("partition_id", F.spark_partition_id())
-        .groupBy(*keys)
-        .agg(
-            F.count_if(~failed).alias("n_docs"),
-            F.coalesce(F.sum(F.length("raw")), F.lit(0)).cast("long")
-            .alias("n_bytes"),
-            F.count_if(failed).alias("n_errors"),
-            F.expr("coalesce(sum(kernel_us), 0) div 1000").alias("wall_ms"),
-        )
-        .select(*LINEAGE_SCHEMA.fieldNames(), *keys[1:])
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("ts", F.current_timestamp())
+        docs.withColumn("partition_id", F.expr("spark_partition_id()"))
+        .groupBy(*map(F.expr, keys))
+        .agg(*map(F.expr, _AGGS))
     )
+
+
+def read_lineage(spark: SparkSession, progress_dir: str) -> DataFrame:
+    """The lineage view of the progress ledger: its rows that a
+    partition holding documents wrote, i.e. all but the empty buckets'
+    zero rows — ``LINEAGE_SCHEMA`` + ``bucket``, ``run_id``, ``ts``."""
+    return (read_ledger(spark, progress_dir)
+            .filter("partition_id IS NOT NULL")
+            .select(*LINEAGE_SCHEMA.fieldNames(), "bucket", "run_id", "ts"))

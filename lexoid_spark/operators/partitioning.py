@@ -15,15 +15,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lexoid_spark.functions.columns import sql_ident
 
-def _size_col(df: DataFrame, payload_col: str):
-    """Byte size of the payload: numeric columns of any type pass
-    through (a precomputed ``n_bytes``), binary/string payloads get
-    ``length()``. (``F.length`` on a number would count the digits of
-    its printed form.)"""
+
+def _size_sql(df: DataFrame, payload_col: str) -> str:
+    """Byte size of the payload as SQL text: numeric columns of any type
+    pass through (a precomputed ``n_bytes``), binary/string payloads get
+    ``length()``. (``length`` of a number would count the digits of its
+    printed form.)"""
     dtype = {f.name: f.dataType for f in df.schema.fields}.get(payload_col)
-    c = F.col(payload_col)
-    return c if isinstance(dtype, T.NumericType) else F.length(c)
+    c = sql_ident(payload_col)
+    return c if isinstance(dtype, T.NumericType) else f"length({c})"
 
 
 def split_giant_tail(df: DataFrame, num_partitions: int,
@@ -38,24 +40,26 @@ def split_giant_tail(df: DataFrame, num_partitions: int,
     union the untouched bulk — shuffle volume is the tail's bytes only,
     not the table's: at 100 TB with a ~2% tail, 50× less than a full
     range repartition on byte size.
+
+    The predicates are SQL text: ``extract()`` builds this split on
+    every call, and each Column-API call costs py4j round trips.
     """
     # null size (e.g. a null n_bytes metadata column) must not drop the
     # row from BOTH branches (null <= t and null > t are both null):
     # fall back to the actual payload length, then 0
-    raw = _size_col(df, payload_col)
+    raw = _size_sql(df, payload_col)
     size = raw
     if payload_col != "html" and "html" in df.columns:
-        size = F.coalesce(size, F.length("html"))
-    size = F.coalesce(size, F.lit(0))
-    bulk = df.filter(size <= threshold_bytes)
-    tail = df.filter(size > threshold_bytes)
+        size = f"coalesce({size}, length(html))"
+    size = f"coalesce({size}, 0)"
+    t = int(threshold_bytes)
+    bulk = df.filter(f"{size} <= {t}")
+    tail = df.filter(f"{size} > {t}")
     if payload_col != "html":
         # the coalesce() blocks parquet predicate pushdown; this
         # redundant, weaker conjunct IS pushable, so row groups whose
         # max(n_bytes) <= t (and with no nulls) never read their blobs
-        tail = tail.filter(
-            (raw > threshold_bytes) | raw.isNull()
-        )
+        tail = tail.filter(f"({raw} > {t}) OR ({raw} IS NULL)")
     tail = tail.repartition(num_partitions)
     return bulk.unionByName(tail)
 

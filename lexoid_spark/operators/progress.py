@@ -1,13 +1,24 @@
-"""Checkpointed progress table + resume (north_rule D3/J5).
+"""Checkpointed progress ledger + resume (north_rule D3/J5, SURVEY.md A10).
 
 The unit of resumability is a *bucket*: ``pmod(xxhash64(url), n_buckets)``.
 A run processes pending buckets in groups and, once a group's output is
-written, appends one progress row per bucket of the group in a single
-write; on restart, ``pending = all buckets ∖ completed``, so a killed
-job resumes at partition granularity with no duplicates (idempotent
-bucket keys — re-running a bucket overwrites its own output directory).
+written, commits it with ONE append to ``progress/`` (one file). The
+commit's rows are the group's lineage, one per (physical partition,
+bucket) that held documents — see ``operators/lineage.py`` — plus a
+zero row (null ``partition_id``) for each bucket of the group that held
+none, so every committed bucket has at least one row:
 
-Everything here is JVM-only: the progress rows are a ``LocalTableScan``
+  run_id, bucket, status='done', n_docs, partition_id, n_bytes,
+  n_errors, wall_ms, ts (the commit's driver-side timestamp)
+
+A bucket's Σ ``n_docs`` is its extracted row count. On restart,
+``pending = all buckets ∖ committed``, so a killed job resumes at
+partition granularity with no duplicates (idempotent bucket keys —
+re-running a bucket overwrites its own output directory), and since
+lineage rides the commit, a group killed before it leaves no lineage
+rows and its replay cannot double-count.
+
+Everything here is JVM-only: the commit rows are a ``LocalTableScan``
 (``session.local_rows_df``), the completed set is one parquet-scan
 collect and the difference is taken on the driver. No Python-worker
 task runs, so none pays the worker's fixed per-task cost.
@@ -18,28 +29,36 @@ This replaces the reference's benchmark result-cache skip-on-hit
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lexoid_spark.functions.columns import sql_ident
 from lexoid_spark.session import local_rows_df
 
-PROGRESS_SCHEMA = T.StructType([
+LEDGER_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
     T.StructField("bucket", T.IntegerType()),
     T.StructField("status", T.StringType()),
     T.StructField("n_docs", T.LongType()),
+    T.StructField("partition_id", T.IntegerType()),
+    T.StructField("n_bytes", T.LongType()),
+    T.StructField("n_errors", T.LongType()),
+    T.StructField("wall_ms", T.LongType()),
+    T.StructField("ts", T.TimestampType()),
 ])
 
 
 def with_bucket(df: DataFrame, n_buckets: int,
                 key_col: str = "url") -> DataFrame:
-    return df.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int"),
-    )
+    """Add the resume ``bucket`` column (SQL text: the job builds it
+    several times per bucket group)."""
+    return df.withColumn("bucket", F.expr(
+        f"CAST(pmod(xxhash64({sql_ident(key_col)}), {int(n_buckets)}) "
+        "AS INT)"))
 
 
 def _has_progress(progress_dir: str) -> bool:
@@ -48,10 +67,22 @@ def _has_progress(progress_dir: str) -> bool:
     )
 
 
-def read_progress(spark: SparkSession, progress_dir: str) -> DataFrame:
+def read_ledger(spark: SparkSession, progress_dir: str) -> DataFrame:
+    """Every committed row, in ``LEDGER_SCHEMA``."""
     if _has_progress(progress_dir):
-        return spark.read.schema(PROGRESS_SCHEMA).parquet(progress_dir)
-    return local_rows_df(spark, [], PROGRESS_SCHEMA)
+        return spark.read.schema(LEDGER_SCHEMA).parquet(progress_dir)
+    return local_rows_df(spark, [], LEDGER_SCHEMA)
+
+
+def read_progress(spark: SparkSession, progress_dir: str) -> DataFrame:
+    """One row per bucket commit: ``(run_id, bucket, status, n_docs)``
+    with ``n_docs`` the bucket's Σ over that commit's rows. A bucket
+    committed twice shows twice (the commit's ``ts`` tells them
+    apart)."""
+    return (read_ledger(spark, progress_dir)
+            .groupBy("run_id", "bucket", "status", "ts")
+            .agg(F.expr("sum(n_docs) AS n_docs"))
+            .drop("ts"))
 
 
 def pending_buckets(spark: SparkSession, n_buckets: int,
@@ -59,8 +90,9 @@ def pending_buckets(spark: SparkSession, n_buckets: int,
     """All-buckets ∖ completed-in-THIS-run (J5).
 
     With no progress file yet, every bucket is pending and no Spark job
-    runs. Otherwise one JVM job collects this run's done buckets (a few
-    rows per bucket at most) and the difference is taken on the driver.
+    runs. Otherwise one JVM job collects the bucket of each of this
+    run's ledger rows (one per partition and bucket, never one per
+    document) and the difference is taken on the driver.
 
     Progress rows are scoped per ``run_id``: resuming means relaunching
     with the same run id; a *new* run id over the same output_dir
@@ -71,7 +103,7 @@ def pending_buckets(spark: SparkSession, n_buckets: int,
     if not _has_progress(progress_dir):
         return list(range(n_buckets))
     done = {
-        r["bucket"] for r in read_progress(spark, progress_dir)
+        r["bucket"] for r in read_ledger(spark, progress_dir)
         .filter((F.col("status") == "done") & (F.col("run_id") == run_id))
         .select("bucket")
         .collect()
@@ -80,11 +112,24 @@ def pending_buckets(spark: SparkSession, n_buckets: int,
 
 
 def mark_done(spark: SparkSession, progress_dir: str, run_id: str,
-              counts: dict[int, int]) -> None:
-    """Append one progress row per bucket of a finished group
-    ``{bucket: n_docs}`` in ONE write of one file: the group's buckets
-    become done together or, if the write dies, not at all."""
-    rows = [(run_id, b, "done", n) for b, n in sorted(counts.items())]
-    local_rows_df(spark, rows, PROGRESS_SCHEMA).coalesce(1).write.mode(
+              buckets: list[int], lineage=()) -> dict[int, int]:
+    """Commit a finished group in ONE write of one file: its ``lineage``
+    rows ``(partition_id, bucket, n_docs, n_bytes, n_errors, wall_ms)``
+    plus a zero row for each of ``buckets`` that has none, all stamped
+    with one driver-side ``ts``. The group's buckets become done
+    together or, if the write dies, not at all. Returns each bucket's
+    Σ ``n_docs``."""
+    ts = dt.datetime.now(dt.timezone.utc)
+    counts = dict.fromkeys(buckets, 0)
+    rows = []
+    for pid, b, n_docs, n_bytes, n_errors, wall_ms in lineage:
+        counts[b] += n_docs
+        rows.append((run_id, b, "done", n_docs, pid, n_bytes, n_errors,
+                     wall_ms, ts))
+    held = {r[1] for r in rows}
+    rows += [(run_id, b, "done", 0, None, 0, 0, 0, ts)
+             for b in buckets if b not in held]
+    local_rows_df(spark, rows, LEDGER_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(progress_dir)
+    return counts

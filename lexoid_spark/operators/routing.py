@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lexoid_spark.functions.columns import sql_ident, sql_str
+
 
 def _left_deep(op: str, terms) -> str:
     """``t1 op t2 op ...`` grouped to the left, as Python's ``|``/``&``
@@ -38,7 +40,7 @@ def _all(*terms) -> str:
 
 def _sniff_sql(payload_col: str) -> str:
     """The doctype ``CASE`` of ``with_doctype`` as one SQL expression."""
-    p = "`" + payload_col.replace("`", "``") + "`"
+    p = sql_ident(payload_col)
 
     def hex_at(pos: int, n: int) -> str:
         return f"hex(substring({p}, {pos}, {n}))"
@@ -169,13 +171,15 @@ def filter_segment_pages(df: DataFrame, page_nums: list[int],
 
 def quarantine(df: DataFrame, stage: str, run_id: str,
                error_col: str = "error") -> DataFrame:
-    """Project failed rows into the errors-table schema (FIXTURES.md §4)."""
-    return (
-        df.filter(F.col(error_col).isNotNull())
-        .select(
-            "url",
-            F.lit(stage).alias("stage"),
-            F.col(error_col).alias("error"),
-            F.lit(run_id).alias("run_id"),
-        )
+    """Project failed rows into the errors-table schema (FIXTURES.md §4).
+
+    Built as SQL text, like ``with_doctype``: it is part of every
+    ``extract()`` plan, and each Column-API call costs py4j round trips
+    on the driver."""
+    err = sql_ident(error_col)
+    return df.filter(f"{err} IS NOT NULL").selectExpr(
+        "url",
+        f"{sql_str(stage)} AS stage",
+        f"{err} AS error",
+        f"{sql_str(run_id)} AS run_id",
     )

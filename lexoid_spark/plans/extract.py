@@ -28,12 +28,30 @@ from __future__ import annotations
 from typing import Dict
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from lexoid_spark.functions.columns import doc_title
 from lexoid_spark.functions.udfs import TIMED_DOC_SCHEMA, make_extract_doc_map
 from lexoid_spark.operators.partitioning import split_giant_tail
 from lexoid_spark.operators.routing import quarantine, with_doctype
+
+
+# The extracted projection as SQL text, like the sniff: every
+# ``extract()`` builds it, and its Column-API spelling costs ~190 py4j
+# round trips per build. tests/test_plan_shape.py pins its plans to that
+# spelling.
+EXTRACTED_SQL = (
+    "url",
+    # title = basename of the url path (reference api.py:262 analogue)
+    "element_at(split(url, '/'), -1) AS title",
+    "raw",
+    "segments",
+    "parser_used",
+    "length(raw) AS n_chars",
+    # whitespace token count, native JVM (A5/A9 analogue over extracted
+    # text; the reference's LLM token accounting stays zeroed in
+    # api.py — no LLM arm): ``functions/textstats.py::token_count``
+    "size(CASE WHEN length(trim(raw)) = 0 THEN CAST(array() AS "
+    "ARRAY<STRING>) ELSE split(trim(raw), r'\\s+') END) AS n_tokens",
+)
 
 
 def extract(pages: DataFrame, run_id: str = "run0",
@@ -62,8 +80,8 @@ def extract(pages: DataFrame, run_id: str = "run0",
     for reference byte parity).
     """
     has_nbytes = "n_bytes" in pages.columns
-    cols = ["url", "html"] + (["n_bytes"] if has_nbytes else [])
-    src = pages.select(*cols)  # explicit column pruning
+    src = pages.selectExpr(  # explicit column pruning
+        "url", "html", *(["n_bytes"] if has_nbytes else []))
     if repartition:
         num_partitions = int(
             pages.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -72,27 +90,10 @@ def extract(pages: DataFrame, run_id: str = "run0",
             src, num_partitions,
             payload_col="n_bytes" if has_nbytes else "html",
         )
-    docs = with_doctype(src).select("url", "doctype", "html").mapInPandas(
+    docs = with_doctype(src).selectExpr("url", "doctype", "html").mapInPandas(
         make_extract_doc_map(pdf_framework, html_main_content),
         TIMED_DOC_SCHEMA,
     )
-
-    from lexoid_spark.functions.textstats import token_count
-
-    extracted = (
-        docs.filter(F.col("error").isNull())
-        .select(
-            "url",
-            doc_title(F.col("url")).alias("title"),
-            "raw",
-            "segments",
-            "parser_used",
-            F.length("raw").alias("n_chars"),
-            # whitespace token count, native JVM (A5/A9 analogue over
-            # extracted text; the reference's LLM token accounting
-            # stays zeroed in api.py — no LLM arm)
-            token_count(F.col("raw")).alias("n_tokens"),
-        )
-    )
+    extracted = docs.filter("error IS NULL").selectExpr(*EXTRACTED_SQL)
     errors = quarantine(docs, "extract", run_id)
     return {"extracted": extracted, "errors": errors, "docs": docs}

@@ -12,23 +12,29 @@ exactly-once batch pattern:
   * each group runs the dispatch kernel ONCE per doc: the pre-split
     ``docs`` frame is persisted and both ``extracted`` and ``errors``
     are written from it, so the two tables partition the group's input;
-  * per-bucket doc counts come from an ``Observation`` on the
-    ``extracted`` write, not from a separate count job;
-  * each group then replaces its buckets' per-physical-partition
-    lineage rows, aggregated from the same cached ``docs``: ``n_docs``
-    extracted and ``n_errors`` quarantined rows, ``n_bytes`` Σ
-    ``n_chars``, and ``wall_ms`` the dispatch kernel's own time
-    (Σ in-band ``kernel_us`` // 1000) — and, last, appends ONE progress
-    write with a row per bucket of the group — a kill before it replays
-    the whole group;
+  * the group's bucket ids select its rows as an array value
+    (``array_contains``), not as literals inlined into the generated
+    code, so a fresh group compiles no new classes;
+  * once the ``extracted`` write has filled the ``docs`` cache, the
+    ``errors`` write (on a second driver thread) and the per-(physical
+    partition, bucket) lineage aggregate run together, both from the
+    cache: ``n_docs`` extracted and ``n_errors`` quarantined rows,
+    ``n_bytes`` Σ ``n_chars`` and ``wall_ms`` the dispatch kernel's own
+    time (Σ in-band ``kernel_us`` // 1000). Its few rows go to the
+    driver, which sums the per-bucket doc counts from them;
+  * last, ONE progress append commits the group: its lineage rows plus
+    a zero row per empty bucket (``operators/progress.py``). A kill
+    before it replays the whole group, and since no lineage was written
+    yet, the replay cannot double-count — three parquet writes per
+    group in all;
   * on restart, ``pending = all buckets ∖ done`` (taken on the driver
     from one collect of the run's done buckets), so a killed job
     resumes with no duplicates and no lost work.
 
 Only the dispatch kernel runs Python: progress, resume and lineage are
-JVM-only jobs, because every Python-worker task pays a fixed cost
-(UDF unpickle, Arrow set-up, scheduling; a worker's first task also
-~0.20 CPU-s of ``importlib.invalidate_caches()``, see
+JVM-only jobs and driver rows, because every Python-worker task pays a
+fixed cost (UDF unpickle, Arrow set-up, scheduling; a worker's first
+task also ~0.20 CPU-s of ``importlib.invalidate_caches()``, see
 ``zip_refresh``) before it does any work.
 
 At 10^12 rows the bucket count scales (e.g. 4096) and the group size
@@ -43,8 +49,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, SparkSession
 
 from lexoid_spark.operators.lineage import lineage_rows
 from lexoid_spark.operators.progress import (
@@ -91,11 +97,11 @@ def run_extract_job(
     Layout under ``output_dir``:
       extracted/bucket=<b>/   per-bucket parquet (overwrite = idempotent)
       errors/bucket=<b>/      quarantined docs
-      lineage/bucket=<b>/     per-(partition, bucket) metrics (overwrite)
-      progress/               append-only (run_id, bucket, done, n_docs)
+      progress/               append-only ledger: one file per group,
+                              one row per (partition, bucket) with its
+                              lineage (see ``operators/progress.py``)
     """
     progress_dir = os.path.join(output_dir, "progress")
-    lineage_dir = os.path.join(output_dir, "lineage")
 
     all_pending = pending_buckets(spark, n_buckets, progress_dir, run_id)
     skipped = n_buckets - len(all_pending)
@@ -129,7 +135,11 @@ def run_extract_job(
     try:
         for i in range(0, len(todo), group_size):
             group = todo[i : i + group_size]
-            subset = pages.filter(F.col("bucket").isin(group)).drop("bucket")
+            # the group's bucket ids ride as an array VALUE, not inlined
+            # literals, so a fresh group reuses the generated code
+            in_group = ("array_contains(array("
+                        + ", ".join(map(str, group)) + "), bucket)")
+            subset = pages.filter(in_group).drop("bucket")
             out = extract(subset, run_id=run_id, repartition=repartition,
                           pdf_framework=pdf_framework,
                           html_main_content=html_main_content)
@@ -141,34 +151,26 @@ def run_extract_job(
                 err = with_bucket(out["errors"], n_buckets)
                 if warc_bad is not None:
                     err = err.unionByName(with_bucket(quarantine(
-                        warc_bad.filter(F.col("bucket").isin(group)),
-                        "warc_ingest", run_id,
+                        warc_bad.filter(in_group), "warc_ingest", run_id,
                     ), n_buckets))
-                # per-bucket doc counts ride the extracted write as
-                # observed metrics instead of a separate count job
-                obs = Observation()
-                ext.observe(obs, *[
-                    F.count_if(F.col("bucket") == b).alias(str(b))
-                    for b in group
-                ]).write.mode("overwrite").options(**dyn).partitionBy(
+                ext.write.mode("overwrite").options(**dyn).partitionBy(
                     "bucket"
                 ).parquet(os.path.join(output_dir, "extracted"))
-                counts = {b: obs.get[str(b)] for b in group}
-                err.write.mode("overwrite").options(**dyn).partitionBy(
-                    "bucket"
-                ).parquet(os.path.join(output_dir, "errors"))
-                # lineage after the data writes, from the same cached
-                # docs (so n_errors and the kernel's wall_ms are seen),
-                # partitioned by bucket with the same dynamic overwrite:
-                # a killed-and-resumed bucket REPLACES its lineage rows
-                # (append-only lineage double-counts replays)
-                lineage_rows(
-                    with_bucket(docs, n_buckets), run_id, group_col="bucket"
-                ).write.mode("overwrite").options(**dyn).partitionBy(
-                    "bucket"
-                ).parquet(lineage_dir)
-                # last: a kill before this line replays the whole group
-                mark_done(spark, progress_dir, run_id, counts)
+                # the cache is full now: the errors write (on a second
+                # driver thread) and the lineage aggregate both read it
+                lineage = lineage_rows(with_bucket(docs, n_buckets),
+                                       group_col="bucket")
+                join_errors = _in_background(
+                    lambda: err.write.mode("overwrite").options(**dyn)
+                    .partitionBy("bucket")
+                    .parquet(os.path.join(output_dir, "errors")))
+                try:
+                    rows = [tuple(r) for r in lineage.collect()]
+                finally:
+                    join_errors()
+                # last, the commit: the group's lineage rows in one
+                # progress append; a kill before it replays the group
+                counts = mark_done(spark, progress_dir, run_id, group, rows)
             finally:
                 docs.unpersist()
             done.extend(group)
@@ -179,6 +181,29 @@ def run_extract_job(
             warc_bad.unpersist()
     return JobResult(buckets_done=done, buckets_skipped=skipped,
                      n_docs=total_docs)
+
+
+def _in_background(fn):
+    """Start ``fn`` on a second driver thread; the returned ``join()``
+    waits for it and re-raises its exception. An ``InheritableThread``
+    carries this thread's job group and local properties into the
+    Spark jobs ``fn`` starts."""
+    failure: list[BaseException] = []
+
+    def run():
+        try:
+            fn()
+        except BaseException as e:  # noqa: BLE001 — re-raised by join()
+            failure.append(e)
+
+    thread = InheritableThread(target=run)
+    thread.start()
+
+    def join():
+        thread.join()
+        if failure:
+            raise failure[0]
+    return join
 
 
 def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -74,7 +74,11 @@ def local_rows_df(spark, rows, schema):
     0.23–0.38 s from a one-slice ``parallelize`` and 0.10–0.13 s this
     way (4 CPUs, local mode, before the lazy refresh). Do not inline
     the values as literal structs either: each new value set compiles
-    again. Empty ``rows`` give an empty LocalTableScan."""
+    again. Empty ``rows`` give an empty LocalTableScan.
+
+    Keep ``rows`` small: they pass through the driver. The job's
+    progress commit, the largest caller, holds O(partitions × group
+    buckets) ledger rows, never O(docs)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType

@@ -96,6 +96,23 @@ def test_similarity_report_reference_semantics(spark):
     assert r2["precision"] == 0.0 and r2["recall"] == 0.0 and r2["f1"] == 0.0
 
 
+def test_similarity_report_null_side_is_empty_text(spark):
+    """A null parsed or truth text scores as "" in all six metrics: the
+    token-set ones agree with ``seq_ratio``/``tfidf_cosine`` (a null
+    truth once gave ``precision = NULL`` beside ``recall = 0.0``)."""
+    metrics = ("seq_ratio", "tfidf_cosine", "jaccard", "precision",
+               "recall", "f1")
+
+    def report(rows):
+        df = spark.createDataFrame(rows, "k int, parsed string, truth string")
+        return {r["k"]: tuple(r[m] for m in metrics)
+                for r in similarity_report(df, "parsed", "truth").collect()}
+
+    got = report([(0, "x", None), (1, None, "x y")])
+    assert got == report([(0, "x", ""), (1, "", "x y")])
+    assert all(v == 0.0 for row in got.values() for v in row), got
+
+
 def test_streaming_incremental_exactly_once(spark, tmp_path):
     from lexoid_spark.corpus.gen import pages_df
     from lexoid_spark.plans.extract import extract

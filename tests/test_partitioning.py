@@ -4,7 +4,7 @@ semantics, and extract() output unchanged by the tail split."""
 from pyspark.sql import functions as F
 
 from lexoid_spark.corpus.gen import PAGES_SCHEMA_DDL, pages_df
-from lexoid_spark.operators.partitioning import _size_col, split_giant_tail
+from lexoid_spark.operators.partitioning import _size_sql, split_giant_tail
 from lexoid_spark.plans.extract import extract
 
 
@@ -14,7 +14,7 @@ def test_size_col_numeric_passthrough(spark):
     df = spark.createDataFrame(
         [("a", 1500000), ("b", 999)], "url string, n_bytes long"
     )
-    got = df.select(_size_col(df, "n_bytes").alias("s")).collect()
+    got = df.selectExpr(_size_sql(df, "n_bytes") + " AS s").collect()
     assert sorted(r["s"] for r in got) == [999, 1500000]
     # every numeric type passes through, not only int/bigint/double
     for dtype, big in (("decimal(20,0)", 1500000), ("float", 1500000),
@@ -22,10 +22,11 @@ def test_size_col_numeric_passthrough(spark):
         tdf = spark.createDataFrame(
             [("a", big), ("b", 999)], "url string, n_bytes long"
         ).select("url", F.col("n_bytes").cast(dtype).alias("n_bytes"))
-        got = tdf.select(_size_col(tdf, "n_bytes").alias("s")).collect()
+        got = tdf.selectExpr(_size_sql(tdf, "n_bytes") + " AS s").collect()
         assert sorted(int(r["s"]) for r in got) == [999, big], dtype
     bdf = spark.createDataFrame([("a", b"xyz")], "url string, html binary")
-    assert bdf.select(_size_col(bdf, "html").alias("s")).collect()[0]["s"] == 3
+    assert bdf.selectExpr(_size_sql(bdf, "html") + " AS s").collect()[0][
+        "s"] == 3
 
 
 def test_split_giant_tail_preserves_rows_and_spreads(spark):

@@ -3,6 +3,8 @@ survive refactors — column pruning at the scan, pushable tail
 predicate, broadcast joins for dimensions. (.explain-driven; SURVEY.md
 §4.2 'free — verify, don't build'.)"""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -478,10 +480,14 @@ def test_job_control_plane_is_jvm_only(spark, tmp_path):
     Arrow set-up, scheduling; ~0.2 CPU-s more on a worker's first
     task), so the only Python tasks of ``run_extract_job`` are the
     dispatch kernel's.
-    Pinned on the executed plans of the progress-rows write, the
-    pending-buckets read and the lineage aggregate (over a JVM-only
-    docs-shaped input), and on the job counts of the resume check:
-    none before any progress exists, one after."""
+    Pinned on the executed plans of the progress commit (with and
+    without lineage rows, the latter collected from the lineage
+    aggregate as the job does), the pending-buckets read and the
+    lineage aggregate (over a JVM-only docs-shaped input), and on the
+    job counts of the resume check: none before any progress exists,
+    one after. Each commit is one file."""
+    import glob
+
     from lexoid_spark.operators.lineage import lineage_rows
     from lexoid_spark.operators.progress import (
         mark_done,
@@ -495,7 +501,7 @@ def test_job_control_plane_is_jvm_only(spark, tmp_path):
     assert pending == list(range(8)) and jobs == []
 
     _, _, plans = _traced(spark, "mark-done", lambda: mark_done(
-        spark, progress_dir, "r1", {0: 3, 5: 0}))
+        spark, progress_dir, "r1", [0, 5], [(2, 0, 3, 120, 1, 7)]))
     pending, jobs, read_plans = _traced(
         spark, "pending-read",
         lambda: pending_buckets(spark, 8, progress_dir, "r1"))
@@ -508,11 +514,16 @@ def test_job_control_plane_is_jvm_only(spark, tmp_path):
         F.when(i % 5 == 0, F.lit("E: bad")).alias("error"),
         (i * 700).alias("kernel_us"),
     ), 4)
-    lineage = lineage_rows(docs, "r1", group_col="bucket")
-    _, _, lineage_plans = _traced(spark, "lineage", lineage.collect)
+    lineage = lineage_rows(docs, group_col="bucket")
+    rows, _, lineage_plans = _traced(spark, "lineage", lineage.collect)
+    counts, _, commit_plans = _traced(spark, "commit", lambda: mark_done(
+        spark, progress_dir, "r2", [0, 1, 2, 3],
+        [tuple(r) for r in rows]))
+    assert sum(counts.values()) == 24 - 5
+    assert len(glob.glob(os.path.join(progress_dir, "*.parquet"))) == 2
 
-    plans += read_plans + lineage_plans
-    assert len(plans) == 3
+    plans += read_plans + lineage_plans + commit_plans
+    assert len(plans) == 4
     for plan in plans:
         for op in _PYTHON_OPS:
             assert op not in plan, plan
@@ -609,15 +620,10 @@ def test_sniff_plan_matches_column_api_spec(spark, payload_col):
     assert got == spec
 
 
-def test_sniff_build_is_a_few_gateway_commands(spark):
-    """Building the sniff costs a handful of py4j commands on the
-    driver, not the ~1,400 of the Column-API spelling: every
-    ``extract()`` builds it. Counted, not timed; py4j's ``m\\nd``
-    memory-release commands (garbage collection) are not counted."""
-    from lexoid_spark.operators.routing import with_doctype
-
-    src = spark.range(4).select(
-        F.col("id").cast("string").cast("binary").alias("html"))
+def _gateway_commands(spark, fn) -> int:
+    """py4j commands the driver sends while ``fn`` runs; py4j's
+    ``m\\nd`` memory-release commands (garbage collection) are not
+    counted."""
     client = spark.sparkContext._gateway._gateway_client
     sent = []
     real_send = client.send_command
@@ -629,15 +635,102 @@ def test_sniff_build_is_a_few_gateway_commands(spark):
 
     client.send_command = counting_send
     try:
-        with_doctype(src)
-        n_new = len(sent)
-        sent.clear()
-        _column_api_doctype(src)
-        n_spec = len(sent)
+        fn()
     finally:
         del client.send_command
+    return len(sent)
+
+
+def test_sniff_build_is_a_few_gateway_commands(spark):
+    """Building the sniff costs a handful of py4j commands on the
+    driver, not the ~1,400 of the Column-API spelling: every
+    ``extract()`` builds it. Counted, not timed."""
+    from lexoid_spark.operators.routing import with_doctype
+
+    src = spark.range(4).select(
+        F.col("id").cast("string").cast("binary").alias("html"))
+    n_new = _gateway_commands(spark, lambda: with_doctype(src))
+    n_spec = _gateway_commands(spark, lambda: _column_api_doctype(src))
     assert n_new <= 10, n_new
     assert n_spec > 100 * n_new  # the counter does see Column-API calls
+
+
+def test_extract_build_is_about_a_hundred_gateway_commands(spark,
+                                                           bench_pages):
+    """A warm ``extract()`` builds its plan in at most 120 py4j
+    commands (455 when its projection, quarantine split and tail split
+    went through the Column API): the job pays it once per bucket
+    group, the streaming sink once per micro-batch."""
+    from lexoid_spark.plans.extract import extract
+
+    extract(bench_pages)
+    n = _gateway_commands(spark, lambda: extract(bench_pages))
+    assert n <= 120, n
+
+
+def _column_api_extract_pieces(pages, num_partitions):
+    """Spec for the SQL-text pieces of ``extract()`` and the job: the
+    tail split, the extracted projection, the quarantine split and the
+    bucket column, spelled through the Column API as they were built
+    before they became SQL strings."""
+    from lexoid_spark.functions.textstats import token_count
+
+    raw = F.col("n_bytes")
+    size = F.coalesce(F.coalesce(raw, F.length("html")), F.lit(0))
+    t = 1 << 20
+    src = pages.select("url", "html", "n_bytes")
+    split = src.filter(size <= t).unionByName(
+        src.filter(size > t).filter((raw > t) | raw.isNull())
+        .repartition(num_partitions))
+    docs = split.select(
+        "url", F.col("html").cast("string").alias("raw"),
+        F.lit(None).cast("string").alias("error"))
+    extracted = docs.filter(F.col("error").isNull()).select(
+        "url",
+        F.element_at(F.split(F.col("url"), "/"), -1).alias("title"),
+        "raw",
+        F.length("raw").alias("n_chars"),
+        token_count(F.col("raw")).alias("n_tokens"),
+    )
+    errors = docs.filter(F.col("error").isNotNull()).select(
+        "url", F.lit("ex'tr\\act").alias("stage"),
+        F.col("error").alias("error"), F.lit("r'1").alias("run_id"))
+    bucket = errors.withColumn(
+        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int"))
+    return split, extracted, errors, bucket
+
+
+def _sql_text_extract_pieces(pages, num_partitions):
+    from lexoid_spark.operators.partitioning import split_giant_tail
+    from lexoid_spark.operators.progress import with_bucket
+    from lexoid_spark.operators.routing import quarantine
+    from lexoid_spark.plans.extract import EXTRACTED_SQL
+
+    split = split_giant_tail(pages.select("url", "html", "n_bytes"),
+                             num_partitions, payload_col="n_bytes")
+    docs = split.select(
+        "url", F.col("html").cast("string").alias("raw"),
+        F.lit(None).cast("string").alias("error"))
+    wanted = ("url", "title", "raw", "n_chars", "n_tokens")
+    extracted = docs.filter("error IS NULL").selectExpr(*(
+        e for e in EXTRACTED_SQL if e.split(" AS ")[-1] in wanted))
+    errors = quarantine(docs, "ex'tr\\act", "r'1")
+    return split, extracted, errors, with_bucket(errors, 64)
+
+
+def test_sql_text_pieces_match_column_api_spec(spark, bench_pages):
+    """The SQL-text tail split, extracted projection, quarantine split
+    (string literals with a quote and a backslash) and bucket column
+    analyze and optimize to exactly the plans of their Column-API
+    spelling, and give the same rows."""
+    got = _sql_text_extract_pieces(bench_pages, 8)
+    spec = _column_api_extract_pieces(bench_pages, 8)
+    assert len(got) == len(spec) == 4
+    for g, s in zip(got, spec):
+        assert _plan_texts(g) == _plan_texts(s)
+    assert sorted(got[1].collect()) == sorted(spec[1].collect())
+    assert got[1].count() == bench_pages.count()
+    assert got[2].schema == spec[2].schema
 
 
 def _executed_tree(df):

@@ -5,8 +5,10 @@ and assert: no bucket processed twice, no progress-row duplicates, and
 the final extracted table is byte-identical to a single-shot run. Also
 pinned: the dispatch kernel runs once per input doc across kill +
 resume, ``extracted/`` and ``errors/`` partition the input exactly,
-empty buckets still get their progress row, and the job releases every
-frame it persists, also when a write fails.
+empty buckets still get their progress row, lineage rides the one
+progress commit (a group killed at its commit replays without a second
+row set), and the job releases every frame it persists, also when a
+write fails.
 """
 
 import os
@@ -17,10 +19,13 @@ import pytest
 from pyspark.sql import functions as F
 
 import lexoid_spark.plans.extract as extract_mod
+import lexoid_spark.plans.job as job_mod
 from lexoid_spark.corpus.gen import PAGES_SCHEMA_DDL, pages_df
 from lexoid_spark.kernels.warc import build_record
+from lexoid_spark.operators.lineage import read_lineage
 from lexoid_spark.operators.progress import (
     pending_buckets,
+    read_ledger,
     read_progress,
     with_bucket,
 )
@@ -86,7 +91,8 @@ def test_rerun_completed_job_is_noop(spark, pages_path, tmp_path):
 def test_lineage_rows_written(spark, pages_path, tmp_path):
     out = str(tmp_path / "out3")
     res = run_extract_job(spark, pages_path, out, run_id="r1", n_buckets=4)
-    lin = spark.read.parquet(os.path.join(out, "lineage"))
+    assert not os.path.exists(os.path.join(out, "lineage"))
+    lin = read_lineage(spark, os.path.join(out, "progress"))
     assert lin.count() >= 1
     got = lin.agg(F.sum("n_docs")).collect()[0][0]
     assert got == res.n_docs == N_DOCS
@@ -176,8 +182,9 @@ def test_lineage_matches_outputs_per_bucket(spark, tmp_path):
 
     ext = per_bucket("extracted", F.count("*"), F.sum("n_chars"))
     err = per_bucket("errors", F.count("*"))
-    lin = per_bucket("lineage", F.sum("n_docs"), F.sum("n_errors"),
-                     F.sum("n_bytes"))
+    lin = {r["bucket"]: tuple(r)[1:] for r in read_lineage(
+        spark, os.path.join(out, "progress")).groupBy("bucket").agg(
+            F.sum("n_docs"), F.sum("n_errors"), F.sum("n_bytes")).collect()}
     prog = {r["bucket"]: r["n_docs"] for r in
             read_progress(spark, os.path.join(out, "progress")).collect()}
     assert sum(n for n, in err.values()) == 6
@@ -185,6 +192,55 @@ def test_lineage_matches_outputs_per_bucket(spark, tmp_path):
         n_ext, n_chars = ext.get(b, (0, 0))
         assert lin.get(b, (0, 0, 0)) == (n_ext, err.get(b, (0,))[0], n_chars)
         assert prog[b] == n_ext
+
+
+def test_kill_at_commit_replays_one_row_set(spark, tmp_path, monkeypatch):
+    """A group whose data is written but whose progress commit dies is
+    replayed on resume: the ledger then holds exactly one row set (one
+    commit ``ts``) per bucket, Σ ``n_docs`` equals the extracted input
+    docs, and ``extracted/`` and ``errors/`` still partition the
+    input."""
+    real_mark_done = job_mod.mark_done
+    calls = []
+
+    def dies_once(*a, **kw):
+        calls.append(a[3])
+        if len(calls) == 2:  # the second group's commit
+            raise RuntimeError("killed at commit")
+        return real_mark_done(*a, **kw)
+
+    rows = [(f"http://k.test/ok{i}", None,
+             b"<html><body><p>page %d</p></body></html>" % i, "x", "en")
+            for i in range(12)]
+    rows += [(f"http://k.test/bad{i}", None, BAD_ZIP, "x", "en")
+             for i in range(6)]
+    inp = str(tmp_path / "pages")
+    spark.createDataFrame(rows, PAGES_SCHEMA_DDL).write.parquet(inp)
+    out = str(tmp_path / "out")
+    kw = dict(run_id="r1", n_buckets=4, group_size=2)
+    monkeypatch.setattr(job_mod, "mark_done", dies_once)
+    with pytest.raises(RuntimeError, match="killed at commit"):
+        run_extract_job(spark, inp, out, **kw)
+    # the killed group's data is on disk, its commit is not
+    assert len(_urls(spark, os.path.join(out, "extracted"))) + len(
+        _urls(spark, os.path.join(out, "errors"))) == len(rows)
+    assert pending_buckets(spark, 4, os.path.join(out, "progress"),
+                           "r1") == calls[1]
+    res = run_extract_job(spark, inp, out, **kw)
+    assert res.buckets_done == calls[1] and res.buckets_skipped == 2
+
+    ledger = read_ledger(spark, os.path.join(out, "progress")).collect()
+    commits = {}
+    for r in ledger:
+        commits.setdefault(r["bucket"], set()).add(r["ts"])
+    assert sorted(commits) == [0, 1, 2, 3]
+    assert all(len(ts) == 1 for ts in commits.values()), commits
+    assert sum(r["n_docs"] for r in ledger) == 12
+    assert sum(r["n_errors"] for r in ledger) == 6
+    ext = _urls(spark, os.path.join(out, "extracted"))
+    err = _urls(spark, os.path.join(out, "errors"))
+    assert sorted(ext + err) == sorted(r[0] for r in rows)
+    assert set(err) == {r[0] for r in rows if r[2] == BAD_ZIP}
 
 
 def test_empty_bucket_gets_progress_row(spark, tmp_path):
@@ -251,6 +307,51 @@ def test_pinned_frames_released(spark, pages_path, tmp_path, input_format):
     with pytest.raises(Exception):
         run_extract_job(spark, inp, str(broken), **kw)
     assert _cache_empty(spark)
+
+
+@pytest.mark.parametrize("input_format", ["pages", "warc"])
+def test_fresh_bucket_group_compiles_no_code(spark, tmp_path, monkeypatch,
+                                             input_format):
+    """A bucket group's plans carry no group-specific literal in their
+    generated code (its bucket ids ride as an array value, its commit
+    ``ts`` as driver data), so after one warm group each fresh group
+    reuses the compiled classes: Janino compiles nothing more."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    real_mark_done = job_mod.mark_done
+
+    def counted(*a, **kw):
+        out = real_mark_done(*a, **kw)
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount())
+        return out
+
+    n_buckets, group_size = 6, 2
+    urls = [f"https://g.test/{i}" for i in range(36)]
+    pages = [(u, None, b"<html><body><p>%s</p></body></html>" % u.encode(),
+              "x", "en") for u in urls]
+    inp = str(tmp_path / "in")
+    if input_format == "warc":
+        blobs = [(i, build_record(
+            "response", u, "2024-01-01T00:00:00Z",
+            b"HTTP/1.1 200 OK\r\n\r\n" + html))
+            for i, (u, _, html, _, _) in enumerate(pages)]
+        blobs.append((len(blobs), b"WARC/1.0\r\nbroken"))
+        spark.createDataFrame(blobs, "id long, data binary").write.parquet(
+            inp)
+    else:
+        spark.createDataFrame(pages, PAGES_SCHEMA_DDL).write.parquet(inp)
+    held = {r["bucket"] for r in with_bucket(
+        spark.createDataFrame([(u,) for u in urls], "url string"),
+        n_buckets).collect()}
+    assert held == set(range(n_buckets))  # every group holds documents
+
+    monkeypatch.setattr(job_mod, "mark_done", counted)
+    res = run_extract_job(spark, inp, str(tmp_path / "out"), run_id="r1",
+                          n_buckets=n_buckets, group_size=group_size,
+                          input_format=input_format)
+    assert res.n_docs == len(urls)
+    assert len(compiles) == n_buckets // group_size
+    assert compiles[1:] == compiles[:1] * (len(compiles) - 1), compiles
 
 
 def test_spark_submit_py_files_ship(tmp_path):

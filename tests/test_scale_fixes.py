@@ -11,7 +11,7 @@ at the 10^12-row design point:
     corpus (thousands of identical pages in ONE band bucket) cannot
     explode quadratically;
   * the streaming errors branch is sunk, not discarded;
-  * lineage rows are replaced (not duplicated) when a bucket re-runs.
+  * lineage rows are not duplicated when a bucket re-runs.
 """
 
 import os
@@ -158,9 +158,11 @@ def test_streaming_errors_branch_sunk(spark, tmp_path):
     assert got[0]["error"]
 
 
-def test_lineage_idempotent_on_bucket_replay(spark, tmp_path):
+def test_lineage_idempotent_on_bucket_replay(spark, tmp_path, monkeypatch):
     """Kill-and-resume re-runs buckets; lineage must not double-count."""
+    import lexoid_spark.plans.job as job_mod
     from lexoid_spark.corpus.gen import pages_df
+    from lexoid_spark.operators.lineage import read_lineage
     from lexoid_spark.plans.job import run_extract_job
 
     p = str(tmp_path / "pages.parquet")
@@ -169,14 +171,19 @@ def test_lineage_idempotent_on_bucket_replay(spark, tmp_path):
 
     run_extract_job(spark, p, out, run_id="r1", n_buckets=4, group_size=2,
                     max_buckets=2)
-    # simulate a kill AFTER data+lineage writes but BEFORE mark_done:
-    # wipe progress so the same buckets replay
-    import shutil
+    # simulate a kill AFTER the data writes but BEFORE the commit that
+    # carries the lineage rows: the same buckets replay
+    def killed(*a, **kw):
+        raise RuntimeError("killed at commit")
 
-    shutil.rmtree(os.path.join(out, "progress"))
+    with monkeypatch.context() as m:
+        m.setattr(job_mod, "mark_done", killed)
+        with pytest.raises(RuntimeError):
+            run_extract_job(spark, p, out, run_id="r1", n_buckets=4,
+                            group_size=2)
     run_extract_job(spark, p, out, run_id="r1", n_buckets=4, group_size=2)
 
-    lin = spark.read.parquet(os.path.join(out, "lineage"))
+    lin = read_lineage(spark, os.path.join(out, "progress"))
     assert lin.agg(F.sum("n_docs")).collect()[0][0] == 24
 
 

@@ -10,7 +10,19 @@ Builds ``lexoid_spark.zip`` (tools/build_pyfiles.py), writes a
   jobs/extract_job.py`` over the corpus (all four tables written), wall
   from launch to exit, median of the runs; ``job_launch_s`` is the same
   command with ``--max-buckets 0`` (JVM launch, session, resume check,
-  teardown) and ``job_net_docs_per_s`` divides by the difference.
+  teardown) and ``job_net_docs_per_s`` divides by the difference;
+- ``phases``: the median job run's wall split into slices read from its
+  Spark event log (:func:`phase_split`): ``launch_s`` (process start to
+  the application's start), ``setup_s`` (to the first group's data
+  write: imports, session, resume check, the cold plan build), per
+  bucket group ``plan_build_s`` (the driver gap before its data write),
+  ``kernel_write_s`` (the ``extracted/`` write, inside which the
+  dispatch kernel runs), ``errors_write_s``, ``lineage_s``,
+  ``commit_s`` (the ``progress/`` append), ``other_s`` (any other SQL
+  execution) and ``driver_gap_s`` (the rest of the group), then
+  ``teardown_s``. Time when two executions overlap is split evenly
+  between them (``overlap_s`` reports how much overlapped), so the
+  slices sum to the wall time (``sum_s`` beside ``wall_s``).
 
 The job gets the session settings of ``session.get_spark`` as
 ``--conf`` flags and runs with the working directory outside the repo,
@@ -23,8 +35,10 @@ JSON line::
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -55,14 +69,87 @@ def _submit_cmd(cores, confs, driver_memory, zip_path, pages, out, extra):
 
 
 def _timed_submit(cmd, work):
+    """Run ``cmd``; return (wall s, its JSON report, start and end as
+    epoch seconds)."""
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
+    start = time.time()
     t0 = time.perf_counter()
     proc = subprocess.run(cmd, capture_output=True, text=True, env=env,
                           cwd=work, timeout=1800)
     wall = time.perf_counter() - t0
     if proc.returncode != 0:
         raise RuntimeError(proc.stderr[-3000:])
-    return wall, json.loads(proc.stdout.strip().splitlines()[-1])
+    return (wall, json.loads(proc.stdout.strip().splitlines()[-1]),
+            start, start + wall)
+
+
+def _table(plan: str) -> str:
+    """What a job SQL execution does, from its physical plan: the output
+    table of a parquet write, else ``lineage`` for the lineage
+    aggregate, else ``other``."""
+    m = re.search(r"Execute InsertIntoHadoopFsRelationCommand\n.*\n"
+                  r"Arguments: file:\S*/([^/,\s]+), ", plan)
+    if m:
+        return m.group(1)
+    return "lineage" if "spark_partition_id" in plan.lower() else "other"
+
+
+_SLICE = {"extracted": "kernel_write_s", "errors": "errors_write_s",
+          "lineage": "lineage_s", "progress": "commit_s"}
+
+
+def phase_split(event_log: str, start: float, end: float) -> dict:
+    """Split one job run's wall time ``[start, end]`` (epoch seconds)
+    into the slices the module docstring lists, from its event log."""
+    app_start, execs = start, {}
+    with open(event_log) as f:
+        for line in f:
+            ev = json.loads(line)
+            kind = ev.get("Event", "")
+            if kind == "SparkListenerApplicationStart":
+                app_start = ev["Timestamp"] / 1e3
+            elif kind.endswith("SQLExecutionStart"):
+                if ev.get("rootExecutionId", ev["executionId"]) == \
+                        ev["executionId"]:
+                    execs[ev["executionId"]] = [
+                        ev["time"] / 1e3, None,
+                        _table(ev.get("physicalPlanDescription", ""))]
+            elif kind.endswith("SQLExecutionEnd"):
+                if ev["executionId"] in execs:
+                    execs[ev["executionId"]][1] = ev["time"] / 1e3
+    spans = sorted((s, e, t) for s, e, t in execs.values() if e is not None)
+    data = [s for s, _, t in spans if t == "extracted"]
+    commits = [e for _, e, t in spans if t == "progress"]
+    out = {"wall_s": end - start, "launch_s": app_start - start,
+           "setup_s": (data[0] if data else end) - app_start}
+    groups = []
+    # group g runs from the previous commit's end to its own commit's end
+    bounds = data[:1] + commits
+    for lo, hi in zip(bounds, bounds[1:]):
+        nxt = min([s for s in data if s >= lo] + [hi])
+        g = dict.fromkeys(("plan_build_s", "kernel_write_s",
+                           "errors_write_s", "lineage_s", "commit_s",
+                           "other_s", "driver_gap_s", "overlap_s"), 0.0)
+        g["plan_build_s"] = nxt - lo
+        cuts = sorted({nxt, hi} | {x for s, e, _ in spans
+                                   for x in (s, e) if nxt < x < hi})
+        for a, b in zip(cuts, cuts[1:]):
+            live = [t for s, e, t in spans if s <= a and e >= b]
+            if not live:
+                g["driver_gap_s"] += b - a
+            if len(live) > 1:
+                g["overlap_s"] += b - a
+            for t in live:
+                g[_SLICE.get(t, "other_s")] += (b - a) / len(live)
+        groups.append({k: round(v, 3) for k, v in g.items()})
+    out["groups"] = groups
+    out["teardown_s"] = end - (commits[-1] if groups else
+                               app_start + out["setup_s"])
+    out["sum_s"] = (out["launch_s"] + out["setup_s"] + out["teardown_s"]
+                    + sum(v for g in groups for k, v in g.items()
+                          if k != "overlap_s"))
+    return {k: (round(v, 3) if isinstance(v, float) else v)
+            for k, v in out.items()}
 
 
 def main() -> None:
@@ -104,19 +191,30 @@ def main() -> None:
         finally:
             spark.stop()
 
-        runs, launches, n_docs = [], [], 0
+        runs, launches, splits, n_docs = [], [], [], 0
+        def submit(name, extra):
+            """One job run with its own event log; (wall, report, the
+            run's phase split)."""
+            log_dir = os.path.join(work, "eventlog-" + name)
+            os.makedirs(log_dir)
+            wall, report, start, end = _timed_submit(_submit_cmd(
+                args.cores, confs + [
+                    ("spark.eventLog.enabled", "true"),
+                    ("spark.eventLog.dir", "file://" + log_dir),
+                    ("spark.eventLog.compress", "false"),
+                    ("spark.eventLog.rolling.enabled", "false")],
+                driver_memory, zip_path, pages, os.path.join(work, name),
+                extra), work)
+            return wall, report, phase_split(
+                glob.glob(os.path.join(log_dir, "*"))[0], start, end)
+
+        runs, launches, splits, n_docs = [], [], [], 0
         for i in range(args.runs):
-            out = os.path.join(work, f"out{i}")
-            wall, report = _timed_submit(_submit_cmd(
-                args.cores, confs, driver_memory, zip_path, pages, out, []),
-                work)
+            wall, report, split = submit(f"out{i}", [])
             runs.append(wall)
+            splits.append(split)
             n_docs = report["n_docs"]
-            wall, _ = _timed_submit(_submit_cmd(
-                args.cores, confs, driver_memory, zip_path, pages,
-                os.path.join(work, f"empty{i}"), ["--max-buckets", "0"]),
-                work)
-            launches.append(wall)
+            launches.append(submit(f"empty{i}", ["--max-buckets", "0"])[0])
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -133,6 +231,9 @@ def main() -> None:
         "job_launch_s": round(launch_s, 3),
         "job_docs_per_s": round(n_docs / job_s, 1),
         "job_net_docs_per_s": round(n_docs / max(job_s - launch_s, 1e-9), 1),
+        # the split of the run nearest the median
+        "phases": splits[min(range(len(runs)),
+                             key=lambda i: abs(runs[i] - job_s))],
     }))
 
 
