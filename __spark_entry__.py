@@ -1548,10 +1548,7 @@ ORDER BY doc_id
 def _simhash_pairs(spark, sf):
     """Portable SimHash near-dup pairs — fully native JVM (explode →
     md5-derived 60-bit token hash → per-bit majority groupBy → 15-bit
-    block pigeonhole join), DuckDB-mirrorable bit-for-bit. The FNV-1a
-    pandas-UDF variant (``simhash_near_pairs``) stays as the
-    alternative kernel; this one is both faster (no Python) and
-    oracle-checkable."""
+    block pigeonhole join), DuckDB-mirrorable bit-for-bit."""
     from lexoid_spark.functions.dedup import simhash_near_pairs_portable
 
     docs = _tp(spark, sf, "documents")

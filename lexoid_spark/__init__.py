@@ -11,8 +11,8 @@ Architecture (SURVEY.md §1.3, §7):
   skew handling, lineage, checkpoint/resume) is native DataFrame ops so
   Catalyst plans, prunes and pushes down;
 - input is a Common-Crawl-style ``pages(url, warc_ts, html, text, lang)``
-  table (BASELINE.json::input_hint), columnar at rest (parquet/Iceberg via
-  the TableIO seam), Arrow-columnar in flight.
+  table (BASELINE.json::input_hint), columnar at rest (parquet),
+  Arrow-columnar in flight.
 """
 
 __version__ = "0.1.0"

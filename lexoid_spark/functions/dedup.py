@@ -6,10 +6,8 @@ compare except within tiny LSH buckets:
 - exact:      groupBy(md5(normalized text)) — one shuffle.
 - minhash+LSH: shingle → K minhashes → B bands → groupBy(band, hash)
   bucket-join; only bucket collisions are candidate pairs.
-- simhash:    64-bit signature via vectorized numpy pandas-UDF; near-dup
-  = small Hamming distance, bucketed by 16-bit prefix blocks.
-- n-gram jaccard: exact verify step on candidate pairs (array_intersect
-  / array_union on distinct shingle sets).
+- simhash:    60-bit signature from per-token md5 hashes, all native
+  JVM; near-dup = small Hamming distance, bucketed by 15-bit blocks.
 
 MinHash here is *deterministic and engine-portable*: hash_k(shingle) =
 first 15 hex digits of md5(shingle || ':' || k) as a bigint, so DuckDB
@@ -18,11 +16,8 @@ can mirror it exactly (__spark_entry__ oracles).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lexoid_spark.functions.textstats import tokens
 
@@ -262,103 +257,15 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def jaccard(col_a, col_b) -> Column:
-    """Jaccard similarity of two (distinct-element) array columns."""
-    inter = F.size(F.array_intersect(col_a, col_b))
-    union = F.size(F.array_union(col_a, col_b))
-    return F.when(union > 0, F.round(inter / union, 4)).otherwise(F.lit(0.0))
-
-
-# --- SimHash (vectorized numpy inside a pandas UDF) --------------------------
-
-_FNV_OFFSET = 14695981039346656037
-_FNV_PRIME = 1099511628211
-_MASK64 = (1 << 64) - 1
-
-
-def _fnv1a64(tok: str, _memo={}) -> int:
-    """Deterministic 64-bit FNV-1a; memoized (web text repeats tokens)."""
-    h = _memo.get(tok)
-    if h is None:
-        h = _FNV_OFFSET
-        for ch in tok.encode():
-            h = ((h ^ ch) * _FNV_PRIME) & _MASK64
-        if len(_memo) < 1_000_000:
-            _memo[tok] = h
-    return h
-
-
-def _simhash64_batch(texts: pd.Series) -> pd.Series:
-    out = np.zeros(len(texts), dtype=np.uint64)
-    bit_idx = np.arange(64, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for i, t in enumerate(texts):
-            toks = t.split() if t else []
-            if not toks:
-                continue
-            hs = np.fromiter(
-                (_fnv1a64(tok) for tok in toks), dtype=np.uint64, count=len(toks)
-            )
-            bits = (hs[:, None] >> bit_idx) & np.uint64(1)
-            score = bits.astype(np.int64).sum(axis=0) * 2 - len(toks)
-            sig = np.uint64(0)
-            for b in range(64):
-                if score[b] > 0:
-                    sig |= np.uint64(1) << np.uint64(b)
-            out[i] = sig
-    return pd.Series(out.astype(np.int64))  # two's-complement into long
-
-
-@F.pandas_udf(T.LongType())
-def simhash64_udf(texts: pd.Series) -> pd.Series:
-    return _simhash64_batch(texts)
-
-
-def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str,
-                       max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash: bucket on 4×16-bit blocks (any pair
-    within Hamming distance ≤ 3 of a 64-bit hash shares at least one
-    exact 16-bit block by pigeonhole when distance < 4 blocks)."""
-    sig = df.select(F.col(id_col).alias("id"),
-                    simhash64_udf(F.col(text_col)).alias("sim"))
-    blocks = sig.select(
-        "id", "sim",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("block"),
-                    F.shiftrightunsigned("sim", 16 * b)
-                    .bitwiseAND(F.lit(0xFFFF)).alias("val"),
-                )
-                for b in range(4)
-            ])
-        ).alias("bv"),
-    ).select("id", "sim", F.col("bv.block").alias("block"),
-             F.col("bv.val").alias("val"))
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(b, ["block", "val"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.sim").alias("sim_a"), F.col("b.sim").alias("sim_b"))
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return cand.filter(hamming <= max_hamming).select(
-        "id_a", "id_b", hamming.alias("hamming")
-    )
-
-
-# --- portable SimHash (fully native JVM, DuckDB-mirrorable) -------------------
+# --- SimHash (fully native JVM, DuckDB-mirrorable) ----------------------------
 
 def simhash_signatures_portable(df: DataFrame, id_col: str, text_col: str,
                                 bits: int = 60) -> DataFrame:
     """SimHash signatures with an engine-portable token hash.
 
-    Same algorithm as :func:`simhash_near_pairs` but the per-token hash
-    is the md5-derived 60-bit bigint (``_md5_hash64``) instead of
-    FNV-1a, so DuckDB can mirror it bit-for-bit — and the whole
-    computation is native JVM (no Python at all): explode tokens →
+    The per-token hash is the md5-derived 60-bit bigint
+    (``_md5_hash64``), so DuckDB can mirror it bit-for-bit — and the
+    whole computation is native JVM (no Python at all): explode tokens →
     hash → ONE groupBy with 60 per-bit majority sums (map-side
     combine; shuffles (id, 60 small ints) partials). Empty-token docs
     drop out of the explode and get no signature (they can't be
@@ -395,8 +302,8 @@ def simhash_near_pairs_portable(df: DataFrame, id_col: str, text_col: str,
     """Near-dup pairs by portable SimHash: 4×15-bit block pigeonhole
     bucketing over the 60-bit signature (any pair within Hamming
     distance ≤ 3 shares at least one exact block), then the exact
-    Hamming filter via bit_count(xor). Same scale shape as the FNV
-    variant; every step DuckDB-expressible (the CORRECTNESS oracle)."""
+    Hamming filter via bit_count(xor); every step DuckDB-expressible
+    (the CORRECTNESS oracle)."""
     # both self-join sides derive from the signature frame; pin it so
     # the token explode + 60-sum aggregation runs once per query, not
     # once per side (16 bytes/doc cached vs a second full pass —

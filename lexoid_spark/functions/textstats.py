@@ -63,17 +63,6 @@ def alnum_ratio(col) -> Column:
     return F.when(total > 0, F.round(kept / total, 4)).otherwise(F.lit(0.0))
 
 
-def avg_token_len(col) -> Column:
-    toks = tokens(col)
-    n = F.size(toks)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return F.when(n > 0, F.round(total / n, 4)).otherwise(F.lit(0.0))
-
-
 def quality_score(col) -> Column:
     """Deterministic quality score in [0,1]:
 
@@ -164,38 +153,16 @@ def gopher_quality_flags(col) -> Column:
     )
 
 
-def langid(col) -> Column:
-    """N-gram-free marker-token language heuristic.
-
-    Count marker-token occurrences per language; argmax wins, ties and
-    zero-evidence → 'und'. Deterministic tie-break by the fixed marker
-    order en, de, fr, es, hi (first strictly-greatest wins).
-    """
-    toks = tokens(col)
-
-    def marker_count(marker: str):
-        # NB: the lambda must be unary — a second parameter would make
-        # Spark pass the array index as that argument
-        return F.size(F.filter(toks, lambda t: t == F.lit(marker)))
-
-    counts = {lang: marker_count(m) for lang, m in LANG_MARKERS.items()}
-    best = F.greatest(*counts.values())
-    expr = F.lit("und")
-    # build reversed so earlier langs take precedence on ties
-    for lang in reversed(list(LANG_MARKERS)):
-        expr = F.when(
-            (counts[lang] == best) & (best > 0), F.lit(lang)
-        ).otherwise(expr)
-    return expr
-
-
 def langid_table(df, id_col: str, text_col: str):
-    """Bulk language-ID: same semantics as :func:`langid`, one pass.
+    """Marker-token language ID in one pass: count each language's
+    marker token; argmax wins, ties and zero evidence → 'und', with a
+    deterministic tie-break by the fixed marker order en, de, fr, es,
+    hi (first strictly-greatest wins).
 
-    The scalar form's argmax when-chain references each marker count
-    ~7× and interpreted eval re-runs the tokenizer per reference
-    (~35 splits/row — measured 6.8 s at sf0.1). Here markers are
-    counted in ONE conditional aggregation over exploded tokens
+    A per-row argmax when-chain over array filters references each
+    marker count ~7× and interpreted eval re-runs the tokenizer per
+    reference (~35 splits/row — measured 6.8 s at sf0.1). Here markers
+    are counted in ONE conditional aggregation over exploded tokens
     (shuffle on id only carries 5 ints), then the argmax runs over
     plain int columns. Returns (id, lang_pred).
     """

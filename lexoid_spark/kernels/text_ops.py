@@ -7,7 +7,6 @@ in-batch and so unit tests pin the exact semantics.
 
 Reference parity:
 - ``embed_email_links``  — ``static_parser.py:248-256``
-- ``extract_urls_from_markdown`` — ``utils.py:386-407``
 - ``strip_markdown``     — ``utils.py:632-642`` (HTML-tag step simplified:
   we strip inline tags directly rather than round-tripping through a
   markdown→HTML renderer, which the sandbox lacks)
@@ -18,7 +17,6 @@ from __future__ import annotations
 
 import codecs
 import re
-from typing import List
 
 # UTF-32 BOMs first: BOM_UTF32_LE starts with the UTF-16 LE BOM bytes
 _BOMS = (
@@ -142,28 +140,12 @@ EMAIL_PATTERN = re.compile(
     r"(?<![<\[])(\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}\b)(?![>\]])"
 )
 
-MD_LINK_PATTERN = re.compile(r"\[([^\]]+)\]\((https?://[^\s\)]+)\)")
-BARE_URL_PATTERN = re.compile(r"(?<!\()(https?://[^\s\)]+)")
 HTML_TAG_PATTERN = re.compile(r"<.*?>|&([a-z0-9]+|#[0-9]{1,6}|#x[0-9a-f]{1,6});")
 
 
 def embed_email_links(text: str) -> str:
     """Wrap bare email addresses in angle brackets: a@b.com → <a@b.com>."""
     return EMAIL_PATTERN.sub(lambda m: f"<{m.group(1)}>", text)
-
-
-def extract_urls_from_markdown(content: str) -> List[str]:
-    """Unique URLs from [text](url) links and bare http(s) URLs."""
-    urls = [m.group(2) for m in MD_LINK_PATTERN.finditer(content)]
-    urls.extend(m.group(0) for m in BARE_URL_PATTERN.finditer(content))
-    # preserve first-seen order (deterministic, unlike the reference's set())
-    seen = set()
-    out = []
-    for u in urls:
-        if u not in seen:
-            seen.add(u)
-            out.append(u)
-    return out
 
 
 def strip_markdown(text: str) -> str:

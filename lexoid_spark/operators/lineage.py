@@ -1,9 +1,9 @@
 """Per-partition lineage rows (north_rule D7 / SURVEY.md A10).
 
 A native aggregate over the dispatch kernel's ``docs`` frame (url, raw,
-error, kernel_us, …): one metrics row per physical partition —
-``(partition_id, n_docs, n_bytes, n_errors, wall_ms)`` — or per
-(partition, bucket) in the job. The job collects these few rows to the
+error, kernel_us, bucket, …): one metrics row per (physical partition,
+resume bucket) — ``(partition_id, bucket, n_docs, n_bytes, n_errors,
+wall_ms)``. The job collects these few rows to the
 driver and they ride its one progress commit (``operators/progress.py``
 ``mark_done``), stamped there with ``run_id`` and ``ts``; so a
 1000-executor run leaves an auditable per-partition trail, stragglers
@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lexoid_spark.functions.columns import sql_ident
 from lexoid_spark.operators.progress import read_ledger
 
 LINEAGE_SCHEMA = T.StructType([
@@ -47,18 +46,14 @@ _AGGS = (
 )
 
 
-def lineage_rows(docs: DataFrame, group_col: str | None = None) -> DataFrame:
-    """Aggregate ``docs`` into one ``LINEAGE_SCHEMA`` row per physical
-    partition that holds rows (an empty input yields no row).
-
-    With ``group_col`` (e.g. the resume bucket), one row per
-    (partition, group value) instead, with the group column second:
-    the order ``progress.mark_done`` takes its lineage rows in.
-    """
-    keys = ["partition_id"] + ([sql_ident(group_col)] if group_col else [])
+def lineage_rows(docs: DataFrame) -> DataFrame:
+    """Aggregate ``docs`` into one row per (physical partition, resume
+    ``bucket``) that holds rows (an empty input yields no row): the
+    ``LINEAGE_SCHEMA`` columns with ``bucket`` second, the order
+    ``progress.mark_done`` takes its lineage rows in."""
     return (
         docs.withColumn("partition_id", F.expr("spark_partition_id()"))
-        .groupBy(*map(F.expr, keys))
+        .groupBy("partition_id", "bucket")
         .agg(*map(F.expr, _AGGS))
     )
 

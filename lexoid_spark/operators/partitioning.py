@@ -5,8 +5,7 @@ HTML blobs (FIXTURES.md §1 skew knob). Parquet input splits already
 give ~byte-balanced input, so the one skew rule is
 :func:`split_giant_tail`: shuffle only the straggler tail round-robin
 and leave the bulk on its input splits (the rule DS2, ICDE 2021, argues
-for). :func:`write_bucketed` co-locates url-keyed joins;
-:func:`cluster_by_z` lays a table out in Z-order for two-column pruning.
+for). :func:`z_order_key` is the Morton key an entry query clusters by.
 """
 
 from __future__ import annotations
@@ -64,23 +63,6 @@ def split_giant_tail(df: DataFrame, num_partitions: int,
     return bulk.unionByName(tail)
 
 
-def write_bucketed(df: DataFrame, table: str, key: str = "url",
-                   n_buckets: int = 64, sort: bool = True) -> None:
-    """Persist a table bucketed (and sorted) by ``key`` so every later
-    equi-join/groupBy on that key is shuffle-free (SURVEY.md: co-located
-    joins via bucketing — e.g. the extracted↔golden byte-identity join
-    J4, or repeated url-keyed merges, at 100 TB).
-
-    Uses ``saveAsTable`` — bucketing metadata lives in the session
-    catalog; both sides of a join must be bucketed with the same key
-    and bucket count for the exchange to be elided.
-    """
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.format("parquet").saveAsTable(table)
-
-
 # ---------------------------------------------------------------------------
 # Z-order clustering (multi-dimensional data layout)
 # ---------------------------------------------------------------------------
@@ -105,17 +87,3 @@ def z_order_key(col_a, col_b, bits: int = 16):
             2 * i,
         )
     return z
-
-
-def cluster_by_z(df: DataFrame, col_a: str, col_b: str,
-                 num_partitions: int, bits: int = 16) -> DataFrame:
-    """Lay the frame out in Z-order: range-partition + sort within
-    partitions on the Morton key (one shuffle — the same cost as any
-    re-layout — after which BOTH dimensions' file min/max stats are
-    selective)."""
-    keyed = df.withColumn("_z", z_order_key(col_a, col_b, bits))
-    return (
-        keyed.repartitionByRange(num_partitions, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )

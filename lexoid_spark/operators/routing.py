@@ -154,21 +154,6 @@ def low_yield_split(extracted: DataFrame,
     return {"kept": ok, "needs_review": low}
 
 
-def filter_segment_pages(df: DataFrame, page_nums: list[int],
-                         segments_col: str = "segments") -> DataFrame:
-    """S11: the reference's ``page_nums`` sub-document selection
-    (``utils.py:46-57`` create_sub_pdf) — as an array filter on the
-    segments column, no re-parse."""
-    wanted = F.array([F.lit(p) for p in sorted(set(page_nums))])
-    return df.withColumn(
-        segments_col,
-        F.filter(
-            F.col(segments_col),
-            lambda s: F.array_contains(wanted, s.getField("page")),
-        ),
-    )
-
-
 def quarantine(df: DataFrame, stage: str, run_id: str,
                error_col: str = "error") -> DataFrame:
     """Project failed rows into the errors-table schema (FIXTURES.md §4).

@@ -158,8 +158,7 @@ def run_extract_job(
                 ).parquet(os.path.join(output_dir, "extracted"))
                 # the cache is full now: the errors write (on a second
                 # driver thread) and the lineage aggregate both read it
-                lineage = lineage_rows(with_bucket(docs, n_buckets),
-                                       group_col="bucket")
+                lineage = lineage_rows(with_bucket(docs, n_buckets))
                 join_errors = _in_background(
                     lambda: err.write.mode("overwrite").options(**dyn)
                     .partitionBy("bucket")

@@ -2,25 +2,18 @@
 
 The reference has no streaming (SURVEY.md §2.10); batch-side exact
 dedup lives in ``functions/dedup.py``. This is the continuous-ingest
-variant a training-data pipeline runs on the landing stream, in two
-complementary shapes:
+variant a training-data pipeline runs on the landing stream.
 
-1. ``dedup_stream`` — exact-once-ever dedup with the SINK as the state
-   store: each microbatch is deduped batch-locally (groupBy fingerprint,
-   min-struct keeper — deterministic under replay) and then anti-joined
-   against the fingerprints already written by PREVIOUS batches. No
-   Spark state store, so state never sits in executor memory: the
-   "seen" set is a column-pruned parquet scan of prior output (reads
-   ONE string column; at 10^12 docs this is the same fingerprint-join
-   shape as the batch keeper). Exactly-once via per-batch overwrite
-   directories — a replayed batch overwrites itself, and its own
-   directory is excluded from the seen-scan so replay is idempotent.
-
-2. ``dedup_within_watermark`` — bounded-state pure-streaming variant
-   via ``dropDuplicatesWithinWatermark``: duplicates arriving within
-   the event-time watermark are dropped, state expires with the
-   watermark. The right trade when recrawl duplicates cluster in time
-   (same-dump fetches) and unbounded history isn't worth the scan.
+``dedup_stream`` is exact-once-ever dedup with the SINK as the state
+store: each microbatch is deduped batch-locally (groupBy fingerprint,
+min-struct keeper — deterministic under replay) and then anti-joined
+against the fingerprints already written by PREVIOUS batches. No Spark
+state store, so state never sits in executor memory: the "seen" set is
+a column-pruned parquet scan of prior output (reads ONE string column;
+at 10^12 docs this is the same fingerprint-join shape as the batch
+keeper). Exactly-once via per-batch overwrite directories — a replayed
+batch overwrites itself, and its own directory is excluded from the
+seen-scan so replay is idempotent.
 """
 
 from __future__ import annotations
@@ -89,24 +82,6 @@ def dedup_stream(
         q.awaitTermination()
         return q
     return writer.trigger(processingTime="30 seconds").start()
-
-
-def dedup_within_watermark(
-    stream_df: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "warc_ts",
-    delay: str = "2 hours",
-) -> DataFrame:
-    """Bounded-state streaming dedup: drop rows whose fingerprint was
-    already seen within the event-time watermark. State expires as the
-    watermark advances — memory is bounded by the duplicate arrival
-    window, not corpus size."""
-    return (
-        stream_df.withColumn("_fp", _fingerprint(F.col(text_col)))
-        .withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(["_fp"])
-        .drop("_fp")
-    )
 
 
 def read_deduped(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -94,34 +94,3 @@ def test_z_order_key_matches_reference_interleave(spark):
     for r in rows:
         assert r["z"] == ref(r["a"], r["b"])
 
-
-def test_cluster_by_z_improves_both_dimension_spans(spark):
-    """After Z-order layout, per-partition min/max spans shrink in
-    BOTH dimensions vs a one-dimension sort (the point of Morton
-    keys: neither dimension's statistics degenerate)."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from lexoid_spark.operators.partitioning import cluster_by_z
-
-    rng = random.Random(7)
-    rows = [(i, rng.randrange(4096), rng.randrange(4096))
-            for i in range(4000)]
-    df = spark.createDataFrame(rows, "id long, a long, b long")
-
-    def spans(frame, col):
-        stats = (
-            frame.withColumn("p", F.spark_partition_id())
-            .groupBy("p").agg((F.max(col) - F.min(col)).alias("s"))
-            .collect()
-        )
-        return sum(r["s"] for r in stats) / len(stats)
-
-    z = cluster_by_z(df, "a", "b", num_partitions=16, bits=12)
-    one_dim = df.repartitionByRange(16, "a")
-    # a-sorted layout: 'a' spans are tiny but 'b' spans are the full
-    # domain; z-order keeps BOTH bounded well below the domain
-    assert spans(z, "a") < 4096 * 0.45
-    assert spans(z, "b") < 4096 * 0.45
-    assert spans(one_dim, "b") > 4096 * 0.8

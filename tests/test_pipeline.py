@@ -141,7 +141,7 @@ def test_kernel_us_in_band(spark):
             key = (r["pid"], r["bucket"])
             want[key] = want.get(key, 0) + r["kernel_us"]
         got = {(r["partition_id"], r["bucket"]): r["wall_ms"]
-               for r in lineage_rows(docs, group_col="bucket").collect()}
+               for r in lineage_rows(docs).collect()}
         assert got == {k: us // 1000 for k, us in want.items()}
     finally:
         docs.unpersist()

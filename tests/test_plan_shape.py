@@ -77,36 +77,6 @@ def test_extract_default_plan_is_one_dispatch(spark, bench_pages):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_bucketed_join_elides_shuffle(spark, tmp_path_factory):
-    """J4 at scale: two url-bucketed tables equi-join with no Exchange."""
-    from lexoid_spark.corpus.gen import pages_df
-    from lexoid_spark.operators.partitioning import write_bucketed
-    from lexoid_spark.plans.extract import extract
-
-    pages = pages_df(spark, 30)
-    ext = extract(pages, repartition=False)["extracted"].select("url", "raw")
-    golden = ext.select("url", F.col("raw").alias("golden_raw"))
-    write_bucketed(ext, "t_extracted", key="url", n_buckets=4)
-    write_bucketed(golden, "t_golden", key="url", n_buckets=4)
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # at test scale Spark would broadcast; disable it to observe
-        # the strategy 100 TB tables would get (sort-merge)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = spark.table("t_extracted")
-        b = spark.table("t_golden")
-        joined = a.join(b, "url").filter(
-            F.col("raw") != F.col("golden_raw"))
-        plan = _formatted(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # bucketing co-locates both sides
-        assert joined.count() == 0  # byte identity, while we're here
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS t_extracted")
-        spark.sql("DROP TABLE IF EXISTS t_golden")
-
-
 def test_dedup_plans_never_cartesian(spark):
     """LSH, portable SimHash, and IVF near-dup must stay bucket-local
     joins — a CartesianProduct anywhere is the O(N^2) scale-killer."""
@@ -514,7 +484,7 @@ def test_job_control_plane_is_jvm_only(spark, tmp_path):
         F.when(i % 5 == 0, F.lit("E: bad")).alias("error"),
         (i * 700).alias("kernel_us"),
     ), 4)
-    lineage = lineage_rows(docs, group_col="bucket")
+    lineage = lineage_rows(docs)
     rows, _, lineage_plans = _traced(spark, "lineage", lineage.collect)
     counts, _, commit_plans = _traced(spark, "commit", lambda: mark_done(
         spark, progress_dir, "r2", [0, 1, 2, 3],

@@ -88,6 +88,28 @@ def test_rerun_completed_job_is_noop(spark, pages_path, tmp_path):
     assert prog.count() == 4
 
 
+def test_resume_with_uri_output(spark, pages_path, tmp_path):
+    """An output given as a URI resumes like a plain path: the ledger
+    is looked up through the file system Spark reads, so the relaunch
+    skips the committed buckets and no bucket's lineage counts twice."""
+    out = (tmp_path / "out_uri").as_uri()
+    progress = out + "/progress"
+    kw = dict(run_id="r1", n_buckets=6, group_size=2)
+
+    r1 = run_extract_job(spark, pages_path, out, max_buckets=2, **kw)
+    assert r1.buckets_skipped == 0 and len(r1.buckets_done) == 2
+    r2 = run_extract_job(spark, pages_path, out, **kw)
+    assert r2.buckets_skipped == 2
+    assert set(r2.buckets_done).isdisjoint(r1.buckets_done)
+    r3 = run_extract_job(spark, pages_path, out, **kw)
+    assert r3.buckets_done == [] and r3.buckets_skipped == 6
+
+    assert read_progress(spark, progress).count() == 6
+    lin = read_lineage(spark, progress)
+    assert lin.agg(F.sum("n_docs")).collect()[0][0] == r1.n_docs + r2.n_docs
+    assert read_extracted(spark, out).count() == r1.n_docs + r2.n_docs
+
+
 def test_lineage_rows_written(spark, pages_path, tmp_path):
     out = str(tmp_path / "out3")
     res = run_extract_job(spark, pages_path, out, run_id="r1", n_buckets=4)

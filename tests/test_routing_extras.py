@@ -1,11 +1,6 @@
-"""P4 low-yield split and S11 page-subset operators."""
+"""P4 low-yield split operator."""
 
-from pyspark.sql import functions as F
-
-from lexoid_spark.operators.routing import (
-    filter_segment_pages,
-    low_yield_split,
-)
+from lexoid_spark.operators.routing import low_yield_split
 
 
 def test_low_yield_split_partitions_all_rows(spark):
@@ -19,19 +14,3 @@ def test_low_yield_split_partitions_all_rows(spark):
     assert kept == [1]
     assert sorted(low) == [2, 3]  # null raw is low-yield, not dropped
 
-
-def test_filter_segment_pages(spark):
-    from lexoid_spark.corpus.gen import pages_df
-    from lexoid_spark.plans.extract import extract
-
-    pages = pages_df(spark, 40)
-    ext = extract(pages, repartition=False)["extracted"]
-    multi = ext.filter(F.size("segments") >= 3).filter(
-        F.col("url").contains("pdf_multipage")
-    )
-    assert multi.count() >= 1
-    sub = filter_segment_pages(multi, [1, 2])
-    for r in sub.collect():
-        pages_left = [s["page"] for s in r["segments"]]
-        assert set(pages_left) <= {1, 2}
-        assert pages_left  # pages 1..2 exist in a multipage doc

@@ -2,8 +2,6 @@
 
 Each test pins a behavior that is invisible at sandbox scale but fatal
 at the 10^12-row design point:
-  * TableIO writes execute the input plan exactly ONCE (a count()+write
-    pair re-runs every extraction kernel);
   * the crawl frontier is NOT broadcast once it exceeds the threshold
     (forced broadcast of a corpus-sized frontier = driver OOM);
   * crawl depth=0 returns an empty edge table instead of raising;
@@ -18,28 +16,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_table_io_write_executes_plan_once(spark, tmp_path):
-    from lexoid_spark.sources.table_io import TableIO
-
-    acc = spark.sparkContext.accumulator(0)
-
-    def bump(it):
-        for b in it:
-            acc.add(len(b))
-            yield b
-
-    df = spark.range(100).select(F.col("id").cast("long").alias("id"))
-    df = df.mapInPandas(bump, "id long")
-
-    io = TableIO(spark, str(tmp_path))
-    io.write(df, "t1", mode="overwrite")
-
-    assert acc.value == 100  # count() + write would give 200
-    snaps = io.snapshots("t1")
-    assert len(snaps) == 1 and snaps[0]["rows"] == 100
-    assert io.read("t1").count() == 100
 
 
 def test_crawl_large_frontier_not_broadcast(spark):

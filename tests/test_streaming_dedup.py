@@ -1,16 +1,11 @@
 """Streaming dedup-at-ingest (streaming/dedup.py): exact-once-ever
-dedup with the sink as the state store, and the bounded-state
-watermark variant."""
+dedup with the sink as the state store."""
 
 import datetime as dt
 
 from pyspark.sql import functions as F
 
-from lexoid_spark.streaming.dedup import (
-    dedup_stream,
-    dedup_within_watermark,
-    read_deduped,
-)
+from lexoid_spark.streaming.dedup import dedup_stream, read_deduped
 
 SCHEMA = ("url string, warc_ts timestamp, html binary, text string, "
           "lang string")
@@ -53,31 +48,6 @@ def test_dedup_stream_across_batches(spark, tmp_path):
     # drain with no new input → no new rows, no duplicate emission
     dedup_stream(spark, in_dir, out_dir, ckpt, schema=SCHEMA)
     assert read_deduped(spark, out_dir).count() == 3
-
-
-def test_dedup_within_watermark_batch_semantics(spark, tmp_path):
-    """dropDuplicatesWithinWatermark needs a streaming source; run it
-    through a memory-sink microbatch and check in-window dups drop."""
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    _pages(spark, [
-        ("u1", 0, "same doc"), ("u2", 1, "same doc"),
-        ("u3", 2, "other doc"),
-    ]).write.mode("append").parquet(in_dir)
-    stream = spark.readStream.schema(SCHEMA).parquet(in_dir)
-    q = (
-        dedup_within_watermark(stream, delay="4 hours")
-        .writeStream.format("memory").queryName("wm_dedup")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT url FROM wm_dedup").collect()
-    urls = {r["url"] for r in got}
-    assert "u3" in urls
-    assert len(urls & {"u1", "u2"}) == 1  # one of the dup pair survives
 
 
 def test_quality_classifier_is_streaming_safe(spark, tmp_path):

@@ -1,4 +1,5 @@
-"""phrase_merges: BPE-style corpus merge training (word level)."""
+"""BPE-style tokenizing: phrase_merges corpus merge training (word
+level) and the bpe_token_count pretokenizer column."""
 
 
 class TestPhraseMerges:
@@ -144,3 +145,16 @@ class TestPhraseMergesSampled:
         assert [m[:2] for m in out.merges] == [("a", "b"), ("a_b", "c")]
         assert got[0] == "a_b_c"
         assert got[1] == "z a_b_c"   # stage-2 merge applied on top of 1
+
+
+def test_bpe_token_count_column(spark):
+    from pyspark.sql import functions as F
+
+    from lexoid_spark.functions.textstats import bpe_token_count
+
+    df = spark.createDataFrame(
+        [("Hello, world 42!",), ("",), ("one-two",)], "t string")
+    got = [r["n"] for r in
+           df.select(bpe_token_count(F.col("t")).alias("n")).collect()]
+    # "Hello" "," " world" " 42" "!" → 5 ; "" → 0 ; "one" "-" "two" → 3
+    assert got == [5, 0, 3]
